@@ -18,12 +18,14 @@ the subset needed for a correct single-cluster lakehouse table:
   (``schemaString`` is the Spark StructType JSON, exactly what
   delta-spark writes) / ``add`` (with ``partitionValues``, ``size`` and a
   ``stats`` JSON carrying ``numRecords``) / ``remove`` / ``commitInfo``.
-- **Snapshot reconstruction (log replay) as a Spark job**: commit files
-  are read with an explicit action schema (never inferred), versions come
-  from the file names, and the live file set is last-writer-wins per path
-  (``max_by`` over version) — an add survives unless a later remove
-  covers it. The driver only ever collects the live FILE LIST, which is
-  the same metadata any parquet FileIndex needs to plan the scan.
+- **Snapshot reconstruction (log replay) on the driver**: checkpoint
+  parts are decoded column by column and commit JSONs line by line, both
+  against an explicit action schema (never inferred); versions come from
+  the file names, and the live file set is last-writer-wins per path —
+  an add survives unless a later remove covers it. Replay runs on the
+  driver because its output is driver-sized anyway: the state's
+  ``files`` is a Python list, the metadata any FileIndex needs to plan
+  the scan, so no Spark job is issued.
 - **Parquet checkpoints + ``_last_checkpoint``** every
   ``CHECKPOINT_INTERVAL`` commits: replay cost is one checkpoint parquet
   plus < INTERVAL JSON files no matter how many commits the table has —
@@ -235,18 +237,13 @@ _REMOVE_T = T.StructType([
     T.StructField("dataChange", T.BooleanType()),
     T.StructField("deletionVector", _DV_T),
 ])
-_COMMITINFO_T = T.StructType([
-    T.StructField("timestamp", T.LongType()),
-    T.StructField("operation", T.StringType()),
-    T.StructField("operationParameters", T.MapType(T.StringType(), T.StringType())),
-])
 _TXN_T = T.StructType([
     T.StructField("appId", T.StringType()),
     T.StructField("version", T.LongType()),
     T.StructField("lastUpdated", T.LongType()),
 ])
 # Checkpoints carry table STATE (incl. txn watermarks, no commitInfo, per
-# spec); commits may carry all six. unionByName reconciles the two.
+# spec); replay reads these five actions from checkpoints and commits alike.
 STATE_SCHEMA = T.StructType([
     T.StructField("protocol", _PROTOCOL_T),
     T.StructField("metaData", _METADATA_T),
@@ -254,9 +251,6 @@ STATE_SCHEMA = T.StructType([
     T.StructField("remove", _REMOVE_T),
     T.StructField("txn", _TXN_T),
 ])
-ACTION_SCHEMA = T.StructType(
-    list(STATE_SCHEMA.fields) + [T.StructField("commitInfo", _COMMITINFO_T)]
-)
 
 
 # --------------------------------------------------------------------------
@@ -417,27 +411,35 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
-def _peek_meta(spark: SparkSession, table: str, version: int) -> dict | None:
-    """Newest retained metaData action at or below `version`, driver-side:
-    scan commit JSONs newest-first (a metaData action can appear in ANY
-    commit — overwrite-with-new-schema writes one, so v0 alone is stale
-    after schema evolution). Falls back to a checkpoint replay when every
-    retained JSON predates the checkpoint. The scan is metadata-sized:
-    commit files are small and the retained tail is GC-bounded."""
+def _load_commit_actions(table: str, version: int) -> list[dict]:
+    """The actions of commit `version`, in log order — the one commit
+    reader every log consumer goes through."""
+    with open(_version_file(table, version)) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def _peek_meta(table: str, version: int | None = None) -> dict | None:
+    """Newest metaData action at or below `version` (latest if None),
+    without a SparkSession or a full replay: the retained commit JSONs
+    newest-first (a metaData action can appear in ANY commit —
+    overwrite-with-new-schema writes one, so v0 alone is stale after
+    schema evolution), else the metaData column of the newest checkpoint
+    at or below it. None when neither holds one."""
     for v in sorted(_list_log(table, _VERSION_RE), reverse=True):
-        if v > version:
+        if version is not None and v > version:
             continue
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    return action["metaData"]
-    try:
-        return _snapshot_state(spark, table, version)["meta"]
-    except DeltaProtocolError:
-        return None
+        for action in _load_commit_actions(table, v):
+            if "metaData" in action:
+                return action["metaData"]
+    ckpts = [
+        c for c in _checkpoint_versions(table)
+        if version is None or c <= version
+    ]
+    if ckpts:
+        for _, meta in _checkpoint_actions(table, max(ckpts), ["metaData"]):
+            if meta.get("schemaString") is not None:
+                return meta
+    return None
 
 
 def _same_shape(a_json: str | None, b_json: str) -> bool:
@@ -750,26 +752,11 @@ def _stage_data_files(
 # snapshot reconstruction (log replay)
 # --------------------------------------------------------------------------
 
-# Driver-side replay size gate (bytes of checkpoint parts + JSON tail).
-# Snapshot state is DRIVER-SIZED by contract — the Spark replay already
-# collect()s the full live-file list, the tombstones and the txn map to the
-# driver — so for a metadata slice this small, reconciling it with Spark
-# jobs only adds 4-5 scheduler round-trips and shuffles per replay (guide
-# §1.2 step 1: the verbs call this once or more per commit). Above the
-# gate (a 100 TB table's checkpoint is GBs of parquet) the distributed
-# replay below takes over unchanged — same reconciliation, same results,
-# pinned by tests/test_deltalog.py::test_driver_and_spark_replay_agree.
-_DRIVER_REPLAY_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_REPLAY_MAX_BYTES", str(8 << 20))
-)
-
-
 def _norm_action(val, dtype):
-    """Normalize one parsed action value against the declared Spark type:
-    drop undeclared fields, materialize missing ones as None, coerce
-    numerics/bools, and turn pyarrow's [(k, v), ...] map encoding into a
-    dict — so driver-parsed actions are indistinguishable from the Spark
-    path's Row.asDict(recursive=True) output."""
+    """Normalize one JSON-parsed action value against the declared Spark
+    type: drop undeclared fields, materialize missing ones as None and
+    coerce numerics/bools — the shape `_arrow_actions` gives checkpoint
+    rows, so an action replays the same from a commit or a checkpoint."""
     if val is None:
         return None
     if isinstance(dtype, T.StructType):
@@ -778,9 +765,7 @@ def _norm_action(val, dtype):
             for f in dtype.fields
         }
     if isinstance(dtype, T.MapType):
-        if isinstance(val, dict):
-            return dict(val)
-        return {k: v for k, v in val}  # pyarrow map -> list of pairs
+        return dict(val)
     if isinstance(dtype, T.ArrayType):
         return [_norm_action(x, dtype.elementType) for x in val]
     if isinstance(dtype, (T.LongType, T.IntegerType)):
@@ -792,72 +777,94 @@ def _norm_action(val, dtype):
     return val
 
 
+def _arrow_actions(arr, dtype) -> list:
+    """Column-wise `_norm_action` for one pyarrow array: a struct becomes
+    dicts zipped from its children's to_pylist() (declared fields only,
+    missing ones None), a map becomes a dict, and an all-null column
+    costs no per-row conversion."""
+    n = len(arr)
+    if arr.null_count == n:
+        return [None] * n
+    if isinstance(dtype, T.StructType):
+        children = dict(zip((f.name for f in arr.type), arr.flatten()))
+        cols = [
+            _arrow_actions(children[f.name], f.dataType)
+            if f.name in children else [None] * n
+            for f in dtype.fields
+        ]
+        rows = [dict(zip(dtype.names, vals)) for vals in zip(*cols)]
+        if arr.null_count:
+            valid = arr.is_valid().to_pylist()
+            rows = [r if ok else None for r, ok in zip(rows, valid)]
+        return rows
+    vals = arr.to_pylist()
+    if isinstance(dtype, T.MapType):
+        return [None if m is None else dict(m) for m in vals]
+    return vals
+
+
+def _checkpoint_actions(table: str, ckpt_v: int, kinds: list[str]):
+    """Yield (action_name, normalized_dict) for the non-null `kinds`
+    columns of checkpoint `ckpt_v`, one part at a time (a multi-part
+    checkpoint bounds the Arrow working set to one part)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for part in _checkpoint_parts(table, ckpt_v):
+        with pq.ParquetFile(part) as pf:
+            cols = [k for k in kinds if k in pf.schema_arrow.names]
+            data = pf.read(columns=cols)
+        for kind in cols:
+            col = data.column(kind)
+            dtype = STATE_SCHEMA[kind].dataType
+            for chunk in col.filter(pc.is_valid(col)).chunks:
+                for act in _arrow_actions(chunk, dtype):
+                    yield kind, act
+
+
 def _iter_log_actions(table: str, ckpt_v: int | None, need: list[int]):
     """Yield (version, action_name, normalized_dict) in ascending version
     order: the checkpoint's state rows first (all tagged with the
-    checkpoint version, exactly like the Spark path's _v literal), then
-    each JSON commit's lines."""
-    kinds = {f.name: f.dataType for f in STATE_SCHEMA.fields}
+    checkpoint version), then each JSON commit's actions."""
     if ckpt_v is not None:
-        import pyarrow.parquet as pq
-
-        for part in _checkpoint_parts(table, ckpt_v):
-            for row in pq.read_table(part).to_pylist():
-                for kind, dtype in kinds.items():
-                    v = row.get(kind)
-                    if v is not None:
-                        yield ckpt_v, kind, _norm_action(v, dtype)
+        for kind, act in _checkpoint_actions(table, ckpt_v, STATE_SCHEMA.names):
+            yield ckpt_v, kind, act
     for ver in need:
-        with open(_version_file(table, ver)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                raw = json.loads(line)
-                for kind, dtype in kinds.items():
-                    v = raw.get(kind)
-                    if v is not None:
-                        yield ver, kind, _norm_action(v, dtype)
-
-
-def _replay_slice_bytes(table: str, ckpt_v: int | None, need: list[int]) -> int:
-    total = 0
-    try:
-        if ckpt_v is not None:
-            for part in _checkpoint_parts(table, ckpt_v):
-                total += os.path.getsize(part)
-        for ver in need:
-            total += os.path.getsize(_version_file(table, ver))
-    except OSError:
-        return _DRIVER_REPLAY_MAX_BYTES + 1  # racing GC: use the Spark path
-    return total
+        for raw in _load_commit_actions(table, ver):
+            for f in STATE_SCHEMA.fields:
+                v = raw.get(f.name)
+                if v is not None:
+                    yield ver, f.name, _norm_action(v, f.dataType)
 
 
 def _replay_driver(table: str, ckpt_v: int | None, need: list[int]) -> dict:
-    """Driver-side log reconciliation — same rules as the Spark path:
-    file identity = path + DV id, last-writer-wins per key, live iff the
-    newest add outranks the newest remove (a same-version add+remove
-    tombstones), newest metaData/protocol win, txns keep the max version
-    per appId."""
+    """Log reconciliation: file identity = path + DV id, last-writer-wins
+    per key, live iff the newest add outranks the newest remove (a
+    same-version add+remove tombstones), newest metaData/protocol win,
+    txns keep the max version per appId. Spec-violating actions — an
+    add/remove without a path, a txn without a version — are skipped."""
     last_add: dict[str, tuple[int, dict]] = {}
     last_rem: dict[str, tuple[int, dict]] = {}
     meta: tuple[int, dict] | None = None
     protocol: tuple[int, dict] | None = None
     txns: dict[str, int] = {}
 
+    # File identity is path + DV id (delta's reconciliation key): a DV
+    # update commits remove(P, oldDV) + add(P, newDV) in ONE version —
+    # distinct keys, so the new incarnation goes live while the old one
+    # tombstones, with no same-version add-vs-remove tie to break.
     def _fkey(d: dict) -> str:
         dv = d.get("deletionVector") or {}
         return f"{d['path']}@@{dv.get('pathOrInlineDv') or ''}"
 
     for ver, kind, act in _iter_log_actions(table, ckpt_v, need):
-        if kind == "add":
+        if kind in ("add", "remove"):
+            if act.get("path") is None:
+                continue
+            last = last_add if kind == "add" else last_rem
             k = _fkey(act)
-            if k not in last_add or ver >= last_add[k][0]:
-                last_add[k] = (ver, act)
-        elif kind == "remove":
-            k = _fkey(act)
-            if k not in last_rem or ver >= last_rem[k][0]:
-                last_rem[k] = (ver, act)
+            if k not in last or ver >= last[k][0]:
+                last[k] = (ver, act)
         elif kind == "metaData":
             if act.get("schemaString") is not None and (
                 meta is None or ver >= meta[0]
@@ -869,11 +876,9 @@ def _replay_driver(table: str, ckpt_v: int | None, need: list[int]) -> dict:
             ):
                 protocol = (ver, act)
         elif kind == "txn":
-            app = act.get("appId")
-            if app is not None:
-                v = int(act.get("version") or 0)
-                if txns.get(app, -(1 << 62)) < v:
-                    txns[app] = v
+            app, v = act.get("appId"), act.get("version")
+            if app is not None and v is not None and txns.get(app, v - 1) < v:
+                txns[app] = v
 
     def _clean(d: dict) -> dict:
         if d.get("deletionVector") is None:
@@ -885,6 +890,9 @@ def _replay_driver(table: str, ckpt_v: int | None, need: list[int]) -> dict:
         for k, (av, add) in last_add.items()
         if k not in last_rem or av > last_rem[k][0]
     ]
+    # Tombstones: file incarnations whose newest action is a remove —
+    # retained in state (and in checkpoints, per spec) so VACUUM can find
+    # the physical files after the removing commits are GC'd.
     tombstones = [
         _clean(rem)
         for k, (rv, rem) in last_rem.items()
@@ -902,7 +910,7 @@ def _replay_driver(table: str, ckpt_v: int | None, need: list[int]) -> dict:
 
 
 def _check_reader_protocol(protocol: dict) -> None:
-    """Reader-version / table-features gate, shared by both replay paths."""
+    """Reader-version / table-features gate."""
     mrv = protocol["minReaderVersion"]
     if mrv == 3:
         # Table features (reader 3): supported iff every declared
@@ -937,13 +945,10 @@ def _snapshot_state(
     gap in the required JSON range means metadata cleanup removed commits
     this read needs — fail loudly.
 
-    Two replay engines, same reconciliation: below
-    _DRIVER_REPLAY_MAX_BYTES the slice is parsed and reconciled on the
-    driver (the state is driver-sized either way — this function has
-    always collect()ed the live-file list), avoiding 4-5 Spark jobs per
-    replay; above it (100 TB tables: multi-GB checkpoints) the
-    distributed Spark reconciliation runs as before. Equivalence is
-    pinned by tests/test_deltalog.py::test_driver_and_spark_replay_agree."""
+    The slice is decoded and reconciled on the driver and issues no Spark
+    job: the state is driver-sized by contract (`files` is a Python list
+    every caller plans from), so a distributed replay would only add
+    scheduler round-trips before the same collect. `spark` is unused."""
     versions = _list_log(table, _VERSION_RE)
     ckpts = _checkpoint_versions(table)
     # `newest` counts incomplete-checkpoint versions too: the table HAS
@@ -969,136 +974,21 @@ def _snapshot_state(
             f"have {have} — versions at or before a checkpoint may be "
             "GC'd; time travel older than the earliest checkpoint is gone"
         )
-    if _replay_slice_bytes(table, ckpt_v, need) <= _DRIVER_REPLAY_MAX_BYTES:
-        st = _replay_driver(table, ckpt_v, need)
-        if st["meta"] is None:
-            raise DeltaProtocolError(f"no metaData action in log of {table}")
-        protocol = st["protocol"] or {
-            "minReaderVersion": 1, "minWriterVersion": 2,
-        }
-        _check_reader_protocol(protocol)
-        meta = st["meta"]
-        return {
-            "txns": st["txns"],
-            "tombstones": st["tombstones"],
-            "protocol": protocol,
-            "version": target,
-            "schema": T.StructType.fromJson(json.loads(meta["schemaString"])),
-            "partition_columns": list(meta["partitionColumns"] or []),
-            "meta": meta,
-            "files": st["files"],
-            "checkpoint_version": ckpt_v,
-            "json_replayed": len(need),
-        }
-    parts: list[DataFrame] = []
-    if ckpt_v is not None:
-        ck = spark.read.schema(STATE_SCHEMA).parquet(
-            *_checkpoint_parts(table, ckpt_v)
-        )
-        parts.append(ck.withColumn("_v", F.lit(ckpt_v).cast("long")))
-    if need:
-        j = spark.read.schema(ACTION_SCHEMA).json(
-            [_version_file(table, v) for v in need]
-        )
-        parts.append(
-            j.withColumn(
-                "_v",
-                F.regexp_extract(
-                    F.input_file_name(), r"(\d{20})\.json", 1
-                ).cast("long"),
-            ).drop("commitInfo")
-        )
-    acts = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-    )
-    # File identity is path + DV id (delta's reconciliation key): a DV
-    # update commits remove(P, oldDV) + add(P, newDV) in ONE version —
-    # distinct keys, so the new incarnation goes live while the old one
-    # tombstones, with no same-version add-vs-remove tie to break.
-    def _key(side: str):
-        return F.concat_ws(
-            "@@",
-            F.col(f"{side}.path"),
-            F.coalesce(
-                F.col(f"{side}.deletionVector.pathOrInlineDv"), F.lit("")
-            ),
-        )
-
-    adds = acts.filter(F.col("add.path").isNotNull()).select(
-        _key("add").alias("fkey"), F.col("_v").alias("av"), "add"
-    )
-    rems = acts.filter(F.col("remove.path").isNotNull()).select(
-        _key("remove").alias("fkey"), F.col("_v").alias("rv"), "remove"
-    )
-    last_add = adds.groupBy("fkey").agg(
-        F.max_by("add", "av").alias("add"), F.max("av").alias("av")
-    )
-    last_rem = rems.groupBy("fkey").agg(
-        F.max_by("remove", "rv").alias("remove"), F.max("rv").alias("rv")
-    )
-    joined = last_add.join(last_rem, "fkey", "full")
-    live = joined.filter(
-        F.col("add").isNotNull()
-        & (F.col("rv").isNull() | (F.col("av") > F.col("rv")))
-    ).select("add")
-
-    def _clean(d: dict) -> dict:
-        if d.get("deletionVector") is None:
-            d.pop("deletionVector", None)
-        return d
-
-    files = [_clean(row["add"].asDict(recursive=True)) for row in live.collect()]
-    # Tombstones: file incarnations whose newest action is a remove —
-    # retained in state (and in checkpoints, per spec) so VACUUM can find
-    # the physical files after the removing commits are GC'd.
-    tombstones = [
-        _clean(row["remove"].asDict(recursive=True))
-        for row in joined.filter(
-            F.col("remove").isNotNull()
-            & (F.col("av").isNull() | (F.col("rv") >= F.col("av")))
-        ).select("remove").collect()
-    ]
-    meta_rows = (
-        acts.filter(F.col("metaData.schemaString").isNotNull())
-        .orderBy(F.col("_v").desc())
-        .select("metaData")
-        .limit(1)
-        .collect()
-    )
-    if not meta_rows:
+    st = _replay_driver(table, ckpt_v, need)
+    meta = st["meta"]
+    if meta is None:
         raise DeltaProtocolError(f"no metaData action in log of {table}")
-    meta = meta_rows[0]["metaData"]
-    proto_rows = (
-        acts.filter(F.col("protocol.minReaderVersion").isNotNull())
-        .orderBy(F.col("_v").desc())
-        .select("protocol")
-        .limit(1)
-        .collect()
-    )
-    protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
-    if proto_rows:
-        protocol = {
-            k: v
-            for k, v in proto_rows[0]["protocol"].asDict().items()
-            if v is not None
-        }
-        _check_reader_protocol(protocol)
-    txns = {
-        r["appId"]: r["v"]
-        for r in acts.filter(F.col("txn.appId").isNotNull())
-        .groupBy(F.col("txn.appId").alias("appId"))
-        .agg(F.max("txn.version").alias("v"))
-        .collect()
-    }
+    protocol = st["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
+    _check_reader_protocol(protocol)
     return {
-        "txns": txns,
-        "tombstones": tombstones,
+        "txns": st["txns"],
+        "tombstones": st["tombstones"],
         "protocol": protocol,
         "version": target,
         "schema": T.StructType.fromJson(json.loads(meta["schemaString"])),
         "partition_columns": list(meta["partitionColumns"] or []),
-        "meta": meta.asDict(recursive=True),
-        "files": files,
+        "meta": meta,
+        "files": st["files"],
         "checkpoint_version": ckpt_v,
         "json_replayed": len(need),
     }
@@ -1970,17 +1860,16 @@ def version_at_timestamp(table: str, ts_ms: int) -> int:
     stamps: list[tuple[int, int]] = []
     for v in _list_log(table, _VERSION_RE):
         vf = _version_file(table, v)
-        ts = None
-        with open(vf) as fh:
-            # Scan EVERY action line: a foreign writer may put commitInfo
-            # anywhere in the file, or omit it entirely.
-            for line in fh:
-                if not line.strip():
-                    continue
-                ci = json.loads(line).get("commitInfo")
-                if ci and ci.get("timestamp") is not None:
-                    ts = ci["timestamp"]
-                    break
+        # Scan EVERY action: a foreign writer may put commitInfo anywhere
+        # in the file, or omit it entirely.
+        ts = next(
+            (
+                a["commitInfo"]["timestamp"]
+                for a in _load_commit_actions(table, v)
+                if (a.get("commitInfo") or {}).get("timestamp") is not None
+            ),
+            None,
+        )
         if ts is None:
             # Delta's fallback for undated commits: the log file's own
             # modification time.
@@ -2069,14 +1958,13 @@ def delta_history(spark: SparkSession, table: str) -> DataFrame:
     rows = []
     for v in _list_log(table, _VERSION_RE):
         vf = _version_file(table, v)
-        ci = None
-        with open(vf) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                ci = json.loads(line).get("commitInfo")
-                if ci is not None:
-                    break
+        ci = next(
+            (
+                a["commitInfo"] for a in _load_commit_actions(table, v)
+                if a.get("commitInfo") is not None
+            ),
+            None,
+        )
         rows.append({
             "version": v,
             "timestamp": (ci or {}).get("timestamp")
@@ -2408,7 +2296,7 @@ def delta_write(
         # inherits the table's committed partitionColumns — a sink (e.g.
         # delta_stream_sink) appending to a partitioned table keeps the
         # layout without having to know it.
-        meta = _peek_meta(spark, table, v - 1)
+        meta = _peek_meta(table, v - 1)
         df = _complete_generated(df, meta)
         _enforce_constraints(df, meta)
         write_meta = meta
@@ -2469,11 +2357,6 @@ def _occ_retry(op: str, attempt, max_retries: int) -> int:
     raise DeltaConcurrentCommit(
         f"{op} lost the commit race {max_retries + 1} times"
     )
-
-
-def _load_commit_actions(table: str, version: int) -> list[dict]:
-    with open(_version_file(table, version)) as fh:
-        return [json.loads(line) for line in fh if line.strip()]
 
 
 def _conflicts_with(profile: dict, winner_actions: list[dict]) -> bool:
@@ -3569,39 +3452,35 @@ def delta_changes(
 
     before = None
     if from_version >= 0:
-        before = _peek_meta(spark, table, from_version)
+        before = _peek_meta(table, from_version)
     current_json = before["schemaString"] if before else None
     current_parts = _phys_parts(before) if before else None
     for v in need:
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                meta = json.loads(line).get("metaData")
-                if meta and meta.get("schemaString"):
-                    parts_v = _phys_parts(meta)
-                    serveable = (
-                        current_json is None
-                        or _stream_serveable_schema_change(
-                            current_json, meta["schemaString"], mapped=mapped
-                        )
+        for action in _load_commit_actions(table, v):
+            meta = action.get("metaData")
+            if meta and meta.get("schemaString"):
+                parts_v = _phys_parts(meta)
+                serveable = (
+                    current_json is None
+                    or _stream_serveable_schema_change(
+                        current_json, meta["schemaString"], mapped=mapped
                     )
-                    if not serveable or (
-                        current_parts is not None and parts_v != current_parts
-                    ):
-                        raise DeltaProtocolError(
-                            f"change feed range ({from_version}, "
-                            f"{to_version}] crosses a schema or partition "
-                            f"layout change at commit v{v} of {table}; "
-                            "split the feed at that version or use "
-                            "snapshot diffs"
-                        )
-                    current_json = meta["schemaString"]
-                    current_parts = parts_v
+                )
+                if not serveable or (
+                    current_parts is not None and parts_v != current_parts
+                ):
+                    raise DeltaProtocolError(
+                        f"change feed range ({from_version}, "
+                        f"{to_version}] crosses a schema or partition "
+                        f"layout change at commit v{v} of {table}; "
+                        "split the feed at that version or use "
+                        "snapshot diffs"
+                    )
+                current_json = meta["schemaString"]
+                current_parts = parts_v
     out: DataFrame | None = None
     for v in need:
-        with open(_version_file(table, v)) as fh:
-            actions = [json.loads(line) for line in fh if line.strip()]
+        actions = _load_commit_actions(table, v)
         adds_by = {
             a["add"]["path"]: a["add"]
             for a in actions
@@ -4039,7 +3918,7 @@ def delta_append(
             )
             if seen >= txn[1]:
                 return v - 1  # staged files (if any) are vacuum debris
-        meta = _peek_meta(spark, table, v - 1)
+        meta = _peek_meta(table, v - 1)
         # Constraints are checked against the CURRENT head's constraint
         # set — a plain lost race doesn't re-pay the scan, but a
         # concurrent ADD CONSTRAINT must re-validate the staged rows
@@ -4122,28 +4001,13 @@ def delta_stream_sink(table: str, app_id: str):
 # streaming SOURCE: the delta log as a Structured Streaming input
 # --------------------------------------------------------------------------
 
-def _peek_meta_fs(table: str) -> dict:
-    """Newest metaData without a SparkSession (DataSource.schema() runs
-    before any job): scan retained commit JSONs newest-first, else the
-    newest checkpoint's metaData row via a pyarrow read."""
-    for v in sorted(_list_log(table, _VERSION_RE), reverse=True):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if line.strip():
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        return action["metaData"]
-    ckpts = _checkpoint_versions(table)
-    if ckpts:
-        import pyarrow.parquet as pq
-
-        for part in _checkpoint_parts(table, max(ckpts)):
-            rows = pq.read_table(part, columns=["metaData"]).to_pylist()
-            for r in rows:
-                meta = r.get("metaData")
-                if meta and meta.get("schemaString"):
-                    return meta
-    raise DeltaProtocolError(f"no metaData action found in log of {table}")
+def _stream_meta(table: str) -> dict:
+    """`_peek_meta` for the stream sources, which need the schema before
+    any job runs: a log without metaData fails loudly."""
+    meta = _peek_meta(table)
+    if meta is None:
+        raise DeltaProtocolError(f"no metaData action found in log of {table}")
+    return meta
 
 
 try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
@@ -4185,7 +4049,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
         def __init__(self, table: str):
             self._table = table
             try:
-                meta = _peek_meta_fs(table)
+                meta = _stream_meta(table)
                 self._part_inject = DeltaCdfStreamReader._partition_injection(
                     meta
                 )
@@ -4210,31 +4074,27 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
                         "it was GC'd — start a fresh stream from a "
                         "snapshot instead"
                     )
-                with open(vf) as fh:
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        action = json.loads(line)
-                        add = action.get("add")
-                        if add and add.get("dataChange", True):
-                            inject = []
-                            if self._part_inject is not None:
-                                pv = add.get("partitionValues") or {}
-                                inject = [
-                                    (idx, name, ptype, pv.get(phys))
-                                    for idx, name, ptype, phys
-                                    in self._part_inject
-                                ]
-                            parts.append(_DeltaFilePartition(
-                                os.path.join(
-                                    self._table,
-                                    _rel_path(self._table, add["path"]),
-                                ),
-                                part_cols=inject,
-                                table=self._table,
-                                dv=add.get("deletionVector"),
-                                col_map=self._col_map,
-                            ))
+                for action in _load_commit_actions(self._table, v):
+                    add = action.get("add")
+                    if add and add.get("dataChange", True):
+                        inject = []
+                        if self._part_inject is not None:
+                            pv = add.get("partitionValues") or {}
+                            inject = [
+                                (idx, name, ptype, pv.get(phys))
+                                for idx, name, ptype, phys
+                                in self._part_inject
+                            ]
+                        parts.append(_DeltaFilePartition(
+                            os.path.join(
+                                self._table,
+                                _rel_path(self._table, add["path"]),
+                            ),
+                            part_cols=inject,
+                            table=self._table,
+                            dv=add.get("deletionVector"),
+                            col_map=self._col_map,
+                        ))
             return parts
 
         def read(self, partition):  # executor-side
@@ -4258,7 +4118,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
             return "delta_log_stream"
 
         def schema(self):
-            meta = _peek_meta_fs(self.options["path"])
+            meta = _stream_meta(self.options["path"])
             # Validate partition-column injectability HERE, with a named
             # reason — not executor-side with an Arrow type error.
             DeltaCdfStreamReader._partition_injection(meta)
@@ -4445,7 +4305,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
             # giving up fresh-start pacing (where the cursor's initial
             # value is authoritative because no checkpoint exists).
             try:
-                meta = _peek_meta_fs(table)
+                meta = _stream_meta(table)
                 self._schema_json = meta["schemaString"]
                 self._part_inject = self._partition_injection(meta)
                 self._col_map = self._column_map(meta)
@@ -4513,31 +4373,27 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
                     "snapshot instead"
                 )
             out: list[tuple[str, dict]] = []
-            with open(vf) as fh:
-                for line in fh:
-                    if not line.strip():
+            for action in _load_commit_actions(self._table, v):
+                meta = action.get("metaData")
+                if (
+                    meta
+                    and meta.get("schemaString")
+                    and self._schema_json is not None
+                    and not _stream_serveable_schema_change(
+                        self._schema_json, meta["schemaString"],
+                        mapped=self._col_map is not None,
+                    )
+                ):
+                    raise DeltaProtocolError(
+                        f"CDF stream crossed a schema change at "
+                        f"commit v{v} of {self._table}; restart "
+                        "the stream from a snapshot"
+                    )
+                for kind, tag in (("add", "insert"), ("remove", "delete")):
+                    act = action.get(kind)
+                    if not act or not act.get("dataChange", True):
                         continue
-                    action = json.loads(line)
-                    meta = action.get("metaData")
-                    if (
-                        meta
-                        and meta.get("schemaString")
-                        and self._schema_json is not None
-                        and not _stream_serveable_schema_change(
-                            self._schema_json, meta["schemaString"],
-                            mapped=self._col_map is not None,
-                        )
-                    ):
-                        raise DeltaProtocolError(
-                            f"CDF stream crossed a schema change at "
-                            f"commit v{v} of {self._table}; restart "
-                            "the stream from a snapshot"
-                        )
-                    for kind, tag in (("add", "insert"), ("remove", "delete")):
-                        act = action.get(kind)
-                        if not act or not act.get("dataChange", True):
-                            continue
-                        out.append((tag, act))
+                    out.append((tag, act))
             return out
 
         def initialOffset(self) -> dict:
@@ -4675,7 +4531,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
             return "delta_cdf_stream"
 
         def schema(self):
-            meta = _peek_meta_fs(self.options["path"])
+            meta = _stream_meta(self.options["path"])
             # Validate partition-column injectability HERE, with a named
             # reason — not executor-side with an Arrow type error.
             DeltaCdfStreamReader._partition_injection(meta)

@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from opencode_hive_archon_spark.sources import deltalog as dl
 
@@ -1198,7 +1200,7 @@ def test_append_retry_rechecks_concurrently_added_constraint(
     def racing_commit(table, version, actions):
         if not fired["done"] and any("add" in a for a in actions):
             fired["done"] = True
-            meta = dl._peek_meta_fs(table)
+            meta = dl._peek_meta(table)
             conf = dict(meta.get("configuration") or {})
             conf["delta.constraints.pos"] = "val >= 0"
             real_commit(table, version, [
@@ -1962,12 +1964,26 @@ def test_metadata_cleanup_respects_checkpoint_and_retention(spark, tmp_path):
     assert dl.delta_cleanup_metadata(spark, tbl2) == []
 
 
-def test_driver_and_spark_replay_agree(spark, tmp_path, monkeypatch):
-    """The size-gated driver-side replay and the distributed Spark replay
-    must reconcile IDENTICAL state — files (incl. DV identity keys),
-    tombstones, metaData, protocol, txn watermarks, and the replay
-    accounting — across appends, a partitioned layout, a checkpoint base
-    and a copy-on-write delete."""
+def _canon_state(st):
+    """Replay output with list order dropped — what a checkpoint must
+    reproduce of the JSON replay it summarizes."""
+    return {
+        "files": sorted(json.dumps(f, sort_keys=True) for f in st["files"]),
+        "tombstones": sorted(
+            json.dumps(f, sort_keys=True) for f in st["tombstones"]
+        ),
+        "protocol": st["protocol"],
+        "meta": st["meta"],
+        "txns": st["txns"],
+    }
+
+
+def test_checkpoint_replay_matches_json_replay(spark, tmp_path):
+    """A checkpoint decoded column by column must replay to the SAME state
+    as the JSON commits it summarizes — files (incl. DV structs and
+    partitionValues maps), tombstones, metaData, protocol (reader-3
+    feature arrays) and txn watermarks — through a multi-part checkpoint
+    whose parts carry mostly-null action columns, then a single-file one."""
     tbl = str(tmp_path / "t")
     dl.delta_write(
         spark, _df(spark, 0, 40, "a").repartition(2), tbl,
@@ -1979,28 +1995,106 @@ def test_driver_and_spark_replay_agree(spark, tmp_path, monkeypatch):
             tbl, mode="append", txn=("app-replay", i),
         )
     dl.delta_delete(spark, tbl, "k >= 80")
+    dl.delta_delete(spark, tbl, "k = 41", use_dv=True)
+    target = dl.latest_version(tbl)
+    before = dl._snapshot_state(spark, tbl)
+    assert before["checkpoint_version"] is not None  # auto checkpoint base
+    json_only = dl._replay_driver(tbl, None, list(range(target + 1)))
+    assert any(f.get("deletionVector") for f in json_only["files"])
+    assert json_only["tombstones"] and json_only["txns"]
 
-    def canon(st):
-        return {
-            "files": sorted(
-                json.dumps(f, sort_keys=True) for f in st["files"]
-            ),
-            "tombstones": sorted(
-                json.dumps(f, sort_keys=True) for f in st["tombstones"]
-            ),
-            "protocol": st["protocol"],
-            "meta": st["meta"],
-            "txns": st["txns"],
-            "version": st["version"],
-            "checkpoint_version": st["checkpoint_version"],
-            "json_replayed": st["json_replayed"],
-            "schema": st["schema"].json(),
-            "partition_columns": st["partition_columns"],
-        }
+    assert _canon_state(json_only) == _canon_state(before)
+    # Multi-part first; the single-file checkpoint written next takes
+    # precedence at the same version and mixes DV'd and plain adds in one
+    # column.
+    for per_part in (2, dl.CHECKPOINT_PART_ACTIONS):
+        parts = dl.delta_checkpoint(
+            spark, tbl, target, max_actions_per_part=per_part
+        )
+        assert (len(parts) > 1) == (per_part == 2)
+        after = dl._snapshot_state(spark, tbl)
+        assert (after["checkpoint_version"], after["json_replayed"]) == (
+            target, 0,
+        )
+        assert _canon_state(after) == _canon_state(before), per_part
+        for key in ("version", "partition_columns", "schema"):
+            assert after[key] == before[key]
 
-    for v in (None, 0, 3, dl.latest_version(tbl)):
-        drv = dl._snapshot_state(spark, tbl, v)
-        monkeypatch.setattr(dl, "_DRIVER_REPLAY_MAX_BYTES", -1)
-        spk = dl._snapshot_state(spark, tbl, v)
-        monkeypatch.undo()
-        assert canon(drv) == canon(spk), f"replay paths diverge at v={v}"
+
+def test_replay_skips_malformed_actions(spark, tmp_path):
+    """Spec-violating actions are dropped, from a commit JSON and from a
+    checkpoint alike: an add/remove with a null path is no file, and a
+    txn with a null version is no watermark (it neither becomes 0 nor
+    lowers a real one)."""
+    tbl = str(tmp_path / "t")
+    schema = T.StructType([T.StructField("k", T.LongType())]).json()
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {
+            "id": "m", "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema, "partitionColumns": [],
+            "configuration": {}, "createdTime": 1,
+        }},
+        {"add": {"path": "a.parquet", "partitionValues": {}, "size": 10,
+                 "modificationTime": 1, "dataChange": True}},
+        {"add": {"path": None, "partitionValues": {}, "size": 11,
+                 "modificationTime": 1, "dataChange": True}},
+        {"remove": {"path": None, "deletionTimestamp": 2,
+                    "dataChange": True}},
+        {"txn": {"appId": "good", "version": 3}},
+        {"txn": {"appId": "good", "version": None}},
+        {"txn": {"appId": "null-only", "version": None}},
+    ]
+    dl._commit(tbl, 0, actions)
+    # A hand-written checkpoint at v1 holding the same malformed rows.
+    dl._write_state_parquet(
+        spark, tbl, 1, [{k: a[k]} for a in actions for k in a],
+        dl._checkpoint_file(tbl, 1),
+    )
+    golden = {
+        "files": [{
+            "path": "a.parquet", "partitionValues": {}, "size": 10,
+            "modificationTime": 1, "dataChange": True, "stats": None,
+        }],
+        "tombstones": [],
+        "txns": {"good": 3},
+        "meta": {
+            "id": "m", "name": None,
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema, "partitionColumns": [],
+            "configuration": {}, "createdTime": 1,
+        },
+        "protocol": {"minReaderVersion": 1, "minWriterVersion": 2},
+    }
+    for v, ckpt in ((0, None), (1, 1)):
+        st = dl._snapshot_state(spark, tbl, v)
+        assert st["checkpoint_version"] == ckpt
+        assert {k: st[k] for k in golden} == golden, f"v{v}"
+
+
+def test_snapshot_replay_runs_no_spark_job(spark, tmp_path):
+    """Log replay is driver-only: replaying a checkpoint plus a JSON tail
+    issues no Spark job. A one-job control action in the same group
+    proves the status tracker has caught up before the count is read."""
+    tbl = str(tmp_path / "t")
+    dl.delta_write(spark, _df(spark, 0, 10), tbl)
+    for i in range(1, dl.CHECKPOINT_INTERVAL + 1):
+        dl.delta_write(
+            spark, _df(spark, 10 * i, 10 * i + 10), tbl, mode="append",
+        )
+    sc = spark.sparkContext
+    group = f"replay-{os.getpid()}-{tmp_path.name}"
+    sc.setJobGroup(group, "log replay")
+    try:
+        state = dl._snapshot_state(spark, tbl)
+        sc.parallelize([1]).count()  # the control job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert state["checkpoint_version"] is not None
+    assert state["json_replayed"] > 0
+    deadline = time.time() + 30
+    jobs = []
+    while not jobs and time.time() < deadline:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        time.sleep(0.05)
+    assert len(jobs) == 1, f"replay issued Spark jobs: {sorted(jobs)}"

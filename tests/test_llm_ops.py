@@ -101,6 +101,47 @@ def test_embedding_near_dup_symmetric_bound(spark, sf_dir):
         assert r["sim"] >= S.NEAR_DUP_COSINE
 
 
+def test_embedding_near_dup_null_labels_compare_as_sql(spark, tmp_path):
+    """same_label follows SQL equality: a NULL label on either side gives
+    NULL, never True (two NULLs) or False (NULL vs a label). Planted
+    duplicate vectors collide in every LSH table, so each planted pair is
+    always emitted."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    n = 50
+    emb = rng.uniform(-1, 1, size=(n, 16)).astype(np.float32)
+    labels = [int(x) for x in rng.integers(0, 4, size=n)]
+    planted = {  # (vec_a, vec_b) -> (label_a, label_b, same_label)
+        (42, 43): (None, None, None),
+        (44, 45): (None, 7, None),
+        (46, 47): (7, 7, True),
+        (48, 49): (7, 9, False),
+    }
+    for (a, b), (la, lb, _) in planted.items():
+        emb[b] = emb[a]
+        labels[a], labels[b] = la, lb
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(emb.tolist(), pa.list_(pa.float32())),
+            "label": pa.array(labels, pa.int32()),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    rows = {
+        (r["vec_a"], r["vec_b"]): r["same_label"]
+        for r in S.dedup_embedding_cosine(spark, str(tmp_path)).collect()
+    }
+    for (a, b), (_, _, same) in planted.items():
+        assert rows[(a, b)] is same, (a, b)
+    for (a, b), same in rows.items():
+        la, lb = labels[a], labels[b]
+        assert same == (None if la is None or lb is None else la == lb)
+
+
 def test_embedding_dedup_recall_vs_all_pairs(spark, sf_dir):
     """The shipped LSH-pruned pair set must (a) be a strict subset of the
     exhaustive all-pairs result — the verify step readmits nothing — and

@@ -14,6 +14,13 @@ the subset needed for a correct single-cluster lakehouse table:
   (``os.link`` fails with EEXIST), the POSIX equivalent of the spec's
   "atomically create the next version file"; two racing writers get a
   clean ``DeltaConcurrentCommit`` for one of them, never a torn log.
+  Every writer lands through one commit path (``_commit_operation``):
+  the ``commitInfo`` leads the actions and is stamped at publish time,
+  so no commit is dated before a winner it follows; a writer with a
+  conflict profile advances past provably disjoint winners instead of
+  re-reading; the interval checkpoint is written once the commit has
+  landed. Appends share the OCC loop (``_occ_retry``) that
+  DELETE/UPDATE/MERGE use.
 - **Actions** with the spec's field names — ``protocol`` / ``metaData``
   (``schemaString`` is the Spark StructType JSON, exactly what
   delta-spark writes) / ``add`` (with ``partitionValues``, ``size`` and a
@@ -486,12 +493,16 @@ def _stream_serveable_schema_change(
 # data file staging
 # --------------------------------------------------------------------------
 
-def _num_records(path: str) -> int:
-    """Row count from the parquet FOOTER (no data read) — feeds the add
-    action's stats field, the hook real Delta uses for file skipping."""
+def _physical_rows(table: str, f: dict) -> int:
+    """An add's PHYSICAL row count (its deletion vector not applied):
+    the stats' numRecords, else the parquet FOOTER (no data read) —
+    stats are optional in the spec, so a foreign writer may omit them."""
     import pyarrow.parquet as pq
 
-    return pq.ParquetFile(path).metadata.num_rows
+    n = (json.loads(f["stats"]) if f.get("stats") else {}).get("numRecords")
+    if n is None:
+        n = pq.ParquetFile(_abs_path(table, f["path"])).metadata.num_rows
+    return n
 
 
 # Physical parquet types whose footer min/max are exact and totally
@@ -1501,6 +1512,25 @@ def _regenerate(df: DataFrame, meta: dict | None) -> DataFrame:
     return df.select(*cols)
 
 
+def _assign(
+    df: DataFrame, assignments: dict[str, str], state: dict
+) -> DataFrame:
+    """Rows of `df` re-evaluated under `assignments` ({col: sql_expr},
+    cast to the column's type; other columns carried), the UPDATE SET
+    semantics: a SET on a source column cascades into its generated
+    columns (the delta-spark UPDATE behavior), and the result must pass
+    the table's CHECK constraints."""
+    schema = state["schema"]
+    out = _regenerate(df.select(*[
+        F.expr(assignments[c]).cast(schema[c].dataType).alias(c)
+        if c in assignments
+        else F.col(c)
+        for c in schema.fieldNames()
+    ]), state["meta"])
+    _enforce_constraints(out, state["meta"])
+    return out
+
+
 def _enforce_constraints(df: DataFrame, meta: dict | None) -> None:
     """Write-path CHECK enforcement (PROTOCOL.md: `delta.constraints.*`
     keys in metaData configuration): every incoming row must satisfy
@@ -1584,20 +1614,13 @@ def delta_set_property(
             "enable column mapping via delta_enable_column_mapping"
         )
     state = _snapshot_state(spark, table)
-    v = state["version"] + 1
     conf = dict(state["meta"].get("configuration") or {})
     conf[key] = value
-    _commit(table, v, [
-        {"commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "SET TBLPROPERTIES",
-            "operationParameters": {"properties": json.dumps({key: value})},
-        }},
-        {"metaData": {**state["meta"], "configuration": conf}},
-    ])
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+    return _commit_operation(
+        spark, table, state["version"] + 1, "SET TBLPROPERTIES",
+        {"properties": json.dumps({key: value})},
+        [{"metaData": {**state["meta"], "configuration": conf}}],
+    )
 
 
 _INTERVAL_UNIT_MS = {
@@ -1640,20 +1663,13 @@ def delta_add_constraint(
         raise DeltaProtocolError(
             f"cannot add constraint {name!r}: existing rows violate {expr!r}"
         )
-    v = state["version"] + 1
     conf = dict(state["meta"].get("configuration") or {})
     conf[key] = expr
-    _commit(table, v, [
-        {"commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "ADD CONSTRAINT",
-            "operationParameters": {"name": name, "expr": expr},
-        }},
-        {"metaData": {**state["meta"], "configuration": conf}},
-    ])
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+    return _commit_operation(
+        spark, table, state["version"] + 1, "ADD CONSTRAINT",
+        {"name": name, "expr": expr},
+        [{"metaData": {**state["meta"], "configuration": conf}}],
+    )
 
 
 def delta_drop_constraint(spark: SparkSession, table: str, name: str) -> int:
@@ -1664,18 +1680,11 @@ def delta_drop_constraint(spark: SparkSession, table: str, name: str) -> int:
     if key not in conf:
         raise DeltaProtocolError(f"no such constraint: {name!r}")
     del conf[key]
-    v = state["version"] + 1
-    _commit(table, v, [
-        {"commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "DROP CONSTRAINT",
-            "operationParameters": {"name": name},
-        }},
-        {"metaData": {**state["meta"], "configuration": conf}},
-    ])
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+    return _commit_operation(
+        spark, table, state["version"] + 1, "DROP CONSTRAINT",
+        {"name": name},
+        [{"metaData": {**state["meta"], "configuration": conf}}],
+    )
 
 
 def delta_enable_column_mapping(spark: SparkSession, table: str) -> int:
@@ -1706,23 +1715,18 @@ def delta_enable_column_mapping(spark: SparkSession, table: str) -> int:
     conf = dict(state["meta"].get("configuration") or {})
     conf[COLUMN_MAPPING_KEY] = "name"
     conf[COLUMN_MAPPING_MAX_ID] = str(n_fields)
-    v = state["version"] + 1
-    _commit(table, v, [
-        {"commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "SET TBLPROPERTIES",
-            "operationParameters": {COLUMN_MAPPING_KEY: "name"},
-        }},
-        {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
-        {"metaData": {
-            **state["meta"],
-            "schemaString": json.dumps(schema_json),
-            "configuration": conf,
-        }},
-    ])
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+    return _commit_operation(
+        spark, table, state["version"] + 1, "SET TBLPROPERTIES",
+        {COLUMN_MAPPING_KEY: "name"},
+        [
+            {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+            {"metaData": {
+                **state["meta"],
+                "schemaString": json.dumps(schema_json),
+                "configuration": conf,
+            }},
+        ],
+    )
 
 
 def _require_mapping(state: dict, op: str) -> dict:
@@ -1787,22 +1791,15 @@ def delta_rename_column(
         new if c == old else c
         for c in (state["meta"].get("partitionColumns") or [])
     ]
-    v = state["version"] + 1
-    _commit(table, v, [
-        {"commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "RENAME COLUMN",
-            "operationParameters": {"from": old, "to": new},
-        }},
-        {"metaData": {
+    return _commit_operation(
+        spark, table, state["version"] + 1, "RENAME COLUMN",
+        {"from": old, "to": new},
+        [{"metaData": {
             **state["meta"],
             "schemaString": json.dumps(schema_json),
             "partitionColumns": part_cols,
-        }},
-    ])
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+        }}],
+    )
 
 
 def delta_drop_column(spark: SparkSession, table: str, name: str) -> int:
@@ -1836,20 +1833,12 @@ def delta_drop_column(spark: SparkSession, table: str, name: str) -> int:
     schema_json["fields"] = [
         f for f in schema_json["fields"] if f["name"] != name
     ]
-    v = state["version"] + 1
-    _commit(table, v, [
-        {"commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "DROP COLUMN",
-            "operationParameters": {"name": name},
-        }},
-        {"metaData": {
+    return _commit_operation(
+        spark, table, state["version"] + 1, "DROP COLUMN", {"name": name},
+        [{"metaData": {
             **state["meta"], "schemaString": json.dumps(schema_json),
-        }},
-    ])
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+        }}],
+    )
 
 
 def version_at_timestamp(table: str, ts_ms: int) -> int:
@@ -2008,27 +1997,20 @@ def delta_restore(spark: SparkSession, table: str, version: int) -> int:
             f"cannot restore {table} to v{version}: data file(s) "
             f"{missing[:3]} were vacuumed"
         )
-    v = cur["version"] + 1
     # Identity is (path, DV id): restoring across a DV change on the SAME
     # physical file must remove the current incarnation and re-add the
     # target's, or the deleted rows would stay deleted (or resurrect).
     cur_keys = {_dv_key(f) for f in cur["files"]}
     tgt_keys = {_dv_key(f) for f in tgt["files"]}
     ts = _now_ms()
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": ts,
-            "operation": "RESTORE",
-            "operationParameters": {"version": str(version)},
-        }
-    }]
     # Reset metadata whenever the target's differs AT ALL — schema shape,
     # partitioning, AND configuration (CHECK constraints or table
     # properties added after the target must not survive the restore;
     # delta-spark's RestoreTableCommand resets metadata unconditionally,
     # we just skip the no-op action when nothing changed).
-    if cur["meta"] != tgt["meta"]:
-        actions.append({"metaData": tgt["meta"]})
+    actions: list[dict] = (
+        [{"metaData": tgt["meta"]}] if cur["meta"] != tgt["meta"] else []
+    )
     actions.extend(
         {"remove": _remove_action(f, ts, True)}
         for f in cur["files"] if _dv_key(f) not in tgt_keys
@@ -2037,10 +2019,10 @@ def delta_restore(spark: SparkSession, table: str, version: int) -> int:
         {"add": dict(f, dataChange=True)}
         for f in tgt["files"] if _dv_key(f) not in cur_keys
     )
-    _commit(table, v, actions)
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+    return _commit_operation(
+        spark, table, cur["version"] + 1, "RESTORE",
+        {"version": str(version)}, actions,
+    )
 
 
 def delta_clone(
@@ -2069,23 +2051,15 @@ def delta_clone(
             f"clone target already a delta table: {target_table}"
         )
     os.makedirs(target_table, exist_ok=True)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "CLONE",
-            "operationParameters": {
-                "source": os.path.abspath(source_table),
-                "sourceVersion": str(src["version"]),
-            },
-        }
-    }]
-    actions.append({"protocol": src["protocol"]})
-    actions.append({"metaData": dict(
-        src["meta"],
-        id=str(uuid.uuid4()),
-        name=os.path.basename(target_table.rstrip("/")),
-        createdTime=_now_ms(),
-    )})
+    actions: list[dict] = [
+        {"protocol": src["protocol"]},
+        {"metaData": dict(
+            src["meta"],
+            id=str(uuid.uuid4()),
+            name=os.path.basename(target_table.rstrip("/")),
+            createdTime=_now_ms(),
+        )},
+    ]
     for f in src["files"]:
         # dataChange forced TRUE: a source file written by OPTIMIZE
         # carries dataChange:false, but for the CLONE these rows are new
@@ -2117,8 +2091,14 @@ def delta_clone(
                 ),
             )
         actions.append({"add": nf})
-    _commit(target_table, 0, actions)
-    return 0
+    return _commit_operation(
+        spark, target_table, 0, "CLONE",
+        {
+            "source": os.path.abspath(source_table),
+            "sourceVersion": str(src["version"]),
+        },
+        actions,
+    )
 
 
 def delta_count(spark: SparkSession, table: str, version: int | None = None) -> int:
@@ -2128,10 +2108,7 @@ def delta_count(spark: SparkSession, table: str, version: int | None = None) -> 
     state = _snapshot_state(spark, table, version)
     total = 0
     for f in state["files"]:
-        stats = json.loads(f["stats"]) if f["stats"] else {}
-        n = stats.get("numRecords")
-        if n is None:
-            n = _num_records(os.path.join(table, _rel_path(table, f["path"])))
+        n = _physical_rows(table, f)
         dv = f.get("deletionVector")
         if dv:
             # stats keep the PHYSICAL row count (spec); live = physical
@@ -2177,174 +2154,161 @@ def delta_write(
     watermark survives checkpoint truncation (checkpoints carry the
     latest txn per appId, per spec).
 
-    Appends inherit the table's committed partitionColumns when the
-    caller omits partition_by, and reject a mismatch; an overwrite whose
-    schema or partitioning differs writes an updated metaData action in
-    the same commit (schema evolution), so replay always reads the new
-    files with the right schema."""
+    An append to an existing table is `delta_append` (inherit the
+    table's partitionColumns when partition_by is omitted, reject a
+    mismatch, OCC retry); an overwrite whose schema or partitioning
+    differs writes an updated metaData action in the same commit
+    (schema evolution), so replay always reads the new files with the
+    right schema."""
     if mode not in ("append", "overwrite"):
         # Validate BEFORE the v==0 branch: a first commit must not treat
         # 'ignore' / 'errorifexists' / a typo as a normal write.
         raise ValueError(f"unsupported mode: {mode!r}")
-    partition_by_arg = partition_by
-    partition_by = list(partition_by or [])
-    write_meta: dict | None = None
     v = latest_version(table) + 1
     if generated and v > 0:
         raise DeltaProtocolError(
             "generated columns are declared at table creation; "
             f"{table} already exists at v{v - 1}"
         )
-    if txn is not None and v > 0:
-        seen = _snapshot_state(spark, table, v - 1)["txns"].get(txn[0], -1)
-        if seen >= txn[1]:
-            return v - 1  # already committed by a prior attempt
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "WRITE",
-            "operationParameters": {"mode": mode.upper()},
-        }
-    }]
-    if txn is not None:
-        actions.append({"txn": {
-            "appId": txn[0], "version": int(txn[1]),
-            "lastUpdated": _now_ms(),
-        }})
     if v == 0:
-        if generated:
-            # Compute omitted generated columns so the CREATE schema
-            # includes them; provided ones are validated below via the
-            # fused constraint pass.
-            for g, expr in generated.items():
-                if g not in df.columns:
-                    df = df.withColumn(g, F.expr(expr))
-        schema_json_v0 = json.loads(df.schema.json())
-        if generated:
-            for field in schema_json_v0["fields"]:
-                if field["name"] in generated:
-                    field["metadata"] = {
-                        **(field.get("metadata") or {}),
-                        _GENERATION_KEY: generated[field["name"]],
-                    }
-        table_id = hashlib.sha1(
-            (os.path.abspath(table) + df.schema.json()).encode()
-        ).hexdigest()
-        actions.append({"protocol": {
-            "minReaderVersion": 1,
-            # Generated columns are a writer-4 feature: pre-4 writers
-            # could append rows violating the generation invariant.
-            "minWriterVersion": 4 if generated else 2,
-        }})
-        write_meta = {
-            "id": table_id,
-            "name": name or os.path.basename(table.rstrip("/")),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps(schema_json_v0),
-            "partitionColumns": partition_by,
-            "configuration": {},
-            "createdTime": _now_ms(),
-        }
-        actions.append({"metaData": write_meta})
-        if generated:
-            _enforce_constraints(df, write_meta)
-    elif mode == "overwrite":
-        prior = _snapshot_state(spark, table, v - 1)
-        _check_append_only(prior, "overwrite")
-        df = _complete_generated(df, prior["meta"])
-        _enforce_constraints(df, prior["meta"])
-        write_meta = prior["meta"]
-        ts = _now_ms()
-        actions.extend(
-            {"remove": _remove_action(f, ts, True)} for f in prior["files"]
+        return _delta_create(
+            spark, df, table, mode, partition_by, name, txn, generated
         )
-        if partition_by_arg is None:
-            # Caller said nothing about partitioning: keep the table's —
-            # an overwrite should not silently flatten a partitioned
-            # layout. Repartitioning is an explicit partition_by=[...].
-            partition_by = prior["partition_columns"]
-        if not _same_shape(
-            prior["meta"]["schemaString"], df.schema.json()
-        ) or partition_by != prior["partition_columns"]:
-            # Schema evolution (overwriteSchema): the SAME commit that
-            # swaps the file set updates the metaData, so replay reads
-            # the new files with the new schema (v0's metaData alone
-            # would be stale); time travel serves each version under
-            # its own schema. On a COLUMN-MAPPED table (r18, VERDICT
-            # r17 #4) the new schema's fields keep their id/physicalName
-            # when the logical name survives and mint fresh ones
-            # otherwise — old physical names are never reused.
-            schema_json = df.schema.json()
-            meta_update = {
-                **prior["meta"],
-                "schemaString": schema_json,
-                "partitionColumns": partition_by,
-            }
-            if _mapping_enabled(prior["meta"]):
-                new_schema, conf = _evolve_mapping_schema(
-                    json.loads(schema_json), prior["meta"]
-                )
-                meta_update["schemaString"] = json.dumps(new_schema)
-                meta_update["configuration"] = conf
-            actions.append({"metaData": meta_update})
-            # Staging translates logical -> physical under the NEW
-            # metaData (fresh physical names for new columns).
-            write_meta = meta_update
-    elif mode == "append":
-        # Write-path enforcement (the delta append contract): schema or
-        # partitioning drift must fail, not corrupt. Omitted partition_by
-        # inherits the table's committed partitionColumns — a sink (e.g.
-        # delta_stream_sink) appending to a partitioned table keeps the
-        # layout without having to know it.
-        meta = _peek_meta(table, v - 1)
-        df = _complete_generated(df, meta)
-        _enforce_constraints(df, meta)
-        write_meta = meta
-        if meta is not None:
-            if not _same_shape(meta["schemaString"], df.schema.json()):
-                raise DeltaProtocolError(
-                    f"schema enforcement: append schema does not match "
-                    f"table schema at {table} (use mode='overwrite' to "
-                    "replace)"
-                )
-            table_parts = list(meta.get("partitionColumns") or [])
-            if partition_by_arg is not None and partition_by != table_parts:
-                raise DeltaProtocolError(
-                    f"partition enforcement: append partition_by="
-                    f"{partition_by} does not match table "
-                    f"partitionColumns={table_parts} at {table}"
-                )
-            partition_by = table_parts
+    if mode == "append":
+        return delta_append(
+            spark, df, table, partition_by=partition_by, txn=txn
+        )
+    prior = _snapshot_state(spark, table, v - 1)
+    if txn is not None and prior["txns"].get(txn[0], -1) >= txn[1]:
+        return v - 1  # already committed by a prior attempt
+    _check_append_only(prior, "overwrite")
+    df = _complete_generated(df, prior["meta"])
+    _enforce_constraints(df, prior["meta"])
+    write_meta = prior["meta"]
+    actions = _txn_actions(txn)
+    ts = _now_ms()
+    actions.extend(
+        {"remove": _remove_action(f, ts, True)} for f in prior["files"]
+    )
+    # Caller said nothing about partitioning: keep the table's — an
+    # overwrite should not silently flatten a partitioned layout.
+    # Repartitioning is an explicit partition_by=[...].
+    partition_by = (
+        prior["partition_columns"] if partition_by is None
+        else list(partition_by)
+    )
+    if not _same_shape(
+        prior["meta"]["schemaString"], df.schema.json()
+    ) or partition_by != prior["partition_columns"]:
+        # Schema evolution (overwriteSchema): the SAME commit that
+        # swaps the file set updates the metaData, so replay reads
+        # the new files with the new schema (v0's metaData alone
+        # would be stale); time travel serves each version under
+        # its own schema. On a COLUMN-MAPPED table (r18, VERDICT
+        # r17 #4) the new schema's fields keep their id/physicalName
+        # when the logical name survives and mint fresh ones
+        # otherwise — old physical names are never reused.
+        schema_json = df.schema.json()
+        meta_update = {
+            **prior["meta"],
+            "schemaString": schema_json,
+            "partitionColumns": partition_by,
+        }
+        if _mapping_enabled(prior["meta"]):
+            new_schema, conf = _evolve_mapping_schema(
+                json.loads(schema_json), prior["meta"]
+            )
+            meta_update["schemaString"] = json.dumps(new_schema)
+            meta_update["configuration"] = conf
+        actions.append({"metaData": meta_update})
+        # Staging translates logical -> physical under the NEW
+        # metaData (fresh physical names for new columns).
+        write_meta = meta_update
     actions.extend(
         _stage_data_files(df, table, v, partition_by, meta=write_meta)
     )
-    if v > 0 and mode == "append":
-        # Blind append: no read set — the conflict matrix lets it land
-        # at the next free version past any winner that didn't change
-        # metadata/protocol (spec: appends don't conflict with appends,
-        # nor with disjoint rewrites). A conflicting winner (or a txn
-        # race) still surfaces DeltaConcurrentCommit to the caller.
-        return _commit_after_conflict_check(
-            spark, table, v, actions,
-            {"kind": "append", "removed_paths": set()},
-        )
-    _commit(table, v, actions)
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+    return _commit_operation(
+        spark, table, v, "WRITE", {"mode": "OVERWRITE"}, actions
+    )
+
+
+def _txn_actions(txn: tuple[str, int] | None) -> list[dict]:
+    """The spec's transaction-identifier action for `txn=(appId,
+    version)`, or [] without one."""
+    if txn is None:
+        return []
+    return [{"txn": {
+        "appId": txn[0], "version": int(txn[1]), "lastUpdated": _now_ms(),
+    }}]
+
+
+def _delta_create(
+    spark: SparkSession,
+    df: DataFrame,
+    table: str,
+    mode: str,
+    partition_by: list[str] | None,
+    name: str | None = None,
+    txn: tuple[str, int] | None = None,
+    generated: dict[str, str] | None = None,
+) -> int:
+    """Version 0 of a new table (see delta_write): protocol + metaData +
+    the batch's adds in one commit. Losing the creation race raises
+    DeltaConcurrentCommit."""
+    partition_by = list(partition_by or [])
+    generated = generated or {}
+    # Compute omitted generated columns so the CREATE schema includes
+    # them; provided ones are validated below via the fused constraint
+    # pass.
+    for g, expr in generated.items():
+        if g not in df.columns:
+            df = df.withColumn(g, F.expr(expr))
+    schema_json = json.loads(df.schema.json())
+    for field in schema_json["fields"]:
+        if field["name"] in generated:
+            field["metadata"] = {
+                **(field.get("metadata") or {}),
+                _GENERATION_KEY: generated[field["name"]],
+            }
+    table_id = hashlib.sha1(
+        (os.path.abspath(table) + df.schema.json()).encode()
+    ).hexdigest()
+    meta = {
+        "id": table_id,
+        "name": name or os.path.basename(table.rstrip("/")),
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": json.dumps(schema_json),
+        "partitionColumns": partition_by,
+        "configuration": {},
+        "createdTime": _now_ms(),
+    }
+    if generated:
+        _enforce_constraints(df, meta)
+    actions = _txn_actions(txn)
+    actions.append({"protocol": {
+        "minReaderVersion": 1,
+        # Generated columns are a writer-4 feature: pre-4 writers
+        # could append rows violating the generation invariant.
+        "minWriterVersion": 4 if generated else 2,
+    }})
+    actions.append({"metaData": meta})
+    actions.extend(_stage_data_files(df, table, 0, partition_by, meta=meta))
+    return _commit_operation(
+        spark, table, 0, "WRITE", {"mode": mode.upper()}, actions
+    )
 
 
 def _occ_retry(op: str, attempt, max_retries: int) -> int:
-    """Optimistic-concurrency loop for read-modify-write commits (DELETE /
-    UPDATE / MERGE). The CHEAP path runs first: when a lost race's winner
-    is provably non-conflicting under the spec's conflict matrix
-    (`_conflicts_with` — e.g. a blind append whose files can't match this
-    txn's predicate, or a rewrite of disjoint files), the already-staged
-    actions re-commit at the next version without re-reading
-    (`_commit_after_conflict_check` does that inside the attempt). Only
-    a REAL conflict falls back here, re-running the ENTIRE read phase
-    against the new head — the remove set, the rewrite, everything is
-    recomputed, so the retried commit is serializable with whatever won.
+    """Optimistic-concurrency loop for APPEND / DELETE / UPDATE / MERGE.
+    The CHEAP path runs first: when a lost race's winner is provably
+    non-conflicting under the spec's conflict matrix (`_conflicts_with` —
+    e.g. a blind append whose files can't match this txn's predicate, or
+    a rewrite of disjoint files), the already-staged actions re-commit at
+    the next version without re-reading (`_commit_operation` does that
+    inside the attempt). Only a REAL conflict falls back here, re-running
+    the ENTIRE read phase against the new head — the remove set, the
+    rewrite, everything is recomputed, so the retried commit is
+    serializable with whatever won.
     The losing attempt's staged files are never referenced by any
     commit; they age out under the vacuum orphan sweep, whose safety
     window exists precisely so this debris is distinguishable from an
@@ -2423,32 +2387,51 @@ def _conflicts_with(profile: dict, winner_actions: list[dict]) -> bool:
     return True
 
 
-def _commit_after_conflict_check(
+# Versions one commit may advance past non-conflicting winners before
+# it gives up and re-runs its read phase.
+_MAX_ADVANCE = 20
+
+
+def _commit_operation(
     spark: SparkSession,
     table: str,
     version: int,
+    operation: str,
+    parameters: dict,
     actions: list[dict],
-    profile: dict,
-    max_advance: int = 20,
+    profile: dict | None = None,
 ) -> int:
-    """Commit `actions` at `version`, advancing past provably
-    NON-conflicting winners (the staged files stay valid — they carry
-    attempt-unique names) instead of re-running the read phase. A real
-    conflict re-raises DeltaConcurrentCommit for the caller's full
-    retry. Returns the version actually committed."""
+    """The one commit path of every writer: publish a `commitInfo`
+    stamped at publish time, then `actions`, as `version`, and write the
+    interval checkpoint once the commit has landed. Without a conflict
+    `profile` a lost race surfaces DeltaConcurrentCommit. With one, the
+    commit advances past provably NON-conflicting winners
+    (`_conflicts_with`; the staged files stay valid — they carry
+    attempt-unique names) instead of re-running the read phase, and each
+    attempt is re-stamped, so a commit is never dated before a winner it
+    is ordered after. A real conflict re-raises for the caller's
+    `_occ_retry`. Returns the version actually committed."""
     v = version
-    for _ in range(max_advance):
+    for _ in range(_MAX_ADVANCE):
+        info = {"commitInfo": {
+            "timestamp": _now_ms(),
+            "operation": operation,
+            "operationParameters": parameters,
+        }}
         try:
-            _commit(table, v, actions)
-            if (v + 1) % CHECKPOINT_INTERVAL == 0:
-                delta_checkpoint(spark, table, v)
-            return v
+            _commit(table, v, [info, *actions])
         except DeltaConcurrentCommit:
-            if _conflicts_with(profile, _load_commit_actions(table, v)):
+            if profile is None or _conflicts_with(
+                profile, _load_commit_actions(table, v)
+            ):
                 raise
             v += 1
+            continue
+        if (v + 1) % CHECKPOINT_INTERVAL == 0:
+            delta_checkpoint(spark, table, v)
+        return v
     raise DeltaConcurrentCommit(
-        f"commit on {table} advanced {max_advance} versions without "
+        f"commit on {table} advanced {_MAX_ADVANCE} versions without "
         "landing; giving up to re-read"
     )
 
@@ -2475,6 +2458,27 @@ def delta_delete(
     )
 
 
+def _plain_hits(
+    spark: SparkSession, table: str, state: dict, files: list[dict], keep
+) -> list[dict]:
+    """Those of the DV-free `files` that hold at least one row surviving
+    `keep` (DataFrame -> DataFrame), discovered via input_file_name on
+    one bulk scan. Absolute-path matching (not table-relative): a
+    shallow clone's adds point OUTSIDE the table root, where relpath
+    arithmetic would never match and a rewrite would silently miss
+    them."""
+    rows = _read_state(spark, table, dict(state, files=files)).withColumn(
+        "_file", F.input_file_name()
+    )
+    hit_abs = {
+        os.path.abspath(
+            urllib.parse.unquote(urllib.parse.urlparse(r["_file"]).path)
+        )
+        for r in keep(rows).select("_file").distinct().collect()
+    }
+    return [f for f in files if _abs_path(table, f["path"]) in hit_abs]
+
+
 def _find_hit_files(
     spark: SparkSession,
     table: str,
@@ -2493,25 +2497,9 @@ def _find_hit_files(
     dv_cands = [f for f in candidates if f.get("deletionVector")]
     hit_files: list[dict] = []
     if plain_cands:
-        cand_state = dict(state, files=plain_cands)
-        full = _read_state(spark, table, cand_state).withColumn(
-            "_file", F.input_file_name()
-        )
-        # Absolute-path matching (not table-relative): a shallow clone's
-        # adds point OUTSIDE the table root, where relpath arithmetic
-        # would never match and a DELETE would silently miss them.
-        hit_abs = {
-            os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(u).path)
-            )
-            for u in (
-                r["_file"]
-                for r in full.filter(pred).select("_file").distinct().collect()
-            )
-        }
-        hit_files.extend(
-            f for f in plain_cands if _abs_path(table, f["path"]) in hit_abs
-        )
+        hit_files.extend(_plain_hits(
+            spark, table, state, plain_cands, lambda rows: rows.filter(pred)
+        ))
     if dv_cands:
         probe = _scan_with_row_index(spark, table, state, dv_cands)
         hit_abs = {
@@ -2572,39 +2560,16 @@ def _delta_update_attempt(
             "they are recomputed from their expressions"
         )
     pred = F.coalesce(F.expr(predicate), F.lit(False))
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "UPDATE",
-            "operationParameters": {
-                "predicate": predicate,
-                "set": json.dumps(assignments, sort_keys=True),
-            },
-        }
-    }]
+    actions: list[dict] = []
     candidates = prune_files(state, predicate) if state["files"] else []
     hit_files = _find_hit_files(spark, table, state, pred, candidates)
     if hit_files:
-        hit_state = dict(state, files=hit_files)
-        hit_rows = _read_state(spark, table, hit_state)
-        kept = hit_rows.filter(~pred)
-        updated = hit_rows.filter(pred).select(
-            *[
-                F.expr(assignments[c]).cast(
-                    state["schema"][c].dataType
-                ).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in cols
-            ]
+        hit_rows = _read_state(spark, table, dict(state, files=hit_files))
+        # Kept rows satisfy the constraints by induction; re-evaluated
+        # rows are re-checked.
+        rewrite = hit_rows.filter(~pred).unionByName(
+            _assign(hit_rows.filter(pred), assignments, state)
         )
-        # A SET on a source column cascades into its generated columns
-        # (the delta-spark UPDATE behavior); then kept rows satisfy the
-        # constraints by induction while re-evaluated rows are
-        # re-checked.
-        updated = _regenerate(updated, state["meta"])
-        _enforce_constraints(updated, state["meta"])
-        rewrite = kept.unionByName(updated)
         actions.extend(
             _stage_data_files(
                 rewrite, table, v, state["partition_columns"],
@@ -2615,8 +2580,13 @@ def _delta_update_attempt(
         actions.extend(
             {"remove": _remove_action(f, ts, True)} for f in hit_files
         )
-    return _commit_after_conflict_check(
-        spark, table, v, actions,
+    return _commit_operation(
+        spark, table, v, "UPDATE",
+        {
+            "predicate": predicate,
+            "set": json.dumps(assignments, sort_keys=True),
+        },
+        actions,
         {
             "kind": "predicate",
             "predicate": predicate,
@@ -2678,13 +2648,7 @@ def _delta_delete_attempt(
     _check_append_only(state, "DELETE")
     v = state["version"] + 1
     pred = F.coalesce(F.expr(predicate), F.lit(False))
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "DELETE",
-            "operationParameters": {"predicate": predicate},
-        }
-    }]
+    actions: list[dict] = []
     candidates = prune_files(state, predicate) if state["files"] else []
     hit_files: list[dict] = (
         _find_hit_files(spark, table, state, pred, candidates)
@@ -2724,7 +2688,7 @@ def _delta_delete_attempt(
         # never by delete cardinality.
         table_abs = os.path.abspath(table)
         old_desc = {
-            os.path.abspath(os.path.join(table, _rel_path(table, f["path"]))):
+            _abs_path(table, f["path"]):
                 (json.dumps(f["deletionVector"])
                  if f.get("deletionVector") else None)
             for f in candidates
@@ -2764,19 +2728,16 @@ def _delta_delete_attempt(
         # matching row) — same membership the two-pass discovery found.
         hit_files = [
             f for f in candidates
-            if os.path.abspath(
-                os.path.join(table, _rel_path(table, f["path"]))
-            ) in desc_by_file
+            if _abs_path(table, f["path"]) in desc_by_file
         ]
         if hit_files:
             actions.extend(_dv_protocol_actions(state))
         ts = _now_ms()
         for f in hit_files:
-            full_path = os.path.abspath(
-                os.path.join(table, _rel_path(table, f["path"]))
+            new_add = dict(
+                f, dataChange=True,
+                deletionVector=desc_by_file[_abs_path(table, f["path"])],
             )
-            descriptor = desc_by_file[full_path]
-            new_add = dict(f, dataChange=True, deletionVector=descriptor)
             if f.get("stats"):
                 st = json.loads(f["stats"])
                 if "tightBounds" in st:
@@ -2786,8 +2747,8 @@ def _delta_delete_attempt(
                 new_add["stats"] = json.dumps(st)
             actions.append({"add": new_add})
             actions.append({"remove": _remove_action(f, ts, True)})
-    return _commit_after_conflict_check(
-        spark, table, v, actions,
+    return _commit_operation(
+        spark, table, v, "DELETE", {"predicate": predicate}, actions,
         {
             "kind": "predicate",
             "predicate": predicate,
@@ -2953,15 +2914,7 @@ def _delta_merge_attempt(
             "action": not_matched_by_source,
             "condition": by_source_condition,
         })
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "MERGE",
-            "operationParameters": op_params,
-        }
-    }]
-    if meta_action is not None:
-        actions.append(meta_action)
+    actions: list[dict] = [] if meta_action is None else [meta_action]
     target = _read_state(spark, table, state)
     inserts = source.join(target.select(*on), on, "left_anti")
     # MERGE-side data skipping: bound the hit-discovery scan to target
@@ -3010,28 +2963,20 @@ def _delta_merge_attempt(
     # is bounded. The rewrite purges their DVs.
     hit_files = [f for f in candidates if f.get("deletionVector")]
     if plain_cands:
-        cand_state = dict(state, files=plain_cands)
-        with_file = _read_state(spark, table, cand_state).withColumn(
-            "_file", F.input_file_name()
-        )
-        hit_abs = {
-            os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(u).path)
-            )
-            for u in (
-                r["_file"]
-                for r in with_file.join(source.select(*on), on, "left_semi")
-                .select("_file").distinct().collect()
-            )
-        }
-        hit_files.extend(
-            f for f in plain_cands if _abs_path(table, f["path"]) in hit_abs
-        )
+        hit_files.extend(_plain_hits(
+            spark, table, state, plain_cands,
+            lambda rows: rows.join(source.select(*on), on, "left_semi"),
+        ))
     if not_matched_by_source:
         # BY SOURCE widens the rewrite set: any live file may hold an
         # affected UNMATCHED row. A condition stats-prunes the extra
         # files; without one the whole live set is in play (those ARE
         # the semantics of deleting/updating every unmatched row).
+        bs_cond = (
+            F.coalesce(F.expr(by_source_condition), F.lit(False))
+            if by_source_condition
+            else F.lit(True)
+        )
         from opencode_hive_archon_spark.sources.deltastats import (
             prune_files as _prune_files,
         )
@@ -3051,56 +2996,22 @@ def _delta_merge_attempt(
         )
         bs_plain = [f for f in bs_extra if not f.get("deletionVector")]
         if bs_plain:
-            bs_cond = (
-                F.coalesce(F.expr(by_source_condition), F.lit(False))
-                if by_source_condition
-                else F.lit(True)
-            )
-            extra_state = dict(state, files=bs_plain)
-            extra_rows = _read_state(spark, table, extra_state).withColumn(
-                "_file", F.input_file_name()
-            )
-            affected = {
-                os.path.abspath(
-                    urllib.parse.unquote(urllib.parse.urlparse(u).path)
-                )
-                for u in (
-                    r["_file"]
-                    for r in extra_rows.filter(bs_cond)
-                    .join(source.select(*on), on, "left_anti")
-                    .select("_file").distinct().collect()
-                )
-            }
-            hit_files.extend(
-                f for f in bs_plain
-                if _abs_path(table, f["path"]) in affected
-            )
+            hit_files.extend(_plain_hits(
+                spark, table, state, bs_plain,
+                lambda rows: rows.filter(bs_cond).join(
+                    source.select(*on), on, "left_anti"
+                ),
+            ))
     if hit_files:
         hit_state = dict(state, files=hit_files)
         hit_rows = _read_state(spark, table, hit_state)
         unmatched = hit_rows.join(source.select(*on), on, "left_anti")
         if not_matched_by_source:
-            bs_cond = (
-                F.coalesce(F.expr(by_source_condition), F.lit(False))
-                if by_source_condition
-                else F.lit(True)
-            )
             kept = unmatched.filter(~bs_cond)
             if not_matched_by_source == "update":
-                cols = [f.name for f in state["schema"].fields]
-                touched = unmatched.filter(bs_cond).select(
-                    *[
-                        F.expr(by_source_assignments[c]).cast(
-                            state["schema"][c].dataType
-                        ).alias(c)
-                        if c in by_source_assignments
-                        else F.col(c)
-                        for c in cols
-                    ]
-                )
-                touched = _regenerate(touched, state["meta"])
-                _enforce_constraints(touched, state["meta"])
-                kept = kept.unionByName(touched)
+                kept = kept.unionByName(_assign(
+                    unmatched.filter(bs_cond), by_source_assignments, state
+                ))
             # "delete": affected unmatched rows simply don't survive.
         else:
             kept = unmatched
@@ -3130,8 +3041,8 @@ def _delta_merge_attempt(
         # affected. No provable bounds -> any concurrent data change
         # conflicts (the OCC retry re-runs the attempt).
         merge_bounds = None
-    return _commit_after_conflict_check(
-        spark, table, v, actions,
+    return _commit_operation(
+        spark, table, v, "MERGE", op_params, actions,
         {
             "kind": "merge",
             "merge_bounds": merge_bounds,
@@ -3664,13 +3575,7 @@ def delta_optimize(
         dv = f.get("deletionVector")
         if not dv or not dv.get("cardinality"):
             return f["size"], 0.0
-        n = None
-        if f.get("stats"):
-            n = json.loads(f["stats"]).get("numRecords")
-        if n is None:
-            n = _num_records(
-                os.path.join(table, _rel_path(table, f["path"]))
-            )
+        n = _physical_rows(table, f)
         if not n:
             return f["size"], 0.0
         dead = min(1.0, dv["cardinality"] / n)
@@ -3702,13 +3607,7 @@ def delta_optimize(
     params = {"targetBytes": str(target_bytes)}
     if zorder_by:
         params["zOrderBy"] = json.dumps(list(zorder_by))
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "OPTIMIZE",
-            "operationParameters": params,
-        }
-    }]
+    actions: list[dict] = []
     ts = _now_ms()
     for fs in to_pack.values():
         pack_state = dict(state, files=fs)
@@ -3737,10 +3636,7 @@ def delta_optimize(
         actions.extend(
             {"remove": _remove_action(f, ts, False)} for f in fs
         )
-    _commit(table, v, actions)
-    if (v + 1) % CHECKPOINT_INTERVAL == 0:
-        delta_checkpoint(spark, table, v)
-    return v
+    return _commit_operation(spark, table, v, "OPTIMIZE", params, actions)
 
 
 def delta_vacuum(
@@ -3884,96 +3780,95 @@ def delta_append(
     txn: tuple[str, int] | None = None,
     max_retries: int = 20,
 ) -> int:
-    """Optimistic-concurrency append: stage the data files ONCE, then
-    race for the commit; a lost race (DeltaConcurrentCommit) re-reads
-    the head and retries with the SAME staged adds — an append conflicts
-    with no other commit class (the spec's trivially-serializable case),
-    so the retry needs no new data write, only re-validation against the
-    new head. This is the loop a 1000-executor ingest fleet runs: N
-    writers appending to one table serialize on the log, each paying one
-    data write no matter how many commit races it loses.
+    """Optimistic-concurrency append, the one append path (`delta_write`
+    with mode='append' on an existing table lands here too): the batch is
+    validated against the head it read — generated columns completed,
+    CHECK constraints checked, schema and partitioning enforced, the txn
+    watermark honored — staged ONCE, and committed through the same
+    `_occ_retry` loop DELETE/UPDATE/MERGE use, with the `append` conflict
+    profile. A blind append has no read set, so it lands at the next free
+    version past any winner that changed only data; a winner that
+    changed metadata, protocol or a txn re-runs the validation against
+    the new head. That retry re-checks the staged rows only when the
+    constraint set changed and restages only when the layout (partition
+    columns, physical names) changed; a schema change fails loudly,
+    never silently committed stale. This is the loop a 1000-executor
+    ingest fleet runs: N writers appending to one table serialize on the
+    log, each paying one data write no matter how many races it loses.
+    A table that does not exist yet is created by the append."""
+    memo: dict = {}
+    return _occ_retry(
+        f"append to {table}",
+        lambda: _append_attempt(spark, df, table, partition_by, txn, memo),
+        max_retries,
+    )
 
-    Overwrite / DELETE / MERGE retries must re-run their READ phase
-    (their remove sets depend on the head they read), so those surface
-    DeltaConcurrentCommit to the caller instead of looping here. If the
-    table's schema or partition layout changes underneath a retry, the
-    staged files are restaged (layout) or the append fails loudly
-    (schema), never silently committed stale."""
-    staged: list[dict] | None = None
-    staged_parts: list[str] | None = None
-    checked_constraints: frozenset | None = None
-    for _ in range(max_retries + 1):
-        v = latest_version(table) + 1
-        if v == 0:
-            try:
-                return delta_write(
-                    spark, df, table, mode="append",
-                    partition_by=partition_by, txn=txn,
-                )
-            except DeltaConcurrentCommit:
-                continue  # another writer created the table; append to it
-        if txn is not None:
-            seen = _snapshot_state(spark, table, v - 1)["txns"].get(
-                txn[0], -1
+
+def _append_attempt(
+    spark: SparkSession,
+    df: DataFrame,
+    table: str,
+    partition_by: list[str] | None,
+    txn: tuple[str, int] | None,
+    memo: dict,
+) -> int:
+    """One optimistic append (see delta_append). `memo` carries what an
+    earlier attempt already paid for: the constraint set it checked and
+    the layout it staged under, with the staged adds."""
+    v = latest_version(table) + 1
+    if v == 0:
+        # Losing the creation race retries as an append to the winner.
+        return _delta_create(spark, df, table, "append", partition_by, txn=txn)
+    if txn is not None:
+        seen = _snapshot_state(spark, table, v - 1)["txns"].get(txn[0], -1)
+        if seen >= txn[1]:
+            return v - 1  # staged files (if any) are vacuum debris
+    meta = _peek_meta(table, v - 1)
+    batch = _complete_generated(df, meta)
+    # Schema or partitioning drift must fail, not corrupt. Omitted
+    # partition_by inherits the table's committed partitionColumns — a
+    # sink appending to a partitioned table keeps the layout without
+    # having to know it.
+    table_parts = list(partition_by or [])
+    if meta is not None:
+        if not _same_shape(meta["schemaString"], batch.schema.json()):
+            raise DeltaProtocolError(
+                f"schema enforcement: append schema does not match "
+                f"table schema at {table} (use mode='overwrite' to "
+                "replace)"
             )
-            if seen >= txn[1]:
-                return v - 1  # staged files (if any) are vacuum debris
-        meta = _peek_meta(table, v - 1)
-        # Constraints are checked against the CURRENT head's constraint
-        # set — a plain lost race doesn't re-pay the scan, but a
-        # concurrent ADD CONSTRAINT must re-validate the staged rows
-        # (otherwise a violating batch slips in under the new rule).
-        constraints = frozenset(
-            (k, val)
-            for k, val in ((meta or {}).get("configuration") or {}).items()
-            if k.startswith(_CONSTRAINT_PREFIX)
+        table_parts = list(meta.get("partitionColumns") or [])
+        if partition_by is not None and list(partition_by) != table_parts:
+            raise DeltaProtocolError(
+                f"partition enforcement: append partition_by="
+                f"{list(partition_by)} does not match table "
+                f"partitionColumns={table_parts} at {table}"
+            )
+    # Checked against the CURRENT head's constraint set: a plain lost
+    # race doesn't re-pay the scan, but a concurrent ADD CONSTRAINT must
+    # re-validate the staged rows (otherwise a violating batch slips in
+    # under the new rule).
+    conf = (meta or {}).get("configuration") or {}
+    checks = (
+        {k: e for k, e in conf.items() if k.startswith(_CONSTRAINT_PREFIX)},
+        _generated_columns(meta),
+    )
+    if memo.get("checks") != checks:
+        _enforce_constraints(batch, meta)
+        memo["checks"] = checks
+    layout = (
+        table_parts,
+        _physical_map(meta) if _mapping_enabled(meta) else None,
+    )
+    if memo.get("layout") != layout:
+        memo["adds"] = _stage_data_files(
+            batch, table, v, table_parts, meta=meta
         )
-        if checked_constraints != constraints:
-            _enforce_constraints(df, meta)
-            checked_constraints = constraints
-        table_parts = list(partition_by or [])
-        if meta is not None:
-            if not _same_shape(meta["schemaString"], df.schema.json()):
-                raise DeltaProtocolError(
-                    f"schema enforcement: append schema does not match "
-                    f"table schema at {table}"
-                )
-            table_parts = list(meta.get("partitionColumns") or [])
-            if partition_by is not None and list(partition_by) != table_parts:
-                raise DeltaProtocolError(
-                    f"partition enforcement: append partition_by="
-                    f"{list(partition_by)} does not match table "
-                    f"partitionColumns={table_parts} at {table}"
-                )
-        if staged is not None and staged_parts != table_parts:
-            staged = None  # layout changed under us: restage
-        if staged is None:
-            staged = _stage_data_files(
-                df, table, v, table_parts, meta=meta
-            )
-            staged_parts = table_parts
-        actions: list[dict] = [{
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "WRITE",
-                "operationParameters": {"mode": "APPEND"},
-            }
-        }]
-        if txn is not None:
-            actions.append({"txn": {
-                "appId": txn[0], "version": int(txn[1]),
-                "lastUpdated": _now_ms(),
-            }})
-        actions.extend(staged)
-        try:
-            _commit(table, v, actions)
-        except DeltaConcurrentCommit:
-            continue
-        if (v + 1) % CHECKPOINT_INTERVAL == 0:
-            delta_checkpoint(spark, table, v)
-        return v
-    raise DeltaConcurrentCommit(
-        f"append to {table} lost the commit race {max_retries + 1} times"
+        memo["layout"] = layout
+    return _commit_operation(
+        spark, table, v, "WRITE", {"mode": "APPEND"},
+        _txn_actions(txn) + memo["adds"],
+        {"kind": "append", "removed_paths": set()},
     )
 
 

@@ -1713,7 +1713,7 @@ def stream_delta_cdf_partitioned(
         sign = F.when(
             F.col("_change_type") == "insert", F.lit(1)
         ).otherwise(F.lit(-1))
-        return (
+        out = (
             feed.groupBy("o_orderpriority")
             .agg(
                 F.sum(sign).alias("n_rows"),
@@ -1727,6 +1727,8 @@ def stream_delta_cdf_partitioned(
             .orderBy("o_orderpriority")
             .localCheckpoint(eager=True)
         )
+        spark.catalog.dropTempView(sink)
+        return out
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1812,7 +1814,7 @@ def stream_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         sign = F.when(
             F.col("_change_type") == "insert", F.lit(1)
         ).otherwise(F.lit(-1))
-        return (
+        out = (
             feed.groupBy("o_orderstatus")
             .agg(
                 F.sum(sign).alias("n_rows"),
@@ -1826,6 +1828,8 @@ def stream_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderstatus")
             .localCheckpoint(eager=True)
         )
+        spark.catalog.dropTempView(sink)
+        return out
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 

@@ -1,10 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# The checkout this conftest lives in, not an installed or fixed copy:
+# pytest run from any clone tests that clone's tree.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opencode_hive_archon_spark.session import get_spark  # noqa: E402
 

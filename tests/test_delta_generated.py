@@ -46,12 +46,22 @@ def test_create_computes_and_declares(spark, tmp_path):
     assert len(state["files"]) == 4  # one per day
 
 
-def test_append_computes_omitted_generated_column(spark, tmp_path):
+@pytest.mark.parametrize(
+    "append",
+    [
+        lambda spark, df, tbl: dl.delta_write(spark, df, tbl),
+        lambda spark, df, tbl: dl.delta_append(spark, df, tbl),
+    ],
+    ids=["delta_write", "delta_append"],
+)
+def test_append_computes_omitted_generated_column(spark, tmp_path, append):
+    """Both append entry points complete a generated column the batch
+    leaves out."""
     tbl = _mk(spark, tmp_path)
     extra = spark.createDataFrame(
         [(100, "2024-03-09 01:00:00", 1.0)], "k long, ts_s string, v double"
     ).select("k", F.col("ts_s").cast("timestamp").alias("ts"), "v")
-    dl.delta_write(spark, extra, tbl)
+    append(spark, extra, tbl)
     row = dl.delta_snapshot(spark, tbl).filter("k = 100").first()
     assert str(row["day"]) == "2024-03-09"
 

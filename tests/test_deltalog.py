@@ -1343,16 +1343,75 @@ def test_foreign_mapped_partitioned_table_reads(spark, tmp_path):
 
 def test_describe_history(spark, tmp_path):
     """DESCRIBE HISTORY: newest-first retained commits with operation
-    labels; rows GC'd behind a checkpoint leave history like in delta."""
+    labels and parameters. Every engine writer leaves exactly one commit
+    whose commitInfo is its first and only commitInfo action, stamped no
+    earlier than the commit before it; the interval checkpoint lands on
+    v4 although v4 is a metadata-only ALTER; a no-op OPTIMIZE leaves no
+    commit."""
     tbl = str(tmp_path / "t")
-    dl.delta_write(spark, _df(spark, 0, 10).repartition(1), tbl)
-    dl.delta_delete(spark, tbl, "k >= 5")
-    dl.delta_optimize(spark, tbl, target_bytes=1 << 30)
+
+    def rows(*ks):
+        return spark.createDataFrame(
+            [(k, float(k)) for k in ks], "k long, val double"
+        ).repartition(1)
+
+    steps = [
+        ("WRITE", {"mode": "APPEND"},
+         lambda: dl.delta_write(spark, rows(*range(10)), tbl)),
+        ("WRITE", {"mode": "APPEND"},
+         lambda: dl.delta_write(spark, rows(10, 11), tbl, mode="append")),
+        ("WRITE", {"mode": "APPEND"},
+         lambda: dl.delta_append(spark, rows(12, 13), tbl)),
+        ("DELETE", {"predicate": "k >= 12"},
+         lambda: dl.delta_delete(spark, tbl, "k >= 12")),
+        ("SET TBLPROPERTIES", {"properties": '{"owner": "ops"}'},
+         lambda: dl.delta_set_property(spark, tbl, "owner", "ops")),
+        ("ADD CONSTRAINT", {"name": "pos", "expr": "val >= 0"},
+         lambda: dl.delta_add_constraint(spark, tbl, "pos", "val >= 0")),
+        ("UPDATE", {"predicate": "k = 1", "set": '{"val": "val + 100"}'},
+         lambda: dl.delta_update(spark, tbl, "k = 1", {"val": "val + 100"})),
+        ("MERGE", {"matchedPredicates": "update",
+                   "notMatchedPredicates": "insert", "mergeKeys": '["k"]'},
+         lambda: dl.delta_merge(spark, tbl, rows(2, 30), on=["k"])),
+        ("OPTIMIZE", {"targetBytes": str(1 << 30)},
+         lambda: dl.delta_optimize(spark, tbl, target_bytes=1 << 30)),
+        ("WRITE", {"mode": "OVERWRITE"},
+         lambda: dl.delta_write(spark, rows(0, 1), tbl, mode="overwrite")),
+        ("RESTORE", {"version": "8"},
+         lambda: dl.delta_restore(spark, tbl, 8)),
+        ("DROP CONSTRAINT", {"name": "pos"},
+         lambda: dl.delta_drop_constraint(spark, tbl, "pos")),
+        ("SET TBLPROPERTIES", {"delta.columnMapping.mode": "name"},
+         lambda: dl.delta_enable_column_mapping(spark, tbl)),
+        ("RENAME COLUMN", {"from": "val", "to": "price"},
+         lambda: dl.delta_rename_column(spark, tbl, "val", "price")),
+        ("DROP COLUMN", {"name": "price"},
+         lambda: dl.delta_drop_column(spark, tbl, "price")),
+    ]
+    for v, (_, _, run) in enumerate(steps):
+        assert run() == v
+    assert dl.delta_optimize(spark, tbl, target_bytes=1) is None  # no-op
     hist = dl.delta_history(spark, tbl).collect()
-    assert [r["version"] for r in hist] == [1, 0]  # optimize was a no-op
-    assert [r["operation"] for r in hist] == ["DELETE", "WRITE"]
-    assert hist[0]["operationParameters"]["predicate"] == "k >= 5"
-    assert all(r["timestamp"] and r["timestamp"] > 0 for r in hist)
+    assert [r["version"] for r in hist] == list(range(len(steps)))[::-1]
+    assert [
+        (r["operation"], r["operationParameters"]) for r in reversed(hist)
+    ] == [(op, params) for op, params, _ in steps]
+    stamps = [r["timestamp"] for r in reversed(hist)]
+    assert stamps[0] > 0 and stamps == sorted(stamps)
+    for v in range(len(steps)):
+        actions = dl._load_commit_actions(tbl, v)
+        assert "commitInfo" in actions[0]
+        assert sum("commitInfo" in a for a in actions) == 1
+    assert dl._checkpoint_versions(tbl) == [4, 9, 14]
+    assert _ks(dl.delta_snapshot(spark, tbl)) == list(range(12)) + [30]
+
+    clone = str(tmp_path / "c")
+    assert dl.delta_clone(spark, tbl, clone) == 0
+    (row,) = dl.delta_history(spark, clone).collect()
+    assert (row["operation"], row["operationParameters"]) == (
+        "CLONE",
+        {"source": os.path.abspath(tbl), "sourceVersion": "14"},
+    )
     with pytest.raises(dl.DeltaProtocolError, match="not a delta table"):
         dl.delta_history(spark, str(tmp_path / "nope"))
 

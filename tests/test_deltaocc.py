@@ -1,5 +1,5 @@
 """Logical conflict detection for optimistic concurrency
-(sources/deltalog.py `_conflicts_with` / `_commit_after_conflict_check`):
+(sources/deltalog.py `_conflicts_with` / `_commit_operation`):
 the spec's conflict-matrix cheap cases — a blind append and a
 DELETE/MERGE with provably disjoint read sets land in consecutive
 commits WITHOUT re-running the read phase; overlapping work still
@@ -8,6 +8,7 @@ re-reads; metadata/protocol changes always re-read."""
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 
@@ -119,15 +120,17 @@ def _mk(spark, tmp_path, name="t"):
     return tbl
 
 
-def _race_once(monkeypatch, spark, tbl, racer_df):
+def _race_once(monkeypatch, spark, tbl, racer_df, delay_s=0.0):
     """Patch _commit so the FIRST commit attempt loses to a real append
-    of `racer_df` (committed through the unpatched flow)."""
+    of `racer_df` (committed through the unpatched flow), started
+    `delay_s` after that attempt reached the log."""
     orig = dl._commit
     state = {"injected": False}
 
     def racing(table, version, actions):
         if not state["injected"]:
             state["injected"] = True
+            time.sleep(delay_s)
             dl.delta_write(spark, racer_df, tbl, mode="append")
         return orig(table, version, actions)
 
@@ -179,6 +182,36 @@ def test_delete_vs_overlapping_append_rereads(spark, tmp_path, monkeypatch):
     assert calls["n"] == 2  # read phase ran twice
     got = sorted(r["k"] for r in dl.delta_snapshot(spark, tbl).collect())
     assert got == [0, 1, 2, 4, 5, 6, 7, 8, 9, 50]  # BOTH k=3 rows gone
+
+
+def test_advanced_commit_is_stamped_after_its_winner(
+    spark, tmp_path, monkeypatch
+):
+    """A DELETE that advances past a disjoint append is stamped when it
+    publishes, not when it started reading: its commitInfo timestamp is
+    not older than the winner's, so TIMESTAMP AS OF just before the
+    winner resolves to a version without the winner's rows."""
+    tbl = _mk(spark, tmp_path)
+    racer = spark.createDataFrame(
+        [(k, 0.0) for k in range(100, 105)], "k long, val double"
+    ).repartition(1)
+    _race_once(monkeypatch, spark, tbl, racer, delay_s=0.005)
+    assert dl.delta_delete(spark, tbl, "k = 3") == 2
+
+    def stamp(v):
+        (info,) = [
+            a["commitInfo"] for a in dl._load_commit_actions(tbl, v)
+            if "commitInfo" in a
+        ]
+        return info["timestamp"]
+
+    winner_ts = stamp(1)
+    assert stamp(2) >= winner_ts
+    before = dl.version_at_timestamp(tbl, winner_ts - 1)
+    got = sorted(
+        r["k"] for r in dl.delta_snapshot(spark, tbl, version=before).collect()
+    )
+    assert not set(got) & set(range(100, 105))
 
 
 def test_merge_vs_disjoint_append_single_attempt(spark, tmp_path, monkeypatch):

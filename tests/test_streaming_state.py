@@ -563,3 +563,15 @@ def test_mv_gc_floor_clamp_protects_retry_manifest(spark, sf_dir, monkeypatch):
         assert once == twice, "retry under clamped GC changed the MV"
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_cdf_streams_leave_no_sink_view(spark, sf_dir):
+    """The partitioned and DV change-feed streams drain into a memory
+    sink; once the aggregate is checkpointed the sink's view is dropped,
+    so a call leaves no name (and none of the sink's rows) behind in the
+    session catalog."""
+    before = {t.name for t in spark.catalog.listTables()}
+    J.stream_delta_cdf_partitioned(spark, sf_dir).collect()
+    J.stream_delta_cdf_dv(spark, sf_dir).collect()
+    after = {t.name for t in spark.catalog.listTables()}
+    assert after - before == set()

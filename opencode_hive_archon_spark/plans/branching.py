@@ -46,6 +46,24 @@ def _lit(x) -> Column:
     return x if isinstance(x, Column) else F.lit(x)
 
 
+def _bypass_cond(rerank_bypassed, provider):
+    """`rerank_bypassed AND provider = 'mem0'`, folded on the driver when
+    an operand is a Python constant: a bool when both are, else the
+    Column that is left. A constant never reaches the plan as
+    `'mem0' = 'mem0'`, a trivially true predicate the JVM warns about."""
+    if not isinstance(provider, Column):
+        if provider != "mem0":
+            return False
+        return (
+            rerank_bypassed
+            if isinstance(rerank_bypassed, Column)
+            else bool(rerank_bypassed)
+        )
+    if not isinstance(rerank_bypassed, Column):
+        return bool(rerank_bypassed) and provider == "mem0"
+    return rerank_bypassed & (provider == "mem0")
+
+
 def branch_col(
     count: Column,
     top_confidence: Column,
@@ -55,15 +73,15 @@ def branch_col(
 ) -> Column:
     """The CASE cascade. `threshold`/`rerank_bypassed`/`provider` may be
     plan-time Python constants or data-driven Columns (scenario replay)."""
-    threshold, rerank_bypassed, provider = map(
-        _lit, (threshold, rerank_bypassed, provider)
+    cascade = F.when(count == 0, F.lit(EMPTY_SET)).when(
+        top_confidence < _lit(threshold), F.lit(LOW_CONFIDENCE)
     )
-    return (
-        F.when(count == 0, F.lit(EMPTY_SET))
-        .when(top_confidence < threshold, F.lit(LOW_CONFIDENCE))
-        .when(rerank_bypassed & (provider == "mem0"), F.lit(RERANK_BYPASSED))
-        .otherwise(F.lit(SUCCESS))
-    )
+    bypass = _bypass_cond(rerank_bypassed, provider)
+    if bypass is True:
+        return cascade.otherwise(F.lit(RERANK_BYPASSED))
+    if bypass is not False:
+        cascade = cascade.when(bypass, F.lit(RERANK_BYPASSED))
+    return cascade.otherwise(F.lit(SUCCESS))
 
 
 def action_col(branch: Column) -> Column:

@@ -34,7 +34,8 @@ the subset needed for a correct single-cluster lakehouse table:
   ``files`` is a Python list, the metadata any FileIndex needs to plan
   the scan, so no Spark job is issued.
 - **Parquet checkpoints + ``_last_checkpoint``** every
-  ``CHECKPOINT_INTERVAL`` commits: replay cost is one checkpoint parquet
+  ``CHECKPOINT_INTERVAL`` commits, written on the driver with pyarrow
+  like replay reads them (no Spark job): replay cost is one checkpoint
   plus < INTERVAL JSON files no matter how many commits the table has —
   the property that keeps a years-old 100 TB table readable. Commits at
   or before a checkpoint may be deleted (the spec's metadata cleanup);
@@ -42,10 +43,11 @@ the subset needed for a correct single-cluster lakehouse table:
   fails loudly instead of silently returning a partial table.
 - **Time travel**: ``delta_snapshot(..., version=v)`` replays to any
   retained version.
-- **File-granular copy-on-write DELETE**: only data files that actually
-  contain matching rows are rewritten (remove + add); untouched files
-  keep their original add entries — at scale a predicate touching one
-  partition rewrites one partition, not the table.
+- **File-granular copy-on-write DELETE and MERGE**: only data files that
+  actually contain matching rows are rewritten (remove + add); untouched
+  files keep their original add entries — at scale a predicate touching
+  one partition rewrites one partition, not the table. MERGE caches its
+  source for the call and asks its guards of it in one aggregate.
 - **Deletion vectors (reader 3, merge-on-read DELETE)**: hit files stay
   byte-identical and gain a row-index bitmap instead; replay keys file
   identity by (path, DV id) so a DV update's same-commit remove+add
@@ -59,14 +61,10 @@ the subset needed for a correct single-cluster lakehouse table:
   ``basePath`` so partition pruning still applies to the returned frame.
 
 100 TB notes: data files are written by executors (``df.write.parquet``)
-— the log carries only metadata. When the live file list outgrows one
-parquet file the spec's answer is multi-part checkpoints
-(``%020d.checkpoint.%010d.%010d.parquet``), and when per-file stats are
-too hot for JSON parsing the ``stats_parsed`` checkpoint column — both
-are format extensions of this same layer, not redesigns. Min/max
-per-column stats for file skipping slot into the same ``stats`` field
-(``pyarrow`` footer metadata supplies them at write time); ``numRecords``
-is implemented here and powers ``delta_count`` (a scan-free COUNT(*)).
+— the log carries only metadata. A live file list past
+``CHECKPOINT_PART_ACTIONS`` is checkpointed in the spec's multi-part
+form; per-file ``stats`` carry the min/max that drive file skipping and
+the ``numRecords`` behind ``delta_count`` (a scan-free COUNT(*)).
 
 No code is taken from delta-io/delta; this is written to the published
 protocol document. The reference repo (/root/reference) has no storage
@@ -75,6 +73,7 @@ layer at all — this family is north-star capability per SURVEY.md §2B.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import math
@@ -418,6 +417,20 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
+@contextlib.contextmanager
+def _job_phase(spark: SparkSession, phase: str):
+    """Describe the Spark jobs run inside the block as `delta <phase>`
+    (the status store's job description, so each job of a write is
+    attributed to its phase), then restore the caller's description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"delta {phase}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
 def _load_commit_actions(table: str, version: int) -> list[dict]:
     """The actions of commit `version`, in log order — the one commit
     reader every log consumer goes through."""
@@ -712,7 +725,8 @@ def _stage_data_files(
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    with _job_phase(df.sparkSession, "staging write"):
+        writer.parquet(staging)
     adds: list[dict] = []
     seq = 0
     # Per-attempt unique token in every file name: two writers racing the
@@ -1573,7 +1587,9 @@ def _enforce_constraints(df: DataFrame, meta: dict | None) -> None:
             for name, expr in gens.items()
         )
     violated = reduce(lambda a, b: a | b, preds)
-    if df.filter(violated).limit(1).count():
+    with _job_phase(df.sparkSession, "constraint check"):
+        bad = df.filter(violated).limit(1).count()
+    if bad:
         raise DeltaProtocolError(
             f"CHECK constraint violation: a written row fails one of "
             f"{sorted(checks) + [f'generated:{g}' for g in sorted(gens)]}"
@@ -2436,6 +2452,20 @@ def _commit_operation(
     )
 
 
+def _rewrite_actions(
+    table: str, version: int, state: dict, rewrite: DataFrame,
+    hit_files: list[dict],
+) -> list[dict]:
+    """A copy-on-write commit's data actions: adds for `rewrite`'s
+    staged files, then removes for the `hit_files` it replaces."""
+    adds = _stage_data_files(
+        rewrite, table, version, state["partition_columns"],
+        meta=state["meta"],
+    )
+    ts = _now_ms()
+    return adds + [{"remove": _remove_action(f, ts, True)} for f in hit_files]
+
+
 def delta_delete(
     spark: SparkSession,
     table: str,
@@ -2470,11 +2500,13 @@ def _plain_hits(
     rows = _read_state(spark, table, dict(state, files=files)).withColumn(
         "_file", F.input_file_name()
     )
+    with _job_phase(spark, "hit discovery"):
+        found = keep(rows).select("_file").distinct().collect()
     hit_abs = {
         os.path.abspath(
             urllib.parse.unquote(urllib.parse.urlparse(r["_file"]).path)
         )
-        for r in keep(rows).select("_file").distinct().collect()
+        for r in found
     }
     return [f for f in files if _abs_path(table, f["path"]) in hit_abs]
 
@@ -2502,10 +2534,9 @@ def _find_hit_files(
         ))
     if dv_cands:
         probe = _scan_with_row_index(spark, table, state, dv_cands)
-        hit_abs = {
-            r["_dv_fp"]
-            for r in probe.filter(pred).select("_dv_fp").distinct().collect()
-        }
+        with _job_phase(spark, "hit discovery"):
+            found = probe.filter(pred).select("_dv_fp").distinct().collect()
+        hit_abs = {r["_dv_fp"] for r in found}
         hit_files.extend(
             f for f in dv_cands if _abs_path(table, f["path"]) in hit_abs
         )
@@ -2570,16 +2601,7 @@ def _delta_update_attempt(
         rewrite = hit_rows.filter(~pred).unionByName(
             _assign(hit_rows.filter(pred), assignments, state)
         )
-        actions.extend(
-            _stage_data_files(
-                rewrite, table, v, state["partition_columns"],
-                meta=state["meta"],
-            )
-        )
-        ts = _now_ms()
-        actions.extend(
-            {"remove": _remove_action(f, ts, True)} for f in hit_files
-        )
+        actions = _rewrite_actions(table, v, state, rewrite, hit_files)
     return _commit_operation(
         spark, table, v, "UPDATE",
         {
@@ -2659,33 +2681,20 @@ def _delta_delete_attempt(
         # Copy-on-write: re-plan the rewrite scan over ONLY the hit
         # files — I/O proportional to what is rewritten, not the table.
         # A hit file's old DV dies with it (the rewrite purges).
-        hit_state = dict(state, files=hit_files)
-        keep = _read_state(spark, table, hit_state).filter(~pred)
-        actions.extend(
-            _stage_data_files(
-                keep, table, v, state["partition_columns"],
-                meta=state["meta"],
-            )
-        )
-        ts = _now_ms()
-        actions.extend(
-            {"remove": _remove_action(f, ts, True)} for f in hit_files
+        hit_rows = _read_state(spark, table, dict(state, files=hit_files))
+        actions = _rewrite_actions(
+            table, v, state, hit_rows.filter(~pred), hit_files
         )
     elif use_dv and candidates:
         # Merge-on-read: ONE fused row-index scan over the stats-pruned
-        # candidates does hit discovery AND DV construction (r18,
-        # guide §1.2 step 1 — previously a bulk discovery pass over the
-        # candidates was followed by a second row-index scan of the hit
-        # files). _scan_with_row_index applies existing DVs, so only
-        # LIVE matching rows form groups — a file whose only matches
-        # are already-dead rows produces no group and is left alone,
-        # exactly the old hit semantics. The DV bitmaps are built
-        # PER-FILE ON EXECUTORS (r17, VERDICT r16 #3) — one
-        # applyInPandas group per hit file merges its newly-dead row
-        # indexes with its existing DV and writes the spec DV file from
-        # the task. The driver collects DESCRIPTORS only, so a wide
-        # low-selectivity delete is bounded by the hit-file count,
-        # never by delete cardinality.
+        # candidates does hit discovery AND DV construction.
+        # _scan_with_row_index applies existing DVs, so only LIVE
+        # matching rows form groups — a file whose only matches are
+        # already-dead rows is left alone. One applyInPandas group per
+        # hit file merges its newly-dead row indexes with its existing
+        # DV and writes the spec DV file from the task; the driver
+        # collects DESCRIPTORS only, so a wide delete is bounded by the
+        # hit-file count, never by delete cardinality.
         table_abs = os.path.abspath(table)
         old_desc = {
             _abs_path(table, f["path"]):
@@ -2713,14 +2722,15 @@ def _delta_delete_attempt(
                 {"_dv_fp": [fp], "descriptor": [json.dumps(desc)]}
             )
 
-        desc_rows = (
-            _scan_with_row_index(spark, table, state, candidates)
-            .filter(pred)
-            .select("_dv_fp", "_dv_ri")
-            .groupBy("_dv_fp")
-            .applyInPandas(_build_dv, "_dv_fp string, descriptor string")
-            .collect()
-        )
+        with _job_phase(spark, "DV write"):
+            desc_rows = (
+                _scan_with_row_index(spark, table, state, candidates)
+                .filter(pred)
+                .select("_dv_fp", "_dv_ri")
+                .groupBy("_dv_fp")
+                .applyInPandas(_build_dv, "_dv_fp string, descriptor string")
+                .collect()
+            )
         desc_by_file = {
             r["_dv_fp"]: json.loads(r["descriptor"]) for r in desc_rows
         }
@@ -2771,7 +2781,6 @@ def delta_merge(
 ) -> int:
     """MERGE INTO (SCD-1 upsert) with OCC retry; returns the new version.
 
-    r18 additions completing the spec's MERGE surface (VERDICT r17 #5):
     `not_matched_by_source` = "delete" | "update" adds the WHEN NOT
     MATCHED BY SOURCE clause — target rows whose key has NO source row
     (optionally gated by `by_source_condition`, a predicate over target
@@ -2780,17 +2789,28 @@ def delta_merge(
     columns are appended to the table schema in the same commit (old
     files null-backfill them at read time; on a mapped table they mint
     fresh ids/physical names)."""
-    return _occ_retry(
-        f"MERGE on {table}",
-        lambda: _delta_merge_attempt(
-            spark, table, source, on,
-            not_matched_by_source=not_matched_by_source,
-            by_source_condition=by_source_condition,
-            by_source_assignments=by_source_assignments,
-            schema_evolution=schema_evolution,
-        ),
-        max_retries,
-    )
+    # The source is evaluated once per call, not per question or per OCC
+    # attempt: cached (unless the caller cached it) and released after
+    # the commit; its stats are asked by the first attempt that needs them.
+    pinned = not source.is_cached
+    if pinned:
+        source = source.cache()
+    stats: dict = {}
+    try:
+        return _occ_retry(
+            f"MERGE on {table}",
+            lambda: _delta_merge_attempt(
+                spark, table, source, on, stats,
+                not_matched_by_source=not_matched_by_source,
+                by_source_condition=by_source_condition,
+                by_source_assignments=by_source_assignments,
+                schema_evolution=schema_evolution,
+            ),
+            max_retries,
+        )
+    finally:
+        if pinned:
+            source.unpersist()
 
 
 def _merge_evolved_meta(state: dict, source: DataFrame) -> dict | None:
@@ -2832,11 +2852,35 @@ def _merge_evolved_meta(state: dict, source: DataFrame) -> dict | None:
     return meta_update
 
 
+def _merge_source_stats(
+    spark: SparkSession, source: DataFrame, on: list[str]
+) -> dict:
+    """One aggregate answers every question MERGE asks of its source:
+    its row count, its distinct key count (grouping semantics, so two
+    NULL keys are one key — fewer keys than rows breaks the cardinality
+    rule) and the [min, max] of each numeric key for file skipping."""
+    numeric_keys = [
+        f.name
+        for f in source.schema.fields
+        if f.name in on and f.dataType.typeName()
+        in ("byte", "short", "integer", "long", "float", "double")
+    ]
+    with _job_phase(spark, "MERGE source stats"):
+        row = source.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.count_distinct(F.struct(*on)).alias("keys"),
+            *[F.min(c).alias(f"lo_{c}") for c in numeric_keys],
+            *[F.max(c).alias(f"hi_{c}") for c in numeric_keys],
+        ).collect()[0]
+    return dict(row.asDict(), numeric_keys=numeric_keys)
+
+
 def _delta_merge_attempt(
     spark: SparkSession,
     table: str,
     source: DataFrame,
     on: list[str],
+    stats: dict,
     not_matched_by_source: str | None = None,
     by_source_condition: str | None = None,
     by_source_assignments: dict[str, str] | None = None,
@@ -2889,14 +2933,9 @@ def _delta_merge_attempt(
     # Every newly-written payload (updates + inserts) comes from source;
     # kept rows satisfy the constraints by induction.
     _enforce_constraints(source, state["meta"])
-    dup = (
-        source.groupBy(*on)
-        .agg(F.count(F.lit(1)).alias("__merge_n"))
-        .filter(F.col("__merge_n") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
+    if not stats:
+        stats.update(_merge_source_stats(spark, source, on))
+    if stats["rows"] > stats["keys"]:
         raise DeltaProtocolError(
             "merge cardinality violation: multiple source rows share a key"
         )
@@ -2915,58 +2954,47 @@ def _delta_merge_attempt(
             "condition": by_source_condition,
         })
     actions: list[dict] = [] if meta_action is None else [meta_action]
-    target = _read_state(spark, table, state)
-    inserts = source.join(target.select(*on), on, "left_anti")
+    from opencode_hive_archon_spark.sources.deltastats import (
+        prune_files,
+        prune_files_by_key_bounds,
+    )
+
+    # The source is the small side of every join below.
+    src_keys = F.broadcast(source.select(*on))
     # MERGE-side data skipping: bound the hit-discovery scan to target
-    # files whose key stats overlap the source's [min, max] per key — one
-    # small agg over the (typically much smaller) source buys skipping
-    # data-proportional target I/O. Non-numeric keys keep every file.
+    # files whose key stats overlap the source's [min, max] per key.
+    # Non-numeric keys keep every file; a source without a non-NULL key
+    # can match nothing.
     candidates = list(state["files"])
     merge_bounds: dict | None = None
-    if candidates:
-        from opencode_hive_archon_spark.sources.deltastats import (
-            prune_files_by_key_bounds,
-        )
-
-        numeric = {
-            f.name
-            for f in source.schema.fields
-            if f.dataType.typeName()
-            in ("byte", "short", "integer", "long", "float", "double")
+    key_cols = stats["numeric_keys"]
+    if stats["rows"] == 0 or any(stats[f"lo_{c}"] is None for c in key_cols):
+        candidates = []
+    elif key_cols:
+        # Native values, NOT float(): float is lossy above 2^53 and a
+        # rounded bound could skip a file whose row should have been
+        # UPDATED (the merge would insert a duplicate). Bounds are keyed
+        # by PHYSICAL names — file stats are.
+        phys = _physical_map(state["meta"])
+        merge_bounds = {
+            phys.get(c, c): (stats[f"lo_{c}"], stats[f"hi_{c}"])
+            for c in key_cols
         }
-        key_cols = [c for c in on if c in numeric]
-        if key_cols:
-            row = source.agg(
-                *[F.min(c).alias(f"lo_{c}") for c in key_cols],
-                *[F.max(c).alias(f"hi_{c}") for c in key_cols],
-            ).collect()[0]
-            if any(row[f"lo_{c}"] is None for c in key_cols):
-                candidates = []  # empty source: nothing can match
-            else:
-                # Native values, NOT float(): float is lossy above 2^53
-                # and a rounded bound could skip a file whose row should
-                # have been UPDATED (the merge would insert a duplicate).
-                # Bounds are keyed by PHYSICAL names — file stats are.
-                phys = _physical_map(state["meta"]) if _mapping_enabled(
-                    state["meta"]
-                ) else {}
-                bounds = {
-                    phys.get(c, c): (row[f"lo_{c}"], row[f"hi_{c}"])
-                    for c in key_cols
-                }
-                candidates = prune_files_by_key_bounds(candidates, bounds)
-                merge_bounds = bounds
-    plain_cands = [f for f in candidates if not f.get("deletionVector")]
-    # DV'd candidates are ALWAYS rewritten (conservative): their scan is
-    # a row-index join where input_file_name discovery is undefined, and
-    # candidates are already key-bound pruned so the over-approximation
-    # is bounded. The rewrite purges their DVs.
-    hit_files = [f for f in candidates if f.get("deletionVector")]
-    if plain_cands:
-        hit_files.extend(_plain_hits(
-            spark, table, state, plain_cands,
-            lambda rows: rows.join(source.select(*on), on, "left_semi"),
-        ))
+        candidates = prune_files_by_key_bounds(candidates, merge_bounds)
+
+    def hits(files: list[dict], keep) -> list[dict]:
+        # DV'd files are ALWAYS rewritten (conservative): input_file_name
+        # discovery is undefined through their row-index scan, `files`
+        # are stats-pruned already, and the rewrite purges their DVs.
+        plain = [f for f in files if not f.get("deletionVector")]
+        found = [f for f in files if f.get("deletionVector")]
+        if plain:
+            found.extend(_plain_hits(spark, table, state, plain, keep))
+        return found
+
+    hit_files = hits(
+        candidates, lambda rows: rows.join(src_keys, on, "left_semi")
+    )
     if not_matched_by_source:
         # BY SOURCE widens the rewrite set: any live file may hold an
         # affected UNMATCHED row. A condition stats-prunes the extra
@@ -2977,35 +3005,20 @@ def _delta_merge_attempt(
             if by_source_condition
             else F.lit(True)
         )
-        from opencode_hive_archon_spark.sources.deltastats import (
-            prune_files as _prune_files,
-        )
-
         bs_cands = (
-            _prune_files(state, by_source_condition)
+            prune_files(state, by_source_condition)
             if by_source_condition
             else list(state["files"])
         )
         seen_paths = {f["path"] for f in hit_files}
-        bs_extra = [f for f in bs_cands if f["path"] not in seen_paths]
-        # DV'd extras: input_file_name discovery is undefined through
-        # the row-index join — rewrite them conservatively (stats-pruned
-        # by the condition already, and the rewrite purges their DVs).
-        hit_files.extend(
-            f for f in bs_extra if f.get("deletionVector")
-        )
-        bs_plain = [f for f in bs_extra if not f.get("deletionVector")]
-        if bs_plain:
-            hit_files.extend(_plain_hits(
-                spark, table, state, bs_plain,
-                lambda rows: rows.filter(bs_cond).join(
-                    source.select(*on), on, "left_anti"
-                ),
-            ))
+        hit_files.extend(hits(
+            [f for f in bs_cands if f["path"] not in seen_paths],
+            lambda rows: rows.filter(bs_cond).join(src_keys, on, "left_anti"),
+        ))
     if hit_files:
         hit_state = dict(state, files=hit_files)
         hit_rows = _read_state(spark, table, hit_state)
-        unmatched = hit_rows.join(source.select(*on), on, "left_anti")
+        unmatched = hit_rows.join(src_keys, on, "left_anti")
         if not_matched_by_source:
             kept = unmatched.filter(~bs_cond)
             if not_matched_by_source == "update":
@@ -3018,28 +3031,20 @@ def _delta_merge_attempt(
         # UPDATE SET * applies to EVERY matched target row (duplicates
         # included): one output row per matched target row, payload from
         # the source (whose per-key uniqueness the guard above enforced).
-        updated = hit_rows.select(*on).join(source, on, "inner")
+        updated = hit_rows.select(*on).join(F.broadcast(source), on)
+        # Never-matched source rows: stats pruning excludes every file
+        # outside the hit set from holding a source key, and a candidate
+        # that holds one is a hit by definition, so the hit files' keys
+        # are the only ones an insert must avoid.
+        inserts = source.join(hit_rows.select(*on), on, "left_anti")
         rewrite = kept.unionByName(updated).unionByName(inserts)
-        ts = _now_ms()
-        removes = [
-            {"remove": _remove_action(f, ts, True)} for f in hit_files
-        ]
     else:
-        rewrite = inserts
-        removes = []
-    actions.extend(
-        _stage_data_files(
-            rewrite, table, v, state["partition_columns"],
-            meta=state["meta"],
-        )
-    )
-    actions.extend(removes)
+        rewrite = source
+    actions.extend(_rewrite_actions(table, v, state, rewrite, hit_files))
     if not_matched_by_source:
-        # BY SOURCE reads (and may delete/update) UNMATCHED rows, so the
-        # read set is no longer bounded by the source's key range — a
-        # concurrent add could carry rows this merge should have
-        # affected. No provable bounds -> any concurrent data change
-        # conflicts (the OCC retry re-runs the attempt).
+        # BY SOURCE reads UNMATCHED rows, so the read set is not bounded
+        # by the source's key range: with no provable bounds, any
+        # concurrent data change conflicts (the OCC retry re-reads).
         merge_bounds = None
     return _commit_operation(
         spark, table, v, "MERGE", op_params, actions,
@@ -3052,27 +3057,26 @@ def _delta_merge_attempt(
 
 
 # Actions per checkpoint part before the writer splits into the spec's
-# multi-part form. Sized for the test/driver scale; at 100 TB the same
-# knob is what keeps one part's file list readable in one task.
+# multi-part form: what bounds one part's Arrow table on the driver.
 CHECKPOINT_PART_ACTIONS = 1_000_000
 
 
-def _write_state_parquet(
-    spark: SparkSession, table: str, version: int, rows: list[dict],
-    final: str,
-) -> None:
-    out_tmp = os.path.join(
-        _log_dir(table), f".ckpt-{version:020d}-{uuid.uuid4().hex[:8]}"
+def _write_state_parquet(rows: list[dict], final: str) -> None:
+    """Write state `rows` (one action per row) as checkpoint file `final`
+    on the driver, like replay reads it (no Spark job): a hidden temp file
+    renamed into place, so a reader never sees a torn part."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    tmp = os.path.join(
+        os.path.dirname(final),
+        f".{os.path.basename(final)}.{uuid.uuid4().hex[:8]}.tmp",
     )
-    spark.createDataFrame(rows, STATE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(out_tmp)
-    part = next(
-        n for n in sorted(os.listdir(out_tmp))
-        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(STATE_SCHEMA)), tmp
     )
-    shutil.move(os.path.join(out_tmp, part), final)
-    shutil.rmtree(out_tmp, ignore_errors=True)
+    os.replace(tmp, final)
 
 
 def delta_checkpoint(
@@ -3112,24 +3116,16 @@ def delta_checkpoint(
         if (t["deletionTimestamp"] or 0) >= cutoff
     )
     n_parts = max(1, -(-len(rows) // max_actions_per_part))
-    finals: list[str] = []
-    if n_parts == 1:
-        final = _checkpoint_file(table, version)
-        _write_state_parquet(spark, table, version, rows, final)
-        finals.append(final)
-    else:
-        chunk = -(-len(rows) // n_parts)
-        for i in range(n_parts):
-            final = os.path.join(
-                _log_dir(table),
-                f"{version:020d}.checkpoint."
-                f"{i + 1:010d}.{n_parts:010d}.parquet",
-            )
-            _write_state_parquet(
-                spark, table, version,
-                rows[i * chunk:(i + 1) * chunk], final,
-            )
-            finals.append(final)
+    chunk = -(-len(rows) // n_parts)
+    finals = [
+        _checkpoint_file(table, version) if n_parts == 1 else os.path.join(
+            _log_dir(table),
+            f"{version:020d}.checkpoint.{i + 1:010d}.{n_parts:010d}.parquet",
+        )
+        for i in range(n_parts)
+    ]
+    for i, final in enumerate(finals):
+        _write_state_parquet(rows[i * chunk:(i + 1) * chunk], final)
     lc_tmp = os.path.join(_log_dir(table), ".tmp_last_checkpoint")
     lc: dict = {"version": version, "size": len(rows)}
     if n_parts > 1:

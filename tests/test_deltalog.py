@@ -305,6 +305,125 @@ def test_merge_into_empty_table_inserts_all(spark, tmp_path):
     assert _ks(dl.delta_snapshot(spark, tbl)) == [1, 2]
 
 
+_KVG = "k long, v double, g string"
+
+
+def _merge_model(target, source):
+    """Plain-Python MERGE upsert on the first field: a target row whose
+    key matches a source row becomes that row, unmatched source rows are
+    appended, and a NULL key matches nothing."""
+    by_key = {r[0]: r for r in source if r[0] is not None}
+    live = {r[0] for r in target}
+    out = [by_key.get(r[0], r) if r[0] is not None else r for r in target]
+    out += [r for r in source if r[0] is None or r[0] not in live]
+    return sorted(out, key=repr)
+
+
+def _write_rows(spark, tbl, rows, **kw):
+    dl.delta_write(
+        spark, spark.createDataFrame(rows, _KVG).repartition(1), tbl,
+        mode="append", **kw,
+    )
+
+
+def _case_all_new(spark, tbl, monkeypatch):
+    # New keys inside the target's key range: every file is a candidate,
+    # none is a hit.
+    target = [(k, float(k), "a") for k in range(0, 40, 2)]
+    _write_rows(spark, tbl, target[:10])
+    _write_rows(spark, tbl, target[10:])
+    return target, [(k, -1.0, "n") for k in (1, 7, 33, 100)]
+
+
+def _case_no_key_stats(spark, tbl, monkeypatch):
+    target = [(k, float(k), "a") for k in range(20)]
+    with monkeypatch.context() as m:
+        full = dl._file_stats
+        m.setattr(dl, "_file_stats", lambda p: {
+            "numRecords": full(p)["numRecords"]
+        })
+        _write_rows(spark, tbl, target[:10])
+    _write_rows(spark, tbl, target[10:])
+    return target, [(5, 50.0, "u"), (15, 150.0, "u"), (99, 9.0, "n")]
+
+
+def _case_null_key(spark, tbl, monkeypatch):
+    target = [(k, float(k), "a") for k in range(10)] + [(None, -1.0, "t")]
+    _write_rows(spark, tbl, target)
+    return target, [(None, -2.0, "s"), (3, 30.0, "u"), (42, 4.2, "n")]
+
+
+def _case_dv_candidate(spark, tbl, monkeypatch):
+    _write_rows(spark, tbl, [(k, float(k), "a") for k in range(10)])
+    dl.delta_delete(spark, tbl, "k >= 7", use_dv=True)
+    target = [(k, float(k), "a") for k in range(7)]
+    # 8 is a dead row of the DV'd file: an insert, not an update.
+    return target, [(2, 20.0, "u"), (8, 80.0, "n"), (20, 2.0, "n")]
+
+
+def _case_partitioned(spark, tbl, monkeypatch):
+    target = [(k, float(k), "a" if k < 10 else "b") for k in range(20)]
+    _write_rows(spark, tbl, target, partition_by=["g"])
+    # 3 moves from partition a to b; 25 lands in a new partition.
+    return target, [(3, 30.0, "b"), (12, 120.0, "b"), (25, 2.5, "c")]
+
+
+@pytest.mark.parametrize("case", [
+    _case_all_new, _case_no_key_stats, _case_null_key, _case_dv_candidate,
+    _case_partitioned,
+], ids=lambda c: c.__name__[len("_case_"):])
+def test_merge_matches_python_model(spark, tmp_path, monkeypatch, case):
+    """The edge cases MERGE's insert set must keep: inserts are the
+    source anti-joined with the HIT files' keys only, so every live row
+    holding a source key must sit in a hit file."""
+    tbl = str(tmp_path / "t")
+    target, source = case(spark, tbl, monkeypatch)
+    before = {f["path"] for f in dl._snapshot_state(spark, tbl)["files"]}
+    v = dl.delta_merge(
+        spark, tbl, spark.createDataFrame(source, _KVG), on=["k"]
+    )
+    got = sorted(
+        (tuple(r) for r in dl.delta_snapshot(spark, tbl).select(
+            "k", "v", "g").collect()),
+        key=repr,
+    )
+    assert got == _merge_model(target, source)
+    removed = [a for a in dl._load_commit_actions(tbl, v) if "remove" in a]
+    if case is _case_all_new:
+        assert not removed
+        assert before <= {
+            f["path"] for f in dl._snapshot_state(spark, tbl)["files"]
+        }
+    else:
+        assert removed
+
+
+def test_merge_runs_at_most_eleven_jobs_each_described(spark, tmp_path):
+    """A small upsert asks each question of its source once: one cache
+    build, one stats aggregate, hit discovery and the staging write — at
+    most 11 jobs, each described by its write phase."""
+    tbl = str(tmp_path / "t")
+    _write_rows(spark, tbl, [(k, float(k), "a") for k in range(20)])
+    _write_rows(spark, tbl, [(k, float(k), "a") for k in range(20, 40)])
+    src = spark.createDataFrame(
+        [(k, -1.0, "u") for k in (3, 25, 41, 50)], _KVG
+    )
+    group = f"merge-{os.getpid()}-{tmp_path.name}"
+    _run_in_group(spark, group, lambda: dl.delta_merge(
+        spark, tbl, src, on=["k"]
+    ))
+    descs = _group_job_descriptions(spark, group, "control")[:-1]
+    assert 0 < len(descs) <= 11, descs
+    assert set(descs) <= {
+        "delta MERGE source stats", "delta hit discovery",
+        "delta staging write",
+    }, descs
+    assert not src.is_cached  # released after the commit
+    assert _ks(dl.delta_snapshot(spark, tbl)) == sorted(
+        set(range(40)) | {41, 50}
+    )
+
+
 def test_txn_idempotent_stream_sink(spark, tmp_path):
     tbl = str(tmp_path / "t")
     sink = dl.delta_stream_sink(tbl, "job1")
@@ -2037,6 +2156,10 @@ def _canon_state(st):
     }
 
 
+def _canon_actions(pairs):
+    return sorted(json.dumps({k: a}, sort_keys=True) for k, a in pairs)
+
+
 def test_checkpoint_replay_matches_json_replay(spark, tmp_path):
     """A checkpoint decoded column by column must replay to the SAME state
     as the JSON commits it summarizes — files (incl. DV structs and
@@ -2071,6 +2194,20 @@ def test_checkpoint_replay_matches_json_replay(spark, tmp_path):
             spark, tbl, target, max_actions_per_part=per_part
         )
         assert (len(parts) > 1) == (per_part == 2)
+        # Spark's own parquet reader loads every part with STATE_SCHEMA
+        # and gets the actions the engine's replay decodes.
+        by_spark = [
+            (kind, row[kind].asDict(recursive=True))
+            for row in spark.read.schema(dl.STATE_SCHEMA).parquet(*parts)
+            .collect()
+            for kind in dl.STATE_SCHEMA.names
+            if row[kind] is not None
+        ]
+        by_engine = list(
+            dl._checkpoint_actions(tbl, target, dl.STATE_SCHEMA.names)
+        )
+        assert len(by_engine) == len(by_spark) > 0
+        assert _canon_actions(by_spark) == _canon_actions(by_engine)
         after = dl._snapshot_state(spark, tbl)
         assert (after["checkpoint_version"], after["json_replayed"]) == (
             target, 0,
@@ -2078,6 +2215,62 @@ def test_checkpoint_replay_matches_json_replay(spark, tmp_path):
         assert _canon_state(after) == _canon_state(before), per_part
         for key in ("version", "partition_columns", "schema"):
             assert after[key] == before[key]
+
+
+def _group_job_descriptions(spark, group: str, control: str) -> list[str]:
+    """Descriptions of the jobs run under `group`, once the status store
+    has seen the group's last job (described `control`)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def descs():
+        out = []
+        for j in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+            d = store.job(j).description()
+            out.append(d.get() if d.isDefined() else None)
+        return out
+
+    deadline = time.time() + 30
+    got = descs()
+    while control not in got and time.time() < deadline:
+        time.sleep(0.05)
+        got = descs()
+    assert control in got, got
+    return got
+
+
+def _run_in_group(spark, group: str, fn, control: str = "control"):
+    """Run `fn` and then a one-job control action under job group
+    `group`; return `fn`'s result."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "under test")
+    try:
+        out = fn()
+        sc.setJobDescription(control)
+        sc.parallelize([1]).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out
+
+
+def test_checkpoint_write_runs_no_spark_job(spark, tmp_path):
+    """Checkpoint writes are driver-only, like replay: a single-file and
+    a multi-part checkpoint issue no Spark job between them (the control
+    action is the group's only job)."""
+    tbl = str(tmp_path / "t")
+    dl.delta_write(spark, _df(spark, 0, 10), tbl, partition_by=["g"])
+    dl.delta_write(spark, _df(spark, 10, 20, "b"), tbl, mode="append")
+    v = dl.latest_version(tbl)
+    group = f"ckpt-{os.getpid()}-{tmp_path.name}"
+    parts = _run_in_group(spark, group, lambda: (
+        dl.delta_checkpoint(spark, tbl, v, max_actions_per_part=2)
+        + dl.delta_checkpoint(spark, tbl, v)
+    ))
+    assert len(parts) > 2
+    assert _group_job_descriptions(spark, group, "control") == ["control"]
+    assert not [n for n in os.listdir(dl._log_dir(tbl)) if n.endswith(".tmp")]
+    assert _ks(dl.delta_snapshot(spark, tbl)) == list(range(20))
 
 
 def test_replay_skips_malformed_actions(spark, tmp_path):
@@ -2107,8 +2300,7 @@ def test_replay_skips_malformed_actions(spark, tmp_path):
     dl._commit(tbl, 0, actions)
     # A hand-written checkpoint at v1 holding the same malformed rows.
     dl._write_state_parquet(
-        spark, tbl, 1, [{k: a[k]} for a in actions for k in a],
-        dl._checkpoint_file(tbl, 1),
+        [{k: a[k]} for a in actions for k in a], dl._checkpoint_file(tbl, 1)
     )
     golden = {
         "files": [{

@@ -52,6 +52,22 @@ class TestBranchTruthTable:
         # top == threshold is NOT low confidence (strict <).
         assert classify(spark, 1, 0.6) == "SUCCESS"
 
+    def test_constant_provider_folds_on_the_driver(self, spark):
+        """A Python-constant provider or bypass flag is folded before the
+        Column is built: no `'mem0' = 'mem0'` term (the JVM warns on every
+        trivially true equality), and a data-driven operand survives."""
+        for bypassed in (True, False, None):
+            for provider in ("mem0", "supabase", None):
+                col = branching.branch_col(
+                    F.col("n"), F.col("top"), 0.6, bypassed, provider
+                )
+                assert "'mem0'" not in str(col), (bypassed, provider, str(col))
+        mixed = branching.branch_col(F.col("n"), F.col("top"), 0.6, True, F.col("p"))
+        assert "=(p, 'mem0')" in str(mixed)
+        flag = branching.branch_col(F.col("n"), F.col("top"), 0.6, F.col("b"), "mem0")
+        assert "WHEN b THEN 'RERANK_BYPASSED'" in str(flag)
+        assert classify(spark, 2, 0.85, bypassed=None, provider="mem0") == "SUCCESS"
+
     def test_actions(self, spark):
         for branch, action in branching.BRANCH_ACTION.items():
             row = (

@@ -9,8 +9,13 @@ document store.
 Stage map (SURVEY.md §3.1):
   route (driver-side Python)      -> source + plan-shape selection
   none-provider early exit        -> constant EMPTY_SET envelope
-  scan + score + top-k            -> documents parquet, overlap rescoring
-  branch classify + envelope      -> when() cascade + struct assembly
+  scan + score + top-k            -> session-resident corpus (documents read,
+                                     partitioned and tokenized once per
+                                     session, keyed by the files' stamps),
+                                     overlap rescoring, TakeOrderedAndProject
+  [external rerank]               -> window count over the top-k, re-sort
+  branch classify + envelope      -> when() cascade + struct assembly, Column
+                                     lists built once per route shape
 """
 
 from __future__ import annotations

@@ -28,15 +28,22 @@ def norm_tokens(col: Column | str) -> Column:
     )
 
 
+def token_overlap(query: str | Column, tokens: Column) -> Column:
+    """Number of distinct query terms in ``tokens``, an array already built
+    by :func:`norm_tokens` (so a corpus tokenized once is not tokenized
+    again per query). ``query`` may be a Python string (plan-time constant,
+    folded by the optimizer) or a Column."""
+    q = F.lit(query) if isinstance(query, str) else query
+    return F.size(F.array_intersect(norm_tokens(q), tokens))
+
+
 def overlap_count(query: str | Column, content: Column | str) -> Column:
     """Number of distinct query terms that appear in the content's token set
-    (reference voyage.py:70-73: distinct-term membership count). ``query``
-    may be a Python string (plan-time constant) or a Column."""
-    q = F.lit(query) if isinstance(query, str) else query
-    return F.size(F.array_intersect(norm_tokens(q), norm_tokens(content)))
+    (reference voyage.py:70-73: distinct-term membership count)."""
+    return token_overlap(query, norm_tokens(content))
 
 
-def overlap_score(query: str | Column, content: Column | str, base: Column) -> Column:
+def overlap_score(query: str | Column, tokens: Column, base: Column) -> Column:
     """Reference rerank formula: ``min(1.0, base + 0.05 * overlap)``
-    (voyage.py:74)."""
-    return F.least(F.lit(1.0), base + F.lit(0.05) * overlap_count(query, content))
+    (voyage.py:74), over a :func:`norm_tokens` array."""
+    return F.least(F.lit(1.0), base + F.lit(0.05) * token_overlap(query, tokens))

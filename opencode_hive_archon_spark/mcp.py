@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from opencode_hive_archon_spark.config import RetrievalRequest
 from opencode_hive_archon_spark.engine import RecallEngine
-from opencode_hive_archon_spark.plans.scenarios import _replay_frame, get_scenario_by_id
+from opencode_hive_archon_spark.plans.scenarios import get_scenario_by_id, replay_frame
 
 
 class MCPServer:
@@ -116,7 +116,7 @@ class MCPServer:
         if scenario is None:
             return {"success": False, "error": f"Scenario {scenario_id} not found"}
         row = (
-            _replay_frame(self.spark)
+            replay_frame(self.spark)
             .filter(F.col("id") == F.lit(scenario_id))
             .first()
         )

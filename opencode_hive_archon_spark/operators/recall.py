@@ -9,6 +9,17 @@ JVM-side; top-k compiles to ``TakeOrderedAndProject`` (no global sort, no
 driver collect — at 100 TB the scan is embarrassingly parallel and only k
 rows ever leave the executors).
 
+Serving cost: the corpus is session-resident (``recall_corpus``). The
+documents are read, partitioned once at build time and tokenized once,
+then kept through ``session.materialize_keyed`` under a key that carries
+the files' ``(name, size, mtime_ns)`` stamps, so a rewritten table is
+rebuilt (and its old entry dropped), never served stale. A request scores
+the cached rows with one ``array_intersect`` against its query's tokens.
+``build_envelope`` builds its Column lists once per route shape (memo keyed
+on the session's applicationId and every shape parameter), so a request
+only applies them to its own top-k. The registered R-queries and the MCP
+path share these builders.
+
 Determinism: every ordering carries a unique tie-break key (doc_id) so
 results are total-ordered and oracle hash-stable (SURVEY.md §7 risk register).
 """
@@ -16,12 +27,14 @@ results are total-ordered and oracle hash-stable (SURVEY.md §7 risk register).
 from __future__ import annotations
 
 import json
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from opencode_hive_archon_spark import session
 from opencode_hive_archon_spark.config import default_feature_flags, default_provider_status
-from opencode_hive_archon_spark.functions.text import overlap_count, overlap_score
+from opencode_hive_archon_spark.functions.text import norm_tokens, overlap_count, overlap_score
 from opencode_hive_archon_spark.plans import branching
 from opencode_hive_archon_spark.spec import QuerySpec
 
@@ -57,22 +70,59 @@ FLAGS_JSON = _snapshot_json(default_feature_flags())
 STATUS_JSON = _snapshot_json(default_provider_status())
 
 
+def _table_stamp(path: str) -> tuple:
+    """``(name, size, mtime_ns)`` of every file of a parquet table, a single
+    file or a directory of part files, read with ``os`` on the driver. Any
+    rewrite of the table changes it."""
+    if os.path.isdir(path):
+        return tuple(sorted(
+            (e.name, st.st_size, st.st_mtime_ns)
+            for e in os.scandir(path)
+            if e.is_file()
+            for st in (e.stat(),)
+        ))
+    st = os.stat(path)
+    return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+
+
+def recall_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session-resident document corpus every recall route scores:
+    ``(id, content, source, toks)`` with ``toks = norm_tokens(text)``.
+
+    Read once, partitioned once (round-robin over the default parallelism)
+    and tokenized once per session and per version of the table: the key
+    carries the files' stamps, so a rewritten ``documents.parquet`` is never
+    served stale, and the old version's entry is unpersisted when the new
+    one is built. Requests then scan cached rows and intersect token
+    arrays; no request reads the parquet or shuffles the documents."""
+    path = os.path.abspath(f"{sf_dir}/documents.parquet")
+    key = ("recall_corpus", path, _table_stamp(path))
+    session.drop_keyed(spark, key[:2], keep=key)
+
+    def build() -> DataFrame:
+        docs = spark.read.parquet(path).repartition(spark.sparkContext.defaultParallelism)
+        return docs.select(
+            F.col("doc_id").alias("id"),
+            F.col("text").alias("content"),
+            F.col("source"),
+            norm_tokens("text").alias("toks"),
+        )
+
+    return session.materialize_keyed(spark, key, build)
+
+
 def scored_candidates(
     spark: SparkSession,
     sf_dir: str,
     query: str = DEFAULT_QUERY,
     base: float = BASE_CONFIDENCE,
 ) -> DataFrame:
-    """documents scan -> overlap rescoring. Column-pruned scan: only
-    (doc_id, text, source) are read from parquet."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return docs.select(
-        F.col("doc_id").alias("id"),
-        F.col("text").alias("content"),
-        F.col("source").alias("source"),
-        overlap_score(query, F.col("text"), F.lit(float(base))).alias("confidence"),
+    """corpus -> overlap rescoring against the pre-tokenized documents."""
+    return recall_corpus(spark, sf_dir).select(
+        "id",
+        "content",
+        "source",
+        overlap_score(query, F.col("toks"), F.lit(float(base))).alias("confidence"),
     )
 
 
@@ -175,28 +225,58 @@ def build_envelope(
     when the real set is empty; EMPTY_SET empties the set (post-aggregation,
     so rerank metadata still reflects the real pre-force candidates).
     """
-    meta = F.col("meta_json") if "meta_json" in topk.columns else F.lit("{}")
-    if force_branch == branching.LOW_CONFIDENCE:
-        topk = topk.withColumn("confidence", F.lit(0.4))
+    has_meta = "meta_json" in topk.columns
+    key = (
+        topk.sparkSession.sparkContext.applicationId,
+        provider, threshold, rerank_bypassed, mode, rerank_policy,
+        flags_json, status_json, id_quoted, force_branch, validation_mode, has_meta,
+    )
+    cols = _ENVELOPE_COLUMNS.get(key)
+    if cols is None:
+        if len(_ENVELOPE_COLUMNS) >= _ENVELOPE_MEMO_MAX:
+            _ENVELOPE_COLUMNS.clear()
+        cols = _ENVELOPE_COLUMNS[key] = _envelope_columns(*key[1:])
+    agg, staged, out = cols
+    return topk.agg(*agg).select(*staged).select(*out)
+
+
+# Envelope Column lists per route shape, keyed on the session's
+# applicationId and every build_envelope parameter: a request rebuilds no
+# Column tree, it only applies the three lists to its own top-k. Shapes are
+# few (provider x policy x forced branch); the bound only guards callers
+# that vary the threshold freely.
+_ENVELOPE_COLUMNS: dict[tuple, tuple[list, list, list]] = {}
+_ENVELOPE_MEMO_MAX = 256
+
+
+def _envelope_columns(
+    provider, threshold, rerank_bypassed, mode, rerank_policy,
+    flags_json, status_json, id_quoted, force_branch, validation_mode, has_meta,
+) -> tuple[list, list, list]:
+    """The aggregate, staged and output Column lists of ``build_envelope``
+    for one route shape."""
+    meta = F.col("meta_json") if has_meta else F.lit("{}")
+    # LOW_CONFIDENCE rewrites every candidate confidence to 0.4.
+    conf = F.lit(0.4) if force_branch == branching.LOW_CONFIDENCE else F.col("confidence")
     id_fmt = '"%s"' if id_quoted else "%d"
     cand_json = F.format_string(
         '{"id":' + id_fmt + ',"content":"%s","source":"%s","confidence":%.2f,"metadata":%s}',
         F.col("id"),
         F.col("content"),
         F.col("source"),
-        F.col("confidence"),
+        conf,
         meta,
     )
     # sort_array over (neg-rank keys, json) keeps the serialized order total.
-    agg = topk.agg(
-        F.coalesce(F.max("confidence"), F.lit(0.0)).alias("top_confidence"),
+    agg = [
+        F.coalesce(F.max(conf), F.lit(0.0)).alias("top_confidence"),
         F.count(F.lit(1)).alias("n_pre"),
         F.concat(
             F.lit("["),
             F.array_join(
                 F.transform(
                     F.sort_array(
-                        F.collect_list(F.struct((-F.col("confidence")).alias("nc"), F.col("id"), cand_json.alias("j")))
+                        F.collect_list(F.struct((-conf).alias("nc"), F.col("id"), cand_json.alias("j")))
                     ),
                     lambda s: s["j"],
                 ),
@@ -204,7 +284,7 @@ def build_envelope(
             ),
             F.lit("]"),
         ).alias("candidates_json"),
-    )
+    ]
     # rerank metadata derives from the PRE-force candidate set: the reference
     # computes it in step 3 from the real candidates, before any forced-branch
     # rewrite (including EMPTY_SET truncation), so n_pre here is always the
@@ -227,13 +307,13 @@ def build_envelope(
         content = (
             "Forced rerank bypass" if force_branch == branching.RERANK_BYPASSED else "Forced success"
         )
-        conf = 0.85 if force_branch == branching.RERANK_BYPASSED else 0.9
+        forced_conf = 0.85 if force_branch == branching.RERANK_BYPASSED else 0.9
         synth = (
             f'[{{"id":"forced","content":"{content}","source":"{provider}",'
-            f'"confidence":{conf:.2f},"metadata":{{}}}}]'
+            f'"confidence":{forced_conf:.2f},"metadata":{{}}}}]'
         )
         empty = F.col("n_pre") == 0
-        top_c = F.when(empty, F.lit(conf)).otherwise(top_c)
+        top_c = F.when(empty, F.lit(forced_conf)).otherwise(top_c)
         count_c = F.when(empty, F.lit(1).cast("long")).otherwise(count_c)
         json_c = F.when(empty, F.lit(synth)).otherwise(json_c)
     elif force_branch == branching.LOW_CONFIDENCE:
@@ -242,13 +322,13 @@ def build_envelope(
         # Post-agg emptying keeps n_pre (and the step-3 rerank metadata
         # derived from it) computed over the real candidate set.
         top_c, count_c, json_c = F.lit(0.0), F.lit(0).cast("long"), F.lit("[]")
-    staged = agg.select(
+    staged = [
         top_c.alias("top_confidence"),
         count_c.alias("candidate_count"),
         json_c.alias("candidates_json"),
         rt.alias("rerank_type"),
         bypass.alias("rerank_bypass_reason"),
-    )
+    ]
     forced = force_branch in branching.BRANCH_ACTION
     branch = (
         F.lit(force_branch)
@@ -257,7 +337,7 @@ def build_envelope(
             F.col("candidate_count"), F.col("top_confidence"), threshold, rerank_bypassed, provider
         )
     )
-    out = staged.select(
+    out = [
         F.lit(provider).alias("provider"),
         branching.rerank_applied_col(branch, rerank_bypassed).alias("rerank_applied"),
         "top_confidence",
@@ -278,14 +358,13 @@ def build_envelope(
         "rerank_bypass_reason",
         F.lit(flags_json).alias("feature_flags_json"),
         F.lit(status_json).alias("provider_status_json"),
-    )
+    ]
     if validation_mode:
-        out = out.select(
-            "*",
+        out += [
             F.lit(True).alias("validation_mode"),
             F.lit(force_branch).cast("string").alias("forced_branch"),
-        )
-    return out
+        ]
+    return agg, staged, out
 
 
 def recall_envelope(
@@ -378,15 +457,9 @@ def supabase_native_candidates(
     prior with an exact-binary step) — the EXTERNAL rerank stage is what
     injects query relevance on this path (reference memory.py returns
     provider confidences untouched when rerank=True is mem0-only)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    native = F.lit(SUPA_BASE) + (F.col("doc_id") % 5).cast("double") * F.lit(SUPA_STEP)
-    return docs.select(
-        F.col("doc_id").alias("id"),
-        F.col("text").alias("content"),
-        F.col("source").alias("source"),
-        native.alias("confidence"),
+    native = F.lit(SUPA_BASE) + (F.col("id") % 5).cast("double") * F.lit(SUPA_STEP)
+    return recall_corpus(spark, sf_dir).select(
+        "id", "content", "source", native.alias("confidence")
     )
 
 
@@ -396,20 +469,23 @@ def external_rerank_stage(topk: DataFrame, query: str, top_k: int) -> DataFrame:
     desc, re-truncate to top_k, and stamp rerank_adjusted into each
     candidate's metadata. The 0/1-candidate bypass (voyage.py:36-45) is a
     data-dependent branch, so it is compiled into the plan as a CASE on the
-    candidate count (1-row broadcast join — never a driver round-trip).
+    candidate count, a window count over the (at most k) top-k rows, so
+    the top-k is evaluated once and never leaves the JVM. The window is
+    partitioned by ``spark_partition_id()``: a top-k is one partition, so
+    that counts every candidate and plans no exchange, where an empty or
+    constant partition spec would be planned as a move to one partition
+    (and logged as such on every request).
 
     Tie-break: the reference's stable sort preserves provider order on equal
     adjusted scores; the engine total-orders by (confidence desc, id asc) —
     deterministic on both engines, mirrored in the oracle."""
-    stats = topk.agg(F.count(F.lit(1)).alias("n_cand"))
     adj = F.least(
         F.lit(1.0),
         F.col("confidence") + F.lit(0.05) * overlap_count(query, F.col("content")),
     )
-    applies = F.col("n_cand") > 1
+    applies = F.count(F.lit(1)).over(Window.partitionBy(F.spark_partition_id())) > 1
     return (
-        topk.crossJoin(F.broadcast(stats))
-        .select(
+        topk.select(
             "id",
             "content",
             "source",

@@ -179,6 +179,20 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order dependence), so the DuckDB oracle mirrors it exactly.
     The exhaustive baseline lives in `_all_pairs_cosine` (tests assert
     recall of this plan against it).
+
+    Cache footprint of the session-keyed ``lsh_sigs_emb`` frame: it holds
+    one row per (vector, LSH table), so every embedding is in it
+    L = ``LSH_TABLES`` = 10 times. ``getRDDStorageInfo`` (Spark 4.1.2):
+    sf0.01, 500 64-d vectors (128,000 raw embedding bytes) -> 158,034
+    bytes; sf0.1, 2,000 vectors (512,000 raw bytes) -> 629,852 bytes,
+    against 36,639 for a sig-only (vec_id, label, table, sig) frame. The
+    L copies cost about 1.2x the raw bytes rather than L x only because
+    PySpark's MEMORY_AND_DISK is serialized, ``spark.rdd.compress`` is on
+    (a PySpark default), and posexplode emits a vector's L rows next to
+    each other, so the block codec folds the copies. A frame of the same
+    shape at sf0.1 measured 5.6 MB deserialized and 5.2 MB with the copies
+    reordered apart: a change to the storage level, the codec or the row
+    order brings the L x back and must re-measure this.
     """
     import pyarrow as pa
 

@@ -19,6 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from opencode_hive_archon_spark import session
 from opencode_hive_archon_spark.config import RetrievalRequest
 from opencode_hive_archon_spark.functions.text import overlap_count
 from opencode_hive_archon_spark.plans import branching
@@ -170,10 +171,20 @@ FROM scenarios WHERE has_tag GROUP BY 1, 2
 """
 
 
+def replay_frame(spark: SparkSession) -> DataFrame:
+    """The set-wise replay core, computed once per session: one row per
+    scenario with routing facts, confidence aggregate and the actual
+    branch/action. It depends only on the module's scenario constants, so
+    the ``scenario_replay`` query and every MCP ``validate_branch`` call
+    read one keyed materialization of 13 rows in one partition (a lookup
+    is one single-task job)."""
+    return session.materialize_keyed(
+        spark, ("scenario_replay",), lambda: _replay_frame(spark).coalesce(1)
+    )
+
+
 def _replay_frame(spark: SparkSession) -> DataFrame:
-    """The set-wise replay core: one row per scenario with routing facts,
-    confidence aggregate and the actual branch/action. Shared by the
-    ``scenario_replay`` query and the MCP ``validate_branch`` adapter."""
+    """Plan the replay; callers read it through :func:`replay_frame`."""
     routed = []
     for (sid, _desc, query, mode, status, flags, eb, ea, _ert, tags) in SCENARIOS:
         provider, opts = route_retrieval(RetrievalRequest(query=query, mode=mode),
@@ -266,7 +277,7 @@ def scenario_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R19: replay every scenario through the engine pipeline set-wise;
     emit expected-vs-actual branch/action with match booleans."""
     return (
-        _replay_frame(spark)
+        replay_frame(spark)
         .select(
             "id", "expected_branch", "actual_branch",
             (F.col("expected_branch") == F.col("actual_branch")).alias("branch_match"),

@@ -191,6 +191,22 @@ def materialize_keyed(spark: SparkSession, key: tuple, builder) -> DataFrame:
     return df
 
 
+def drop_keyed(spark: SparkSession, prefix: tuple, keep: tuple) -> None:
+    """Unpersist and forget this session's keyed entries whose key starts
+    with ``prefix``, except ``keep``. A versioned entry (a key ending in a
+    stamp of its inputs) calls this before ``materialize_keyed`` so that
+    only its current version stays cached."""
+    app = spark.sparkContext.applicationId
+    stale = [
+        k for k in _KEYED
+        if k[0] == app and k[1 : 1 + len(prefix)] == prefix and k[1:] != keep
+    ]
+    for k in stale:
+        df = _KEYED.pop(k)
+        df.unpersist()
+        _PERSISTED[:] = [d for d in _PERSISTED if d is not df]
+
+
 def normalize_timestamps(df: DataFrame) -> DataFrame:
     """Cast every TIMESTAMP_NTZ column to TIMESTAMP.
 

@@ -136,3 +136,97 @@ class TestScenarioAPI:
             rows = SC.scenario_tag_filter(spark, sf_dir, tag=tag).collect()
             n = sum(r["n_scenarios"] for r in rows)
             assert n == len(SC.get_scenarios_by_tag(tag))
+
+
+def _request_jobs(spark, action):
+    """Run ``action`` under its own job group and return (result, the ids of
+    the Spark jobs it ran). A control job in a second group runs after it:
+    job events reach the status store in order, so once the control job is
+    visible every job of the request is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    group, control = f"request-{tag}", f"control-{tag}"
+    sc.setJobGroup(group, "request")
+    try:
+        out = action()
+        sc.setJobGroup(control, "control")
+        sc.parallelize([1]).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(control) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(control), "control job never reached the status store"
+    return out, sorted(tracker.getJobIdsForGroup(group))
+
+
+def _shuffle_rows_per_task(spark, job_ids):
+    """Max shuffle-write records per map task over the jobs' stages."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    worst = 0.0
+    for jid in job_ids:
+        ids = store.job(jid).stageIds()
+        for i in range(ids.size()):
+            try:
+                st = store.lastStageAttempt(ids.apply(i))
+            except Exception:  # never attempted: a skipped stage
+                continue
+            if st.status().toString() != "SKIPPED" and st.numTasks():
+                worst = max(worst, st.shuffleWriteRecords() / st.numTasks())
+    return worst
+
+
+class TestPerRequestPlanCost:
+    """A warm request scans the session-resident corpus: one job for mem0,
+    at most two for supabase, one single-task lookup for validate_branch,
+    and no stage shuffles the documents (the only shuffle is the top-k's,
+    at most k rows per map task)."""
+
+    @pytest.fixture(scope="class", autouse=True)
+    def warm(self, server):
+        server.recall_search("fast hash join")
+        server.recall_search("fast hash join", provider_override="supabase")
+        server.validate_branch("S001")
+
+    @pytest.mark.parametrize("override, max_jobs", [(None, 1), ("supabase", 2)])
+    def test_recall_search_jobs(self, spark, server, override, max_jobs):
+        out, jobs = _request_jobs(
+            spark, lambda: server.recall_search("table scan merge", top_k=5,
+                                                provider_override=override)
+        )
+        assert out["candidates"]
+        assert 1 <= len(jobs) <= max_jobs, jobs
+        assert _shuffle_rows_per_task(spark, jobs) <= 5
+
+    def test_validate_branch_jobs(self, spark, server):
+        out, jobs = _request_jobs(spark, lambda: server.validate_branch("S004"))
+        assert out["branch_match"] and out["action_match"]
+        assert len(jobs) <= 1, jobs
+        assert _shuffle_rows_per_task(spark, jobs) == 0
+
+    def test_envelope_columns_built_once_per_shape(self, spark, server, monkeypatch):
+        """Two searches of one route shape with different queries and top_k
+        look up one memo key, which carries the session's applicationId,
+        and the second builds no Column."""
+        from opencode_hive_archon_spark.operators import recall as R
+
+        looked, built = [], []
+
+        class Recording(dict):
+            def get(self, key, default=None):
+                looked.append(key)
+                return super().get(key, default)
+
+        real = R._envelope_columns
+        monkeypatch.setattr(R, "_ENVELOPE_COLUMNS", Recording(R._ENVELOPE_COLUMNS))
+        monkeypatch.setattr(R, "_envelope_columns", lambda *a: built.append(a) or real(*a))
+        server.recall_search("fast hash join", top_k=3)
+        n_built = len(built)
+        server.recall_search("table scan merge", top_k=10)
+        assert len(built) == n_built <= 1
+        assert len(looked) == 2 and looked[0] == looked[1]
+        assert looked[0][0] == spark.sparkContext.applicationId

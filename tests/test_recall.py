@@ -269,3 +269,51 @@ class TestRecallEngine:
             RetrievalRequest(query="fast hash join", mode="conversation")
         )
         assert "validation_mode" not in df.columns
+
+
+def test_rewritten_documents_replace_the_cached_corpus(spark, tmp_path):
+    """The session-resident corpus is keyed by the documents files'
+    stamps: a rewritten table is served from its new text, and the old
+    version's entry is unpersisted and dropped, so one entry per path
+    stays cached."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opencode_hive_archon_spark import session
+    from opencode_hive_archon_spark.mcp import MCPServer
+
+    path = tmp_path / "documents.parquet"
+
+    def write(texts):
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": texts,
+                "source": ["src0"] * len(texts),
+            }),
+            path,
+        )
+
+    def corpus_entries():
+        return {
+            k: df for k, df in session._KEYED.items()
+            if k[1:3] == ("recall_corpus", os.path.abspath(path))
+        }
+
+    server = MCPServer(spark, str(tmp_path))
+    write(["alpha beta", "gamma delta", "alpha"])
+    first = server.recall_search("alpha", top_k=1)
+    assert [c["content"] for c in first["candidates"]] == ["alpha beta"]
+    (old,) = corpus_entries().values()
+
+    write(["zeta eta", "theta alpha iota", "kappa"])
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))  # a coarse clock
+    second = server.recall_search("alpha", top_k=1)
+    assert [c["content"] for c in second["candidates"]] == ["theta alpha iota"]
+    assert second["confidence"] == 0.55
+    entries = corpus_entries()
+    assert len(entries) == 1
+    assert old not in entries.values() and not old.is_cached

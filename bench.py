@@ -27,6 +27,11 @@ family/shape: scenarios, ANN, simhash, UDTF, streaming variants, source
 round-trip, ...) gets warm-up + a single timed pass — full per-family
 timing visibility at roughly half the added wall-clock of a full
 median-of-3.
+
+A focused run names its queries: ``python bench.py q1 q2 ...`` times only
+those, with the same calibration, warm-up and median of
+SPARK_GRAFT_BENCH_ITERS passes, skips tier 2, and prints the same stdout
+line without rewriting BENCH_DETAIL.json.
 """
 
 from __future__ import annotations
@@ -183,13 +188,18 @@ def try_run(specs, name, spark, sf_dir, failures) -> float | None:
     return time.perf_counter() - t0
 
 
-def main() -> None:
+def main(names: list[str] | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
+    specs = registry.all_specs()
+    unknown = [n for n in names or [] if n not in specs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {', '.join(unknown)}")
     spark = get_spark("bench")
 
-    specs = registry.all_specs()
+    # The headline set, or the named queries of a focused run.
+    head = names or BENCH_QUERIES
     # Separate books for warm-up vs timed passes: a warm-up-only hiccup is
     # reported as such, while ANY timed-pass failure stays a failure — even
     # when other iterations produced samples (a flaky query must not read
@@ -212,12 +222,12 @@ def main() -> None:
 
     # Untimed warm-up pass: the first execution of each query absorbs
     # whole-stage-codegen compilation and shared-intermediate cache fills.
-    for name in BENCH_QUERIES:
+    for name in head:
         try_run(specs, name, spark, sf_dir, warmup_failures)
 
-    samples: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
+    samples: dict[str, list[float]] = {name: [] for name in head}
     for _ in range(iters):
-        for name in BENCH_QUERIES:
+        for name in head:
             elapsed = try_run(specs, name, spark, sf_dir, failures)
             if elapsed is not None:
                 samples[name].append(elapsed)
@@ -228,8 +238,8 @@ def main() -> None:
         if ts
     }
 
-    # Tier 2: warm-up + one timed pass per query.
-    tier2_names = _tier2_names()
+    # Tier 2: warm-up + one timed pass per query (a focused run has none).
+    tier2_names = [] if names else _tier2_names()
     for name in tier2_names:
         try_run(specs, name, spark, sf_dir, warmup_failures)
     tier2_timings: dict[str, float] = {}
@@ -263,7 +273,7 @@ def main() -> None:
     # If ANY tier-1 query has no samples the headline is incomparable with
     # the baseline's query set, so it reports null rather than a silently
     # smaller (faster-looking) sum.
-    tier1_missing = sorted(n for n in BENCH_QUERIES if n not in timings)
+    tier1_missing = sorted(n for n in head if n not in timings)
     total = None if tier1_missing else round(sum(timings.values()), 3)
     total_all = round(sum(all_timings.values()), 3)
     detail = {
@@ -284,11 +294,12 @@ def main() -> None:
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
-    try:
-        with open(detail_path, "w") as fh:
-            json.dump(detail, fh, indent=1, sort_keys=True)
-    except OSError as exc:
-        print(f"could not write {detail_path}: {exc}", file=sys.stderr)
+    if not names:
+        try:
+            with open(detail_path, "w") as fh:
+                json.dump(detail, fh, indent=1, sort_keys=True)
+        except OSError as exc:
+            print(f"could not write {detail_path}: {exc}", file=sys.stderr)
     print(json.dumps(detail), file=sys.stderr, flush=True)
 
     # Final stdout line: must stay well under the driver's 2,000-char stdout
@@ -338,4 +349,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -329,10 +329,11 @@ def _envelope_columns(
         rt.alias("rerank_type"),
         bypass.alias("rerank_bypass_reason"),
     ]
-    forced = force_branch in branching.BRANCH_ACTION
+    # A forced branch stays a Python constant, so the branching columns
+    # pick their arm on the driver.
     branch = (
-        F.lit(force_branch)
-        if forced
+        force_branch
+        if force_branch in branching.BRANCH_ACTION
         else branching.branch_col(
             F.col("candidate_count"), F.col("top_confidence"), threshold, rerank_bypassed, provider
         )
@@ -345,7 +346,7 @@ def _envelope_columns(
         branching.threshold_met_col(branch, F.col("top_confidence"), threshold).alias(
             "threshold_met"
         ),
-        branch.alias("branch"),
+        F.lit(branch).alias("branch"),
         branching.action_col(branch).alias("action"),
         branching.reason_col(
             branch, F.col("candidate_count"), F.col("top_confidence"), threshold

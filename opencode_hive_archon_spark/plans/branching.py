@@ -84,36 +84,59 @@ def branch_col(
     return cascade.otherwise(F.lit(SUCCESS))
 
 
-def action_col(branch: Column) -> Column:
-    """Branch -> next action (the emitters' action constants)."""
+def _by_branch(branch, arms, default) -> Column:
+    """CASE over the branch: the value of the first arm whose codes hold
+    it, else `default`. A Python-constant branch (a forced branch in
+    validation mode) picks its arm on the driver, so no `'X' = 'X'`
+    predicate reaches the plan — the JVM warns on every trivially true
+    equality."""
+    if not isinstance(branch, Column):
+        return next((val for codes, val in arms if branch in codes), default)
     cascade = None
-    for code, action in BRANCH_ACTION.items():
-        cond = branch == code
-        cascade = F.when(cond, action) if cascade is None else cascade.when(cond, action)
-    return cascade.otherwise(F.lit(None).cast("string"))
+    for codes, val in arms:
+        cond = branch == codes[0] if len(codes) == 1 else branch.isin(*codes)
+        cascade = F.when(cond, val) if cascade is None else cascade.when(cond, val)
+    return cascade.otherwise(default)
 
 
-def threshold_met_col(branch: Column, top_confidence: Column, threshold) -> Column:
-    """Per-emitter threshold_met semantics (see module docstring)."""
-    return (
-        F.when(branch.isin(EMPTY_SET, LOW_CONFIDENCE, CHANNEL_MISMATCH), F.lit(False))
-        .when(branch == RERANK_BYPASSED, top_confidence >= F.lit(_BYPASS_FIXED_THRESHOLD))
-        .otherwise(F.lit(True))  # SUCCESS asserts threshold_met=True (:146)
+# Branches whose emitters force threshold_met and rerank_applied false.
+_FALLBACKS = (EMPTY_SET, LOW_CONFIDENCE, CHANNEL_MISMATCH)
+
+
+def action_col(branch) -> Column:
+    """Branch -> next action (the emitters' action constants). `branch`
+    is a Column or, for a forced branch, its Python code (so for every
+    function below)."""
+    return _by_branch(
+        branch,
+        [((code,), F.lit(action)) for code, action in BRANCH_ACTION.items()],
+        F.lit(None).cast("string"),
     )
 
 
-def rerank_applied_col(branch: Column, rerank_bypassed) -> Column:
+def threshold_met_col(branch, top_confidence: Column, threshold) -> Column:
+    """Per-emitter threshold_met semantics (see module docstring)."""
+    return _by_branch(
+        branch,
+        [
+            (_FALLBACKS, F.lit(False)),
+            ((RERANK_BYPASSED,), top_confidence >= F.lit(_BYPASS_FIXED_THRESHOLD)),
+        ],
+        F.lit(True),  # SUCCESS asserts threshold_met=True (:146)
+    )
+
+
+def rerank_applied_col(branch, rerank_bypassed) -> Column:
     """Per-emitter rerank_applied semantics (fallbacks.py:33,62,90,119,149,198)."""
-    rerank_bypassed = _lit(rerank_bypassed)
-    return (
-        F.when(branch.isin(EMPTY_SET, LOW_CONFIDENCE, CHANNEL_MISMATCH), F.lit(False))
-        .when(branch == RERANK_BYPASSED, F.lit(True))
-        .otherwise(rerank_bypassed)
+    return _by_branch(
+        branch,
+        [(_FALLBACKS, F.lit(False)), ((RERANK_BYPASSED,), F.lit(True))],
+        _lit(rerank_bypassed),
     )
 
 
 def reason_col(
-    branch: Column,
+    branch,
     count: Column,
     top_confidence: Column,
     threshold,
@@ -125,42 +148,40 @@ def reason_col(
     CHANNEL_MISMATCH interpolates the expected channel — the reference only
     reaches that emitter through the forced-branch path, which passes
     "test_channel" (recall.py:191-194)."""
-    threshold = _lit(threshold)
-    return (
-        F.when(branch == EMPTY_SET, F.lit("No context candidates retrieved from any provider"))
-        .when(
-            branch == LOW_CONFIDENCE,
-            F.format_string(
-                "Top confidence %.2f below threshold %.2f", top_confidence, threshold
+    return _by_branch(
+        branch,
+        [
+            ((EMPTY_SET,), F.lit("No context candidates retrieved from any provider")),
+            (
+                (LOW_CONFIDENCE,),
+                F.format_string(
+                    "Top confidence %.2f below threshold %.2f",
+                    top_confidence,
+                    _lit(threshold),
+                ),
             ),
-        )
-        .when(
-            branch == CHANNEL_MISMATCH,
-            F.lit(f"Retrieved context doesn't match expected channel: {expected_channel}"),
-        )
-        .when(
-            branch == RERANK_BYPASSED,
-            F.lit("Provider-native rerank applied, external rerank bypassed per policy"),
-        )
-        .otherwise(F.format_string("Retrieved %d high-confidence candidates", count))
+            (
+                (CHANNEL_MISMATCH,),
+                F.lit(f"Retrieved context doesn't match expected channel: {expected_channel}"),
+            ),
+            (
+                (RERANK_BYPASSED,),
+                F.lit("Provider-native rerank applied, external rerank bypassed per policy"),
+            ),
+        ],
+        F.format_string("Retrieved %d high-confidence candidates", count),
     )
 
 
-def suggestion_col(branch: Column) -> Column:
+def suggestion_col(branch) -> Column:
     """NextAction.suggestion per emitter (fallbacks.py:41,71,100,128,158):
     non-null for the three fallback branches, NULL for proceed branches."""
-    return (
-        F.when(
-            branch == EMPTY_SET,
-            F.lit("Ask user to rephrase query or provide more context"),
-        )
-        .when(
-            branch == LOW_CONFIDENCE,
-            F.lit("Request clarification on query intent or narrow scope"),
-        )
-        .when(
-            branch == CHANNEL_MISMATCH,
-            F.lit("Escalate to human or trigger intent reclassification"),
-        )
-        .otherwise(F.lit(None).cast("string"))
+    return _by_branch(
+        branch,
+        [
+            ((EMPTY_SET,), F.lit("Ask user to rephrase query or provide more context")),
+            ((LOW_CONFIDENCE,), F.lit("Request clarification on query intent or narrow scope")),
+            ((CHANNEL_MISMATCH,), F.lit("Escalate to human or trigger intent reclassification")),
+        ],
+        F.lit(None).cast("string"),
     )

@@ -59,6 +59,20 @@ the subset needed for a correct single-cluster lakehouse table:
 - **Partitioned tables**: ``partitionBy`` writes keep the hive layout,
   ``partitionValues`` ride the add actions, and snapshot reads go through
   ``basePath`` so partition pruning still applies to the returned frame.
+- **One batch reader**: ``_read_state`` turns any list of file actions
+  into rows — plain files through ``_read_paths``, DV'd files through
+  ``_scan_with_row_index`` — with one scan per data root, so a shallow
+  clone's external files get their own ``basePath``. Snapshots, time
+  travel and both sides of the change feed read through it; a DV
+  supersede is one ``_scan_with_row_index`` over the superseded files
+  semi-joined to broadcast (file, row index) pairs.
+- **One commit walk**: ``_commit_changes`` yields the data-changing
+  (tag, action) pairs of a commit range and raises the named errors
+  for a GC'd commit, a vacuumed data file or a metaData action whose
+  physical layout differs from the schema served. ``delta_changes``
+  and both Structured Streaming sources (``delta_cdf_stream``, and
+  ``delta_log_stream``, which is the CDF reader serving adds only)
+  plan from it.
 
 100 TB notes: data files are written by executors (``df.write.parquet``)
 — the log carries only metadata. A live file list past
@@ -90,6 +104,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceStreamReader,
+    InputPartition,
+)
 
 from opencode_hive_archon_spark.session import read_table
 from opencode_hive_archon_spark.spec import QuerySpec
@@ -471,35 +490,6 @@ def _same_shape(a_json: str | None, b_json: str) -> bool:
         return True
     to_simple = lambda s: T.StructType.fromJson(json.loads(s)).simpleString()  # noqa: E731
     return to_simple(a_json) == to_simple(b_json)
-
-
-def _stream_serveable_schema_change(
-    latest_json: str, seen_json: str, mapped: bool = False
-) -> bool:
-    """Can a stream keep serving across a metaData action carrying
-    `seen_json` while its declared output schema came from
-    `latest_json`? Unmapped: only an identical shape (the classic
-    refusal). Mapped (r18): renames / drops / the enable commit itself
-    are metadata-only — files are read by PHYSICAL name and projected
-    to the LATEST logical schema executor-side — so the change is
-    serveable only when the PHYSICAL shape (physicalName -> type) is
-    IDENTICAL: a rename changes neither, the enable commit maps each
-    name to itself, but a column add/drop/type change (overwriteSchema,
-    MERGE evolution) still fails loudly — restart from a snapshot, the
-    same contract as unmapped."""
-    if not mapped:
-        return _same_shape(latest_json, seen_json)
-
-    def phys_types(s: str) -> dict[str, str]:
-        out = {}
-        for f in json.loads(s).get("fields", []):
-            md = f.get("metadata") or {}
-            out[md.get(_CM_PHYS, f["name"])] = json.dumps(
-                f.get("type"), sort_keys=True
-            )
-        return out
-
-    return phys_types(latest_json) == phys_types(seen_json)
 
 
 # --------------------------------------------------------------------------
@@ -1076,35 +1066,40 @@ def _evolve_mapping_schema(
     return schema_json, conf
 
 
+def _read_schema(state: dict) -> tuple[T.StructType, list | None]:
+    """The schema to scan the state's files with, and the projection
+    back to its logical columns (None: the files already carry them).
+    Under column mapping files (and, for a partitioned table, hive dir
+    names) carry PHYSICAL names (PROTOCOL.md column mapping: partition
+    values and statistics are tracked by physical name): declare the
+    physical schema — partition fields included, so basePath discovery
+    resolves the physical dir keys — then alias every field back to
+    its logical name. A dropped logical column simply isn't selected
+    (its bytes stay in old files, invisible, which is the whole point
+    of no-rewrite evolution)."""
+    schema = state["schema"]
+    if not _mapping_enabled(state.get("meta")):
+        return schema, None
+    phys = _physical_map(state["meta"])
+    return (
+        T.StructType([
+            T.StructField(phys[f.name], f.dataType, f.nullable)
+            for f in schema.fields
+        ]),
+        [F.col(phys[f.name]).alias(f.name) for f in schema.fields],
+    )
+
+
 def _read_paths(
     spark: SparkSession, table: str, state: dict, paths: list[str]
 ) -> DataFrame:
     """Plan a scan over absolute parquet `paths` under the state's
-    schema. Under column mapping the files carry PHYSICAL names; read
-    with the physical schema and project back to logical — a dropped
-    logical column simply isn't selected (its bytes stay in old files,
-    invisible, which is the whole point of no-rewrite evolution)."""
-    schema = state["schema"]
-    if _mapping_enabled(state.get("meta")):
-        # Files (and, for a partitioned table, hive dir names) carry
-        # PHYSICAL names (PROTOCOL.md column mapping: partition values
-        # and statistics are tracked by physical name). Declare the
-        # physical schema — partition fields included, so basePath
-        # discovery resolves the physical dir keys — then alias every
-        # field back to its logical name (r18: the mapped+partitioned
-        # combination routes through the same grouped scan as unmapped).
-        phys = _physical_map(state["meta"])
-        phys_schema = T.StructType([
-            T.StructField(phys[f.name], f.dataType, f.nullable)
-            for f in schema.fields
-        ])
-        return _read_parquet_grouped(
-            spark, phys_schema, table, state, paths,
-            project=lambda d: d.select(
-                *[F.col(phys[f.name]).alias(f.name) for f in schema.fields]
-            ),
-        )
-    return _read_parquet_grouped(spark, schema, table, state, paths)
+    logical schema (`_read_schema`)."""
+    read_schema, logical = _read_schema(state)
+    return _read_parquet_grouped(
+        spark, read_schema, table, state, paths,
+        project=None if logical is None else (lambda d: d.select(*logical)),
+    )
 
 
 def _read_parquet_grouped(
@@ -1336,8 +1331,8 @@ def _scan_with_row_index(
     too).
 
     Column-mapped tables (r17): the files carry PHYSICAL names — read
-    with the physical schema and project back to logical inside each
-    scan branch, exactly like `_read_paths`. A mapped PARTITIONED table
+    with `_read_schema`'s physical schema and project back to logical
+    inside each scan branch, exactly like `_read_paths`. A mapped PARTITIONED table
     (r18) works the same way: the physical schema includes the
     physically-named partition fields, so basePath discovery resolves
     the physical hive dir keys before the logical aliasing."""
@@ -1352,18 +1347,9 @@ def _scan_with_row_index(
             full = os.path.abspath(os.path.join(table, rel))
             dv_descs.append((full, json.dumps(dv)))
             total_card += int(dv.get("cardinality") or 0)
-    schema = state["schema"]
-    read_schema = schema
-    logical_cols = [F.col(f.name) for f in schema.fields]
-    if _mapping_enabled(state.get("meta")):
-        phys = _physical_map(state["meta"])
-        read_schema = T.StructType([
-            T.StructField(phys[f.name], f.dataType, f.nullable)
-            for f in schema.fields
-        ])
-        logical_cols = [
-            F.col(phys[f.name]).alias(f.name) for f in schema.fields
-        ]
+    read_schema, logical_cols = _read_schema(state)
+    if logical_cols is None:
+        logical_cols = [F.col(f.name) for f in state["schema"].fields]
     df = _read_parquet_grouped(
         spark, read_schema, table, state, paths,
         project=lambda d: d.select(
@@ -3136,65 +3122,100 @@ def delta_checkpoint(
     return finals
 
 
-def _require_feed_file(table: str, v: int, path: str) -> None:
-    """JSON retention and VACUUM are independent: a commit can outlive
-    the tombstoned file it references. Fail with the feed horizon named,
-    not a mid-job path-not-found from the scan."""
-    if not os.path.exists(os.path.join(table, _rel_path(table, path))):
-        raise DeltaProtocolError(
-            f"change feed needs data file {path} of commit v{v}, but it "
-            "was vacuumed — changes past the VACUUM retention are only "
-            "available as snapshot diffs"
-        )
+_CHANGE_TAG = {"add": "insert", "remove": "delete"}
 
 
-def _rows_at_indexes(
-    spark: SparkSession,
+def _physical_layout(meta: dict, mapped: bool) -> tuple:
+    """What a reader of `meta`'s files depends on: the column shape and
+    the partition columns. Under column mapping both are taken by
+    PHYSICAL name — files and hive dirs carry physical names, so a
+    rename (or the enable commit, which maps each name to itself)
+    changes neither. Unmapped: logical names, with nullability and
+    field metadata ignored (simpleString)."""
+    parts = list(meta.get("partitionColumns") or [])
+    if not mapped:
+        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        return schema.simpleString(), parts
+    fields = json.loads(meta["schemaString"]).get("fields", [])
+    phys = {
+        f["name"]: (f.get("metadata") or {}).get(_CM_PHYS, f["name"])
+        for f in fields
+    }
+    shape = sorted(
+        (phys[f["name"]], json.dumps(f.get("type"), sort_keys=True))
+        for f in fields
+    )
+    return shape, [phys.get(c, c) for c in parts]
+
+
+def _commit_changes(
     table: str,
-    state: dict,
-    path: str,
-    indexes: set[int],
-    tag: str | None,
-    v: int,
-    complement: bool = False,
-) -> DataFrame:
-    """Rows of ONE data file selected (or, with complement=True,
-    excluded) by row index, optionally tagged as change-feed rows. The
-    index set is DV-cardinality-bounded metadata; the scan reads one
-    file. Under column mapping the file (and any hive dir keys) carry
-    PHYSICAL names — declare the physical schema and alias back (r18)."""
-    schema = state["schema"]
-    to_logical = [F.col(f.name) for f in schema.fields]
-    if _mapping_enabled(state.get("meta")):
-        phys = _physical_map(state["meta"])
-        schema = T.StructType([
-            T.StructField(phys[f.name], f.dataType, f.nullable)
-            for f in state["schema"].fields
-        ])
-        to_logical = [
-            F.col(phys[f.name]).alias(f.name)
-            for f in state["schema"].fields
-        ]
-    reader = spark.read.schema(schema)
-    if state["partition_columns"]:
-        reader = reader.option("basePath", table)
-    df = reader.parquet(
-        os.path.join(table, _rel_path(table, path))
-    ).select(
-        *to_logical, F.col("_metadata.row_index").alias("_dv_ri")
-    )
-    idx_df = spark.createDataFrame(
-        [(int(i),) for i in sorted(indexes)], "_dv_ri bigint"
-    )
-    joined = df.join(
-        F.broadcast(idx_df), "_dv_ri",
-        "left_anti" if complement else "left_semi",
-    )
-    cols = [f.name for f in state["schema"].fields]
-    out = joined.select(*cols)
-    if tag is None:
-        return out
-    return out.select(
+    versions: range,
+    served: dict | None,
+    *,
+    in_force: dict | None,
+    what: str,
+    remedy: str,
+    kinds: tuple[str, ...] = ("add", "remove"),
+) -> list[tuple[int, list[dict], list[tuple[str, dict]]]]:
+    """The one walk over a commit range, shared by `delta_changes` and
+    both stream sources: per commit, `(version, actions, changes)` where
+    `changes` are its data-changing `(tag, action)` pairs in log order
+    ('insert' for an add, 'delete' for a remove; `kinds` picks which).
+    OPTIMIZE's ``dataChange: false`` actions never appear.
+
+    Every file is read under the `served` schema, so the walk fails
+    loudly, with a DeltaProtocolError naming `what` and `remedy`, on
+    - a commit in the range that was GC'd;
+    - a change file that was vacuumed (JSON retention and VACUUM are
+      independent, so a commit can outlive the files it references);
+    - a metaData action whose physical layout (`_physical_layout`)
+      differs from the one in force before it — `in_force`, the
+      metaData current at the range start (None: the first one in the
+      range sets it) — which would otherwise surface old rows as null
+      columns or fail inside an executor task."""
+    missing = [
+        v for v in versions if not os.path.exists(_version_file(table, v))
+    ]
+    if missing:
+        raise DeltaProtocolError(
+            f"{what} needs commits {missing} of {table}, but they were "
+            f"GC'd; {remedy}"
+        )
+    mapped = _mapping_enabled(served)
+    layout = None if in_force is None else _physical_layout(in_force, mapped)
+    out = []
+    for v in versions:
+        actions = _load_commit_actions(table, v)
+        changes: list[tuple[str, dict]] = []
+        for action in actions:
+            meta = action.get("metaData")
+            if meta and meta.get("schemaString"):
+                seen = _physical_layout(meta, mapped)
+                if layout is not None and seen != layout:
+                    raise DeltaProtocolError(
+                        f"{what} crossed a schema change at commit v{v} of "
+                        f"{table} (its schema or partition layout differs "
+                        f"from the one served); {remedy}"
+                    )
+                layout = seen
+            for kind in kinds:
+                act = action.get(kind)
+                if not act or not act.get("dataChange", True):
+                    continue
+                if not os.path.exists(_abs_path(table, act["path"])):
+                    raise DeltaProtocolError(
+                        f"{what} needs data file {act['path']} of commit "
+                        f"v{v}, but it was vacuumed; {remedy}"
+                    )
+                changes.append((_CHANGE_TAG[kind], act))
+        out.append((v, actions, changes))
+    return out
+
+
+def _tagged(df: DataFrame, tag: str, v: int) -> DataFrame:
+    """Change-feed rows: `df` with `_change_type` and `_commit_version`."""
+    return df.select(
         "*",
         F.lit(tag).alias("_change_type"),
         F.lit(v).alias("_commit_version"),
@@ -3223,7 +3244,6 @@ def _merge_keys_of(actions: list[dict]) -> list[str] | None:
 
 
 def _classify_commit_changes(
-    spark: SparkSession,
     v: int,
     actions: list[dict],
     sides: dict[str, DataFrame],
@@ -3243,13 +3263,6 @@ def _classify_commit_changes(
     Scale shape: the pairing joins only the commit's REWRITTEN files on
     the merge key — churn-proportional, and the dup guard is a limit(1)
     aggregate over the same bounded rows."""
-    def tagged(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            "*",
-            F.lit(tag).alias("_change_type"),
-            F.lit(v).alias("_commit_version"),
-        )
-
     keys = _merge_keys_of(actions)
     cols = [f.name for f in schema.fields]
     if (
@@ -3295,15 +3308,15 @@ def _classify_commit_changes(
                 & ~F.col("_pre").eqNullSafe(F.col("_post"))
             )
             return [
-                tagged(j.filter(F.col("_pre").isNull()).select("_post.*"),
-                       "insert"),
-                tagged(j.filter(F.col("_post").isNull()).select("_pre.*"),
-                       "delete"),
-                tagged(touched.select("_pre.*"), "update_preimage"),
-                tagged(touched.select("_post.*"), "update_postimage"),
+                _tagged(j.filter(F.col("_pre").isNull()).select("_post.*"),
+                        "insert", v),
+                _tagged(j.filter(F.col("_post").isNull()).select("_pre.*"),
+                        "delete", v),
+                _tagged(touched.select("_pre.*"), "update_preimage", v),
+                _tagged(touched.select("_post.*"), "update_postimage", v),
             ]
     return [
-        tagged(sides[tag], tag)
+        _tagged(sides[tag], tag, v)
         for tag in ("insert", "delete")
         if tag in sides
     ]
@@ -3323,127 +3336,75 @@ def delta_changes(
     ``dataChange: false`` and are skipped entirely — an incremental
     consumer never re-processes rows a compaction merely moved.
 
+    The commits come from `_commit_changes`, the walk the stream sources
+    use too, checked against the metaData in force at `from_version`: a
+    GC'd commit, a vacuumed file or a schema / partition layout change
+    inside the range raises a DeltaProtocolError (split the feed at that
+    version or use snapshot diffs). Under column mapping a rename is
+    metadata-only and served under to_version's logical names. Rows are
+    read by `_read_state`, the snapshot reader, over the commit's files;
+    a DV supersede (one path removed and re-added) is read once over the
+    superseded files with their DVs stripped and semi-joined to the
+    broadcast (file, row index) pairs of each tag.
+
     Scale shape: reads ONLY the commit JSONs in the range (they must
-    still be retained; gaps raise) and the data files those commits
-    touched — cost tracks churn, never table size. This is the feed an
-    incremental MV maintainer consumes (operators/cdc.py computes the
-    same classes by diffing snapshots; this derives them from the log
-    for free)."""
-    versions = _list_log(table, _VERSION_RE)
-    need = list(range(from_version + 1, to_version + 1))
-    missing = [v for v in need if v not in versions]
-    if missing:
-        raise DeltaProtocolError(
-            f"change feed needs commits {missing} of {table}, but they "
-            "were GC'd — changes older than the retained JSON tail are "
-            "only available as snapshot diffs"
-        )
+    still be retained) and the data files those commits touched — cost
+    tracks churn, never table size. This is the feed an incremental MV
+    maintainer consumes (operators/cdc.py computes the same classes by
+    diffing snapshots; this derives them from the log for free)."""
     state = _snapshot_state(spark, table, to_version)
     schema = state["schema"]
-    # Schema-evolution guard: every file in the range is read with the
-    # to_version schema below, so an overwrite-with-new-schema INSIDE the
-    # range would silently surface its delete-rows (pre-evolution files)
-    # as null columns. Walk the metaData timeline across the range and
-    # fail loudly instead — the consumer must split the feed at the
-    # evolution commit (or fall back to snapshot diffs). Under column
-    # mapping (r18) a metadata-only rename — of a data OR partition
-    # column — is serveable: files are read by PHYSICAL name and
-    # projected to to_version's logical schema, so the guard compares
-    # PHYSICAL shape (and PHYSICAL partition dirs), same contract as
-    # the CDF/log streams.
-    mapped = _mapping_enabled(state.get("meta"))
-
-    def _phys_parts(meta: dict) -> list[str]:
-        pm = _physical_map(meta) if mapped else {}
-        return [pm.get(c, c) for c in (meta.get("partitionColumns") or [])]
-
-    before = None
-    if from_version >= 0:
-        before = _peek_meta(table, from_version)
-    current_json = before["schemaString"] if before else None
-    current_parts = _phys_parts(before) if before else None
-    for v in need:
-        for action in _load_commit_actions(table, v):
-            meta = action.get("metaData")
-            if meta and meta.get("schemaString"):
-                parts_v = _phys_parts(meta)
-                serveable = (
-                    current_json is None
-                    or _stream_serveable_schema_change(
-                        current_json, meta["schemaString"], mapped=mapped
-                    )
-                )
-                if not serveable or (
-                    current_parts is not None and parts_v != current_parts
-                ):
-                    raise DeltaProtocolError(
-                        f"change feed range ({from_version}, "
-                        f"{to_version}] crosses a schema or partition "
-                        f"layout change at commit v{v} of {table}; "
-                        "split the feed at that version or use "
-                        "snapshot diffs"
-                    )
-                current_json = meta["schemaString"]
-                current_parts = parts_v
+    cols = [f.name for f in schema.fields]
+    commits = _commit_changes(
+        table,
+        range(from_version + 1, to_version + 1),
+        state["meta"],
+        in_force=_peek_meta(table, from_version) if from_version >= 0 else None,
+        what=f"change feed range ({from_version}, {to_version}]",
+        remedy="split the feed there or use snapshot diffs",
+    )
     out: DataFrame | None = None
-    for v in need:
-        actions = _load_commit_actions(table, v)
-        adds_by = {
-            a["add"]["path"]: a["add"]
-            for a in actions
-            if "add" in a and a["add"].get("dataChange", True)
-        }
-        rems_by = {
-            a["remove"]["path"]: a["remove"]
-            for a in actions
-            if "remove" in a and a["remove"].get("dataChange", True)
-        }
+    for v, actions, changes in commits:
+        by_tag: dict[str, dict[str, dict]] = {"insert": {}, "delete": {}}
+        for tag, act in changes:
+            by_tag[tag][act["path"]] = act
+        adds, rems = by_tag["insert"], by_tag["delete"]
         parts: list[DataFrame] = []
         # DV update: the SAME path removed and re-added in one commit
         # (new incarnation supersedes old). Row-granular by definition —
         # the feed is exactly the DV diff: newly-covered indexes are
         # deletes, newly-uncovered ones (a restore across a DV) are
         # inserts. This is delta CDF's DV-delete behavior.
-        for p in sorted(set(adds_by) & set(rems_by)):
-            _require_feed_file(table, v, p)
-            new_idx = _dv_read(table, adds_by[p].get("deletionVector"))
-            old_idx = _dv_read(table, rems_by[p].get("deletionVector"))
-            for idxs, tag in ((new_idx - old_idx, "delete"),
-                              (old_idx - new_idx, "insert")):
-                if idxs:
-                    parts.append(
-                        _rows_at_indexes(spark, table, state, p, idxs, tag, v)
-                    )
-            del adds_by[p]
-            del rems_by[p]
-        sides: dict[str, DataFrame] = {}
-        for by, tag in ((adds_by, "insert"), (rems_by, "delete")):
-            if not by:
-                continue
-            for p in by:
-                _require_feed_file(table, v, p)
-            # A DV'd action's LIVE rows are physical minus its DV — a
-            # fully-removed DV'd file must not re-emit already-deleted
-            # rows as deletes (nor a re-added one as inserts).
-            plain = [p for p, a in by.items() if not a.get("deletionVector")]
-            side_parts = []
-            if plain:
-                side_parts.append(_read_paths(
-                    spark, table, state,
-                    [os.path.join(table, _rel_path(table, p)) for p in plain],
-                ))
-            for p, a in by.items():
-                if a.get("deletionVector"):
-                    side_parts.append(_rows_at_indexes(
-                        spark, table, state, p,
-                        _dv_read(table, a["deletionVector"]),
-                        tag=None, v=v, complement=True,
+        superseded = sorted(set(adds) & set(rems))
+        if superseded:
+            pairs: dict[str, list[tuple[str, int]]] = {
+                "delete": [], "insert": []
+            }
+            for p in superseded:
+                new_idx = _dv_read(table, adds[p].get("deletionVector"))
+                old_idx = _dv_read(table, rems.pop(p).get("deletionVector"))
+                fp = _abs_path(table, p)
+                pairs["delete"] += [(fp, i) for i in sorted(new_idx - old_idx)]
+                pairs["insert"] += [(fp, i) for i in sorted(old_idx - new_idx)]
+            scan = _scan_with_row_index(spark, table, state, [
+                dict(adds.pop(p), deletionVector=None) for p in superseded
+            ])
+            for tag, hit in pairs.items():
+                if hit:
+                    hit_df = F.broadcast(spark.createDataFrame(
+                        hit, "_dv_fp string, _dv_ri bigint"
                     ))
-            side = side_parts[0]
-            for sp in side_parts[1:]:
-                side = side.unionByName(sp)
-            sides[tag] = side
-        parts.extend(_classify_commit_changes(spark, v, actions, sides, schema))
+                    rows = scan.join(hit_df, ["_dv_fp", "_dv_ri"], "left_semi")
+                    parts.append(_tagged(rows.select(*cols), tag, v))
+        # A DV'd action's LIVE rows are physical minus its DV (the
+        # snapshot reader's anti-join) — a fully-removed DV'd file must
+        # not re-emit already-deleted rows as deletes.
+        sides = {
+            tag: _read_state(spark, table, dict(state, files=list(by.values())))
+            for tag, by in (("insert", adds), ("delete", rems))
+            if by
+        }
+        parts.extend(_classify_commit_changes(v, actions, sides, schema))
         for part in parts:
             out = part if out is None else out.unionByName(part)
     if out is None:
@@ -3901,489 +3862,354 @@ def _stream_meta(table: str) -> dict:
     return meta
 
 
-try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
+class _DeltaCdfPartition(InputPartition):
+    def __init__(
+        self, path: str, tag: str, version: int, part_cols,
+        table: str | None = None, dv: dict | None = None,
+        col_map=None,
+    ):
+        self.path = path
+        self.tag = tag
+        self.version = version
+        # [(physical, logical, primitive_type)] under column
+        # mapping (r18); None for an unmapped table.
+        self.col_map = col_map
+        # [(schema_index, name, primitive_type, raw_string_value)]
+        # — partition columns to inject (parquet files of a
+        # partitioned table don't carry them).
+        self.part_cols = part_cols
+        # Deletion-vector descriptor of THIS incarnation (r17): the
+        # executor filters the file's rows by position so only LIVE
+        # rows flow — serving live(old DV) as deletes and live(new
+        # DV) as inserts makes a DV supersede net out to exactly the
+        # newly-dead rows for an associative consumer.
+        self.table = table
+        self.dv = dv
 
-    class _DeltaFilePartition(InputPartition):
-        def __init__(
-            self, path: str, part_cols=(),
-            table: str | None = None, dv: dict | None = None,
-            col_map=None,
-        ):
-            self.path = path
-            self.part_cols = part_cols
-            self.table = table
-            self.dv = dv
-            # [(physical, logical, primitive_type)] for the table's
-            # NON-partition fields under column mapping (r18); None for
-            # an unmapped table (serve file columns verbatim).
-            self.col_map = col_map
 
-    class DeltaLogStreamReader(DataSourceStreamReader):
-        """Tails the transaction log: offsets are commit versions; each
-        micro-batch reads the data files ADDED with ``dataChange: true``
-        in (start, end] — so appends/rewrites flow downstream while
-        OPTIMIZE rearrangements are skipped, exactly the contract the
-        dataChange flag exists for. Rows are served as Arrow record
-        batches straight from the parquet files (no Python row loop); a
-        PARTITIONED table's partition columns are injected from
-        partitionValues, a DV'd add serves its LIVE rows via a
-        positional filter (r17), and a COLUMN-MAPPED table's physical
-        file columns are renamed to their logical names executor-side
-        (r18) — the same re-emit contract a copy-on-write rewrite
-        already has."""
+# Spec primitive types a stream can inject as a partition column (the
+# raw partitionValues string parses to them).
+_PA_PART_TYPES = {
+    "string", "long", "integer", "short", "byte",
+    "double", "float", "boolean", "date",
+}
 
-        def __init__(self, table: str):
-            self._table = table
-            try:
-                meta = _stream_meta(table)
-                self._part_inject = DeltaCdfStreamReader._partition_injection(
-                    meta
-                )
-                self._col_map = DeltaCdfStreamReader._column_map(meta)
-            except DeltaProtocolError:
-                self._part_inject = None
-                self._col_map = None
 
-        def initialOffset(self) -> dict:
-            return {"version": -1}
+def _pa_type(ptype):
+    """Arrow type of a spec primitive type string — for partition-value
+    injection and for the NULL backfill of a logical column missing from
+    an older file. Anything else fails loudly."""
+    import pyarrow as pa
 
-        def latestOffset(self) -> dict:
-            return {"version": latest_version(self._table)}
-
-        def partitions(self, start: dict, end: dict):
-            parts = []
-            for v in range(start["version"] + 1, end["version"] + 1):
-                vf = _version_file(self._table, v)
-                if not os.path.exists(vf):
-                    raise DeltaProtocolError(
-                        f"stream needs commit {v} of {self._table}, but "
-                        "it was GC'd — start a fresh stream from a "
-                        "snapshot instead"
-                    )
-                for action in _load_commit_actions(self._table, v):
-                    add = action.get("add")
-                    if add and add.get("dataChange", True):
-                        inject = []
-                        if self._part_inject is not None:
-                            pv = add.get("partitionValues") or {}
-                            inject = [
-                                (idx, name, ptype, pv.get(phys))
-                                for idx, name, ptype, phys
-                                in self._part_inject
-                            ]
-                        parts.append(_DeltaFilePartition(
-                            os.path.join(
-                                self._table,
-                                _rel_path(self._table, add["path"]),
-                            ),
-                            part_cols=inject,
-                            table=self._table,
-                            dv=add.get("deletionVector"),
-                            col_map=self._col_map,
-                        ))
-            return parts
-
-        def read(self, partition):  # executor-side
-            from opencode_hive_archon_spark.sources import deltalog as _dl
-
-            yield from _dl._arrow_serve_file(partition).to_batches()
-
-        def commit(self, end: dict) -> None:
-            pass
-
-    class DeltaLogStreamSource(DataSource):
-        """``spark.readStream.format("delta_log_stream")
-        .option("path", table).load()`` — the read-side complement of
-        ``delta_stream_sink``. Partitioned tables are served with their
-        partition columns injected from partitionValues (r17);
-        column-mapped tables are served under their LOGICAL schema with
-        the physical->logical rename done executor-side (r18)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "delta_log_stream"
-
-        def schema(self):
-            meta = _stream_meta(self.options["path"])
-            # Validate partition-column injectability HERE, with a named
-            # reason — not executor-side with an Arrow type error.
-            DeltaCdfStreamReader._partition_injection(meta)
-            return T.StructType.fromJson(json.loads(meta["schemaString"]))
-
-        def streamReader(self, schema) -> DeltaLogStreamReader:
-            return DeltaLogStreamReader(self.options["path"])
-
-    class _DeltaCdfPartition(InputPartition):
-        def __init__(
-            self, path: str, tag: str, version: int, part_cols,
-            table: str | None = None, dv: dict | None = None,
-            col_map=None,
-        ):
-            self.path = path
-            self.tag = tag
-            self.version = version
-            # [(physical, logical, primitive_type)] under column
-            # mapping (r18); None for an unmapped table.
-            self.col_map = col_map
-            # [(schema_index, name, primitive_type, raw_string_value)]
-            # — partition columns to inject (parquet files of a
-            # partitioned table don't carry them).
-            self.part_cols = part_cols
-            # Deletion-vector descriptor of THIS incarnation (r17): the
-            # executor filters the file's rows by position so only LIVE
-            # rows flow — serving live(old DV) as deletes and live(new
-            # DV) as inserts makes a DV supersede net out to exactly the
-            # newly-dead rows for an associative consumer.
-            self.table = table
-            self.dv = dv
-
-    _PA_PART_TYPES = {
-        "string", "long", "integer", "short", "byte",
-        "double", "float", "boolean", "date",
+    types = {
+        "string": pa.string(), "long": pa.int64(),
+        "integer": pa.int32(), "short": pa.int16(),
+        "byte": pa.int8(), "double": pa.float64(),
+        "float": pa.float32(), "boolean": pa.bool_(),
+        "date": pa.date32(), "binary": pa.binary(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
     }
+    if not isinstance(ptype, str) or ptype not in types:
+        raise DeltaProtocolError(
+            f"cannot serve a column of type {ptype!r} from a streamed "
+            "file (non-primitive partition value or schema evolution)"
+        )
+    return types[ptype]
 
-    def _pa_partition_array(ptype: str, raw, n):
-        """Arrow constant column for one partition value (spec
-        partitionValues serialization -> typed)."""
-        import datetime
 
-        import pyarrow as pa
+def _pa_partition_array(ptype: str, raw, n):
+    """Arrow constant column for one partition value (spec
+    partitionValues serialization -> typed)."""
+    import datetime
 
-        arrow_of = {
-            "string": pa.string(), "long": pa.int64(),
-            "integer": pa.int32(), "short": pa.int16(),
-            "byte": pa.int8(), "double": pa.float64(),
-            "float": pa.float32(), "boolean": pa.bool_(),
-            "date": pa.date32(),
-        }[ptype]
-        if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-            val = None
-        elif ptype == "string":
-            val = raw
-        elif ptype in ("long", "integer", "short", "byte"):
-            val = int(raw)
-        elif ptype in ("double", "float"):
-            val = float(raw)
-        elif ptype == "boolean":
-            val = raw == "true"
-        else:  # date
-            val = datetime.date.fromisoformat(raw)
-        return pa.array([val] * n, arrow_of)
+    import pyarrow as pa
 
-    def _pa_primitive_type(ptype):
-        """Arrow type of a spec primitive type string — for NULL
-        backfill of a logical column missing from an older file (added
-        later by schema evolution). Non-primitive backfill fails loudly."""
-        import pyarrow as pa
+    if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
+        val = None
+    elif ptype == "string":
+        val = raw
+    elif ptype in ("long", "integer", "short", "byte"):
+        val = int(raw)
+    elif ptype in ("double", "float"):
+        val = float(raw)
+    elif ptype == "boolean":
+        val = raw == "true"
+    else:  # date
+        val = datetime.date.fromisoformat(raw)
+    return pa.array([val] * n, _pa_type(ptype))
 
-        table = {
-            "string": pa.string(), "long": pa.int64(),
-            "integer": pa.int32(), "short": pa.int16(),
-            "byte": pa.int8(), "double": pa.float64(),
-            "float": pa.float32(), "boolean": pa.bool_(),
-            "date": pa.date32(), "binary": pa.binary(),
-            "timestamp": pa.timestamp("us", tz="UTC"),
-        }
-        if not isinstance(ptype, str) or ptype not in table:
-            raise DeltaProtocolError(
-                f"cannot null-backfill a column of type {ptype!r} in a "
-                "streamed file (non-primitive schema evolution)"
+
+def _arrow_serve_file(partition):
+    """EXECUTOR-side: one add/remove action's parquet file as a
+    LOGICAL Arrow table — DV-filtered (an out-of-range DV index
+    fails LOUDLY: it means a corrupt or mismatched deletion vector,
+    and silently serving the file would resurrect dead rows),
+    physical columns renamed to logical under column mapping (a
+    physical column missing from an older file — added later by
+    schema evolution — is null-backfilled), partition columns
+    injected as typed constants."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opencode_hive_archon_spark.sources import deltalog as _dl
+
+    tbl = pq.read_table(partition.path)
+    if partition.dv:
+        dead = _dl._dv_read(partition.table, partition.dv)
+        if dead:
+            import numpy as np
+
+            bad = [i for i in dead if i >= tbl.num_rows]
+            if bad:
+                raise DeltaProtocolError(
+                    f"deletion vector of {partition.path} holds row "
+                    f"index {max(bad)} but the file has only "
+                    f"{tbl.num_rows} rows — corrupt or mismatched DV"
+                )
+            mask = np.ones(tbl.num_rows, dtype=bool)
+            mask[sorted(dead)] = False
+            tbl = tbl.filter(pa.array(mask))
+    if partition.col_map is not None:
+        cols, names = [], []
+        for phys, logical, ptype in partition.col_map:
+            if phys in tbl.column_names:
+                cols.append(tbl.column(phys))
+            else:
+                cols.append(pa.nulls(tbl.num_rows, _pa_type(ptype)))
+            names.append(logical)
+        tbl = pa.Table.from_arrays(cols, names=names)
+    for idx, name, ptype, raw in sorted(partition.part_cols):
+        tbl = tbl.add_column(
+            idx, name, _pa_partition_array(ptype, raw, tbl.num_rows)
+        )
+    return tbl
+
+
+class DeltaCdfStreamReader(DataSourceStreamReader):
+    """Tails the transaction log as a CHANGE FEED: each micro-batch
+    serves the rows of data files ADDED (tag 'insert') and REMOVED
+    (tag 'delete') with ``dataChange: true``, plus
+    `_commit_version`. File-level classes are exactly what an
+    associative delta-merge consumer (signed counts/sums) needs: a
+    copy-on-write rewrite's carried rows appear as a delete+insert
+    pair of IDENTICAL payloads whose contributions cancel, so
+    downstream MV state is unaffected by rewrite granularity.
+    OPTIMIZE commits (dataChange: false) are skipped entirely. Rows
+    are served as Arrow record batches with the two tag columns
+    appended — no Python row loop; a PARTITIONED table's partition
+    columns are injected as Arrow constants from the action's
+    partitionValues (r17), and a DELETION-VECTOR incarnation is
+    served as its LIVE rows via a positional Arrow filter (r17) —
+    a DV supersede's delete+insert sides then cancel down to
+    exactly the newly-dead rows.
+
+    With ``adds_only`` this is the reader of ``delta_log_stream``:
+    only the ADDED files' rows flow, without the tag columns — appends
+    and rewrites go downstream, OPTIMIZE rearrangements do not.
+
+    Commits are planned by `_commit_changes`, the walk the batch
+    change feed uses: a GC'd commit, a vacuumed change file or a
+    metaData action whose physical layout differs from the served
+    schema fails at planning with a DeltaProtocolError.
+
+    Offsets are (version, file) positions, so `maxFilesPerTrigger`
+    (r17) caps each micro-batch at that many CHANGE FILES — a burst
+    of commits drains in bounded batches instead of one giant one,
+    delta-spark's rate-limit contract. Batch boundaries inside a
+    commit are safe for the associative-consumer pattern the MV
+    maintainer uses (the proven batching-invariance property)."""
+
+    def __init__(
+        self,
+        table: str,
+        start_version: int,
+        max_files: int | None,
+        adds_only: bool = False,
+    ):
+        self._table = table
+        self._start = start_version
+        self._max_files = max_files
+        self._adds_only = adds_only
+        # Offset = {"version": v, "file": k}: the first UNSERVED
+        # change file is index k of commit v; a fully-served commit
+        # normalizes to (v+1, 0). The pacing cursor below is
+        # re-anchored to the engine's authoritative end at every
+        # partitions() call, so a checkpoint restart can never
+        # re-serve or skip.
+        self._pos = {"version": start_version + 1, "file": 0}
+        # Restart safety (r18, ADVICE r17 #1): the in-memory pacing
+        # cursor starts at the startingVersion boundary, which on a
+        # query RESTART sits BEHIND the checkpointed offset — a
+        # paced latestOffset computed from it would hand Spark a
+        # REGRESSED offset, poisoning the offset log and re-serving
+        # already-committed files (duplicates). The engine reveals
+        # the true position BEFORE its first latestOffset call on
+        # every restart path (traced empirically on Spark 4.1):
+        # a committed last batch triggers source.commit(restored
+        # offset) during start-offset population, an uncommitted one
+        # replays partitions(start, end) — so re-anchoring the
+        # cursor forward in BOTH hooks closes the regression without
+        # giving up fresh-start pacing (where the cursor's initial
+        # value is authoritative because no checkpoint exists).
+        try:
+            self._meta = _stream_meta(table)
+            self._part_inject = self._partition_injection(self._meta)
+            self._col_map = self._column_map(self._meta)
+        except DeltaProtocolError:
+            self._meta = None
+            self._part_inject = None
+            self._col_map = None
+
+    @staticmethod
+    def _partition_injection(meta: dict):
+        """[(schema_index, logical_name, primitive_type,
+        physical_name)] for the table's partition columns, or None
+        for unpartitioned. partitionColumns names LOGICAL fields;
+        the action's partitionValues are keyed by the PHYSICAL name
+        (identical for unmapped tables)."""
+        pcols = list(meta.get("partitionColumns") or [])
+        if not pcols:
+            return None
+        fields = json.loads(meta["schemaString"]).get("fields", [])
+        by_name = {
+            f["name"]: (
+                i,
+                f.get("type"),
+                (f.get("metadata") or {}).get(_CM_PHYS, f["name"]),
             )
-        return table[ptype]
+            for i, f in enumerate(fields)
+        }
+        out = []
+        for name in pcols:
+            idx, ptype, phys = by_name[name]
+            if not isinstance(ptype, str) or ptype not in _PA_PART_TYPES:
+                raise DeltaProtocolError(
+                    f"delta stream cannot inject partition "
+                    f"column {name!r} of type {ptype!r}"
+                )
+            out.append((idx, name, ptype, phys))
+        return out
 
-    def _arrow_serve_file(partition):
-        """EXECUTOR-side: one add/remove action's parquet file as a
-        LOGICAL Arrow table — DV-filtered (an out-of-range DV index
-        fails LOUDLY: it means a corrupt or mismatched deletion vector,
-        and silently serving the file would resurrect dead rows),
-        physical columns renamed to logical under column mapping (a
-        physical column missing from an older file — added later by
-        schema evolution — is null-backfilled), partition columns
-        injected as typed constants."""
+    @staticmethod
+    def _column_map(meta: dict):
+        """[(physical, logical, type)] for the NON-partition fields
+        in logical schema order under column mapping; None for an
+        unmapped table (files already carry the logical names)."""
+        if not _mapping_enabled(meta):
+            return None
+        pcols = set(meta.get("partitionColumns") or [])
+        return [
+            (
+                (f.get("metadata") or {}).get(_CM_PHYS, f["name"]),
+                f["name"],
+                f.get("type"),
+            )
+            for f in json.loads(meta["schemaString"]).get("fields", [])
+            if f["name"] not in pcols
+        ]
+
+    def _walk(self, versions: range):
+        """`_commit_changes` over `versions` with this stream's schema
+        and kinds — shared by pacing and partition planning."""
+        return _commit_changes(
+            self._table, versions, self._meta,
+            in_force=self._meta,
+            what="delta_log_stream" if self._adds_only else "delta_cdf_stream",
+            remedy="restart the stream from a snapshot",
+            kinds=("add",) if self._adds_only else ("add", "remove"),
+        )
+
+    def initialOffset(self) -> dict:
+        # startingVersion semantics: changes strictly AFTER it flow.
+        return {"version": self._start + 1, "file": 0}
+
+    def latestOffset(self) -> dict:
+        head = latest_version(self._table)
+        if self._max_files is None:
+            latest = {"version": head + 1, "file": 0}
+            return (
+                latest
+                if self._cmp(latest, self._pos) > 0
+                else dict(self._pos)
+            )
+        # Rate-limited: advance at most max_files change files past
+        # the pacing cursor (finishing any partially-served commit
+        # first).
+        v, k = self._pos["version"], self._pos["file"]
+        budget = self._max_files
+        while v <= head and budget > 0:
+            [(_, _, files)] = self._walk(range(v, v + 1))
+            remaining = len(files) - k
+            if remaining > budget:
+                k += budget
+                budget = 0
+            else:
+                budget -= remaining
+                v += 1
+                k = 0
+        self._pos = {"version": v, "file": k}
+        return dict(self._pos)
+
+    @staticmethod
+    def _norm(o: dict) -> tuple[int, int]:
+        """(version, file) position. A legacy offset without 'file'
+        (a pre-r17 CDF checkpoint, or any checkpoint of the log stream
+        before it moved onto this reader) meant 'served THROUGH
+        version' — i.e. position (version + 1, 0)."""
+        if "file" in o:
+            return (o["version"], o["file"])
+        return (o["version"] + 1, 0)
+
+    @classmethod
+    def _cmp(cls, a: dict, b: dict) -> int:
+        ka, kb = cls._norm(a), cls._norm(b)
+        return (ka > kb) - (ka < kb)
+
+    def partitions(self, start: dict, end: dict):
+        # Re-anchor the pacing cursor to the engine's authoritative
+        # range (restart safety) — an uncommitted-restart replay
+        # reveals the true position before latestOffset is called.
+        if self._cmp(dict(self._pos), end) < 0:
+            ev_, ek_ = self._norm(end)
+            self._pos = {"version": ev_, "file": ek_}
+        if self._cmp(start, end) >= 0:
+            return []
+        parts = []
+        sv, sk = self._norm(start)
+        ev, ek = self._norm(end)
+        # (ev, 0) is the boundary BEFORE commit ev.
+        last = ev if ek else ev - 1
+        for v, _, files in self._walk(range(max(sv, 0), last + 1)):
+            lo = sk if v == sv else 0
+            hi = ek if v == ev else len(files)
+            for tag, act in files[lo:hi]:
+                inject = []
+                if self._part_inject is not None:
+                    pv = act.get("partitionValues") or {}
+                    inject = [
+                        (idx, name, ptype, pv.get(phys))
+                        for idx, name, ptype, phys in self._part_inject
+                    ]
+                parts.append(_DeltaCdfPartition(
+                    _abs_path(self._table, act["path"]), tag, v, inject,
+                    table=self._table,
+                    dv=act.get("deletionVector"),
+                    col_map=self._col_map,
+                ))
+        return parts
+
+    def read(self, partition):  # executor-side
+        # Merge-on-read: _arrow_serve_file drops this incarnation's
+        # dead rows by POSITION (DV indexes are physical row
+        # positions; a whole-file read preserves them). Serving live
+        # rows per incarnation makes a DV supersede net out to
+        # exactly the newly-dead rows downstream.
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from opencode_hive_archon_spark.sources import deltalog as _dl
 
-        tbl = pq.read_table(partition.path)
-        if partition.dv:
-            dead = _dl._dv_read(partition.table, partition.dv)
-            if dead:
-                import numpy as np
-
-                bad = [i for i in dead if i >= tbl.num_rows]
-                if bad:
-                    raise DeltaProtocolError(
-                        f"deletion vector of {partition.path} holds row "
-                        f"index {max(bad)} but the file has only "
-                        f"{tbl.num_rows} rows — corrupt or mismatched DV"
-                    )
-                mask = np.ones(tbl.num_rows, dtype=bool)
-                mask[sorted(dead)] = False
-                tbl = tbl.filter(pa.array(mask))
-        if partition.col_map is not None:
-            cols, names = [], []
-            for phys, logical, ptype in partition.col_map:
-                if phys in tbl.column_names:
-                    cols.append(tbl.column(phys))
-                else:
-                    cols.append(
-                        pa.nulls(tbl.num_rows, _pa_primitive_type(ptype))
-                    )
-                names.append(logical)
-            tbl = pa.Table.from_arrays(cols, names=names)
-        for idx, name, ptype, raw in sorted(partition.part_cols):
-            tbl = tbl.add_column(
-                idx, name, _pa_partition_array(ptype, raw, tbl.num_rows)
-            )
-        return tbl
-
-    class DeltaCdfStreamReader(DataSourceStreamReader):
-        """Tails the transaction log as a CHANGE FEED: each micro-batch
-        serves the rows of data files ADDED (tag 'insert') and REMOVED
-        (tag 'delete') with ``dataChange: true``, plus
-        `_commit_version`. File-level classes are exactly what an
-        associative delta-merge consumer (signed counts/sums) needs: a
-        copy-on-write rewrite's carried rows appear as a delete+insert
-        pair of IDENTICAL payloads whose contributions cancel, so
-        downstream MV state is unaffected by rewrite granularity.
-        OPTIMIZE commits (dataChange: false) are skipped entirely. Rows
-        are served as Arrow record batches with the two tag columns
-        appended — no Python row loop; a PARTITIONED table's partition
-        columns are injected as Arrow constants from the action's
-        partitionValues (r17), and a DELETION-VECTOR incarnation is
-        served as its LIVE rows via a positional Arrow filter (r17) —
-        a DV supersede's delete+insert sides then cancel down to
-        exactly the newly-dead rows.
-
-        Offsets are (version, file) positions, so `maxFilesPerTrigger`
-        (r17) caps each micro-batch at that many CHANGE FILES — a burst
-        of commits drains in bounded batches instead of one giant one,
-        delta-spark's rate-limit contract. Batch boundaries inside a
-        commit are safe for the associative-consumer pattern the MV
-        maintainer uses (the proven batching-invariance property)."""
-
-        def __init__(
-            self, table: str, start_version: int, max_files: int | None
-        ):
-            self._table = table
-            self._start = start_version
-            self._max_files = max_files
-            # Offset = {"version": v, "file": k}: the first UNSERVED
-            # change file is index k of commit v; a fully-served commit
-            # normalizes to (v+1, 0). The pacing cursor below is
-            # re-anchored to the engine's authoritative end at every
-            # partitions() call, so a checkpoint restart can never
-            # re-serve or skip.
-            self._pos = {"version": start_version + 1, "file": 0}
-            # Restart safety (r18, ADVICE r17 #1): the in-memory pacing
-            # cursor starts at the startingVersion boundary, which on a
-            # query RESTART sits BEHIND the checkpointed offset — a
-            # paced latestOffset computed from it would hand Spark a
-            # REGRESSED offset, poisoning the offset log and re-serving
-            # already-committed files (duplicates). The engine reveals
-            # the true position BEFORE its first latestOffset call on
-            # every restart path (traced empirically on Spark 4.1):
-            # a committed last batch triggers source.commit(restored
-            # offset) during start-offset population, an uncommitted one
-            # replays partitions(start, end) — so re-anchoring the
-            # cursor forward in BOTH hooks closes the regression without
-            # giving up fresh-start pacing (where the cursor's initial
-            # value is authoritative because no checkpoint exists).
-            try:
-                meta = _stream_meta(table)
-                self._schema_json = meta["schemaString"]
-                self._part_inject = self._partition_injection(meta)
-                self._col_map = self._column_map(meta)
-            except DeltaProtocolError:
-                self._schema_json = None
-                self._part_inject = None
-                self._col_map = None
-
-        @staticmethod
-        def _partition_injection(meta: dict):
-            """[(schema_index, logical_name, primitive_type,
-            physical_name)] for the table's partition columns, or None
-            for unpartitioned. partitionColumns names LOGICAL fields;
-            the action's partitionValues are keyed by the PHYSICAL name
-            (identical for unmapped tables)."""
-            pcols = list(meta.get("partitionColumns") or [])
-            if not pcols:
-                return None
-            fields = json.loads(meta["schemaString"]).get("fields", [])
-            by_name = {
-                f["name"]: (
-                    i,
-                    f.get("type"),
-                    (f.get("metadata") or {}).get(_CM_PHYS, f["name"]),
-                )
-                for i, f in enumerate(fields)
-            }
-            out = []
-            for name in pcols:
-                idx, ptype, phys = by_name[name]
-                if not isinstance(ptype, str) or ptype not in _PA_PART_TYPES:
-                    raise DeltaProtocolError(
-                        f"delta_cdf_stream cannot inject partition "
-                        f"column {name!r} of type {ptype!r}"
-                    )
-                out.append((idx, name, ptype, phys))
-            return out
-
-        @staticmethod
-        def _column_map(meta: dict):
-            """[(physical, logical, type)] for the NON-partition fields
-            in logical schema order under column mapping; None for an
-            unmapped table (files already carry the logical names)."""
-            if not _mapping_enabled(meta):
-                return None
-            pcols = set(meta.get("partitionColumns") or [])
-            return [
-                (
-                    (f.get("metadata") or {}).get(_CM_PHYS, f["name"]),
-                    f["name"],
-                    f.get("type"),
-                )
-                for f in json.loads(meta["schemaString"]).get("fields", [])
-                if f["name"] not in pcols
-            ]
-
-        def _cdf_files(self, v: int) -> list[tuple[str, dict]]:
-            """The (tag, action) change files of commit v, in log
-            order — shared by pacing and partition planning."""
-            vf = _version_file(self._table, v)
-            if not os.path.exists(vf):
-                raise DeltaProtocolError(
-                    f"CDF stream needs commit {v} of {self._table}, "
-                    "but it was GC'd — start a fresh stream from a "
-                    "snapshot instead"
-                )
-            out: list[tuple[str, dict]] = []
-            for action in _load_commit_actions(self._table, v):
-                meta = action.get("metaData")
-                if (
-                    meta
-                    and meta.get("schemaString")
-                    and self._schema_json is not None
-                    and not _stream_serveable_schema_change(
-                        self._schema_json, meta["schemaString"],
-                        mapped=self._col_map is not None,
-                    )
-                ):
-                    raise DeltaProtocolError(
-                        f"CDF stream crossed a schema change at "
-                        f"commit v{v} of {self._table}; restart "
-                        "the stream from a snapshot"
-                    )
-                for kind, tag in (("add", "insert"), ("remove", "delete")):
-                    act = action.get(kind)
-                    if not act or not act.get("dataChange", True):
-                        continue
-                    out.append((tag, act))
-            return out
-
-        def initialOffset(self) -> dict:
-            # startingVersion semantics: changes strictly AFTER it flow.
-            return {"version": self._start + 1, "file": 0}
-
-        def latestOffset(self) -> dict:
-            head = latest_version(self._table)
-            if self._max_files is None:
-                latest = {"version": head + 1, "file": 0}
-                return (
-                    latest
-                    if self._cmp(latest, self._pos) > 0
-                    else dict(self._pos)
-                )
-            # Rate-limited: advance at most max_files change files past
-            # the pacing cursor (finishing any partially-served commit
-            # first).
-            v, k = self._pos["version"], self._pos["file"]
-            budget = self._max_files
-            while v <= head and budget > 0:
-                remaining = len(self._cdf_files(v)) - k
-                if remaining > budget:
-                    k += budget
-                    budget = 0
-                else:
-                    budget -= remaining
-                    v += 1
-                    k = 0
-            self._pos = {"version": v, "file": k}
-            return dict(self._pos)
-
-        @staticmethod
-        def _norm(o: dict) -> tuple[int, int]:
-            """(version, file) position. A legacy offset without 'file'
-            (pre-r17 checkpoint) meant 'served THROUGH version' — i.e.
-            position (version + 1, 0)."""
-            if "file" in o:
-                return (o["version"], o["file"])
-            return (o["version"] + 1, 0)
-
-        @classmethod
-        def _cmp(cls, a: dict, b: dict) -> int:
-            ka, kb = cls._norm(a), cls._norm(b)
-            return (ka > kb) - (ka < kb)
-
-        def partitions(self, start: dict, end: dict):
-            # Re-anchor the pacing cursor to the engine's authoritative
-            # range (restart safety) — an uncommitted-restart replay
-            # reveals the true position before latestOffset is called.
-            if self._cmp(dict(self._pos), end) < 0:
-                ev_, ek_ = self._norm(end)
-                self._pos = {"version": ev_, "file": ek_}
-            if self._cmp(start, end) >= 0:
-                return []
-            parts = []
-            sv, sk = self._norm(start)
-            ev, ek = self._norm(end)
-            for v in range(max(sv, 0), ev + 1):
-                if v == ev and ek == 0:
-                    break  # end is the boundary BEFORE commit ev
-                files = self._cdf_files(v)
-                lo = sk if v == sv else 0
-                hi = ek if v == ev else len(files)
-                for tag, act in files[lo:hi]:
-                    full = os.path.join(
-                        self._table, _rel_path(self._table, act["path"])
-                    )
-                    if not os.path.exists(full):
-                        raise DeltaProtocolError(
-                            f"CDF stream needs data file {act['path']} "
-                            f"of commit v{v}, but it was vacuumed"
-                        )
-                    inject = []
-                    if self._part_inject is not None:
-                        pv = act.get("partitionValues") or {}
-                        inject = [
-                            (idx, name, ptype, pv.get(phys))
-                            for idx, name, ptype, phys in self._part_inject
-                        ]
-                    parts.append(_DeltaCdfPartition(
-                        full, tag, v, inject,
-                        table=self._table,
-                        dv=act.get("deletionVector"),
-                        col_map=self._col_map,
-                    ))
-            return parts
-
-        def read(self, partition):  # executor-side
-            # Merge-on-read: _arrow_serve_file drops this incarnation's
-            # dead rows by POSITION (DV indexes are physical row
-            # positions; a whole-file read preserves them). Serving live
-            # rows per incarnation makes a DV supersede net out to
-            # exactly the newly-dead rows downstream.
-            import pyarrow as pa
-
-            from opencode_hive_archon_spark.sources import deltalog as _dl
-
-            tbl = _dl._arrow_serve_file(partition)
+        tbl = _dl._arrow_serve_file(partition)
+        if not self._adds_only:
             n = tbl.num_rows
             tbl = tbl.append_column(
                 "_change_type", pa.array([partition.tag] * n, pa.string())
@@ -4392,60 +4218,85 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
                 "_commit_version",
                 pa.array([partition.version] * n, pa.int32()),
             )
-            yield from tbl.to_batches()
+        yield from tbl.to_batches()
 
-        def commit(self, end: dict) -> None:
-            # Restart safety (ADVICE r17 #1): on a committed-restart the
-            # engine calls commit(restored offset) BEFORE its first
-            # latestOffset — anchoring here is what stops a paced
-            # latestOffset from ever regressing behind the checkpoint.
-            if self._cmp(dict(self._pos), end) < 0:
-                ev_, ek_ = self._norm(end)
-                self._pos = {"version": ev_, "file": ek_}
+    def commit(self, end: dict) -> None:
+        # Restart safety (ADVICE r17 #1): on a committed-restart the
+        # engine calls commit(restored offset) BEFORE its first
+        # latestOffset — anchoring here is what stops a paced
+        # latestOffset from ever regressing behind the checkpoint.
+        if self._cmp(dict(self._pos), end) < 0:
+            ev_, ek_ = self._norm(end)
+            self._pos = {"version": ev_, "file": ek_}
 
-    class DeltaCdfStreamSource(DataSource):
-        """``spark.readStream.format("delta_cdf_stream")
-        .option("path", table).option("startingVersion", v)
-        .option("maxFilesPerTrigger", n).load()`` — the log-derived
-        changelog as a streaming input (VERDICT r15 #4: the log IS the
-        changelog). startingVersion semantics match delta's CDF reader:
-        changes strictly AFTER that version flow; default -1 streams the
-        table from its first commit. maxFilesPerTrigger (r17) caps a
-        micro-batch at n change files. Partitioned tables are served
-        with their partition columns injected from partitionValues
-        (r17); column-mapped tables are served under their LOGICAL
-        schema with the physical->logical rename done executor-side
-        (r18)."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "delta_cdf_stream"
+def _stream_schema(table: str) -> T.StructType:
+    """The served (latest) logical schema of a stream source, validated
+    for partition-column injection HERE, with a named reason — not
+    executor-side with an Arrow type error."""
+    meta = _stream_meta(table)
+    DeltaCdfStreamReader._partition_injection(meta)
+    return T.StructType.fromJson(json.loads(meta["schemaString"]))
 
-        def schema(self):
-            meta = _stream_meta(self.options["path"])
-            # Validate partition-column injectability HERE, with a named
-            # reason — not executor-side with an Arrow type error.
-            DeltaCdfStreamReader._partition_injection(meta)
-            base = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            return T.StructType(
-                list(base.fields)
-                + [
-                    T.StructField("_change_type", T.StringType(), False),
-                    T.StructField("_commit_version", T.IntegerType(), False),
-                ]
-            )
 
-        def streamReader(self, schema) -> DeltaCdfStreamReader:
-            mft = self.options.get("maxFilesPerTrigger")
-            return DeltaCdfStreamReader(
-                self.options["path"],
-                int(self.options.get("startingVersion", -1)),
-                int(mft) if mft is not None else None,
-            )
+class DeltaLogStreamSource(DataSource):
+    """``spark.readStream.format("delta_log_stream")
+    .option("path", table).load()`` — the read-side complement of
+    ``delta_stream_sink``: tails the log from its first commit and
+    serves the rows of every data file ADDED with ``dataChange:
+    true`` (a DV'd add serves its LIVE rows — the same re-emit
+    contract a copy-on-write rewrite has). It is the CDF reader with
+    ``adds_only``, so partition injection, column mapping, the
+    schema guard and restart safety are the CDF stream's."""
 
-    HAS_STREAM_SOURCE = True
-except ImportError:  # pragma: no cover - pyspark < 4 fallback
-    HAS_STREAM_SOURCE = False
+    @classmethod
+    def name(cls) -> str:
+        return "delta_log_stream"
+
+    def schema(self):
+        return _stream_schema(self.options["path"])
+
+    def streamReader(self, schema) -> DeltaCdfStreamReader:
+        return DeltaCdfStreamReader(
+            self.options["path"], -1, None, adds_only=True
+        )
+
+
+class DeltaCdfStreamSource(DataSource):
+    """``spark.readStream.format("delta_cdf_stream")
+    .option("path", table).option("startingVersion", v)
+    .option("maxFilesPerTrigger", n).load()`` — the log-derived
+    changelog as a streaming input (VERDICT r15 #4: the log IS the
+    changelog). startingVersion semantics match delta's CDF reader:
+    changes strictly AFTER that version flow; default -1 streams the
+    table from its first commit. maxFilesPerTrigger (r17) caps a
+    micro-batch at n change files. Partitioned tables are served
+    with their partition columns injected from partitionValues
+    (r17); column-mapped tables are served under their LOGICAL
+    schema with the physical->logical rename done executor-side
+    (r18)."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "delta_cdf_stream"
+
+    def schema(self):
+        base = _stream_schema(self.options["path"])
+        return T.StructType(
+            list(base.fields)
+            + [
+                T.StructField("_change_type", T.StringType(), False),
+                T.StructField("_commit_version", T.IntegerType(), False),
+            ]
+        )
+
+    def streamReader(self, schema) -> DeltaCdfStreamReader:
+        mft = self.options.get("maxFilesPerTrigger")
+        return DeltaCdfStreamReader(
+            self.options["path"],
+            int(self.options.get("startingVersion", -1)),
+            int(mft) if mft is not None else None,
+        )
 
 
 # --------------------------------------------------------------------------

@@ -572,3 +572,50 @@ def test_dv_delete_matching_only_dead_rows_leaves_file_alone(spark, tmp_path):
         }
     assert kinds == {"commitInfo"}
     assert _ks(dl.delta_snapshot(spark, tbl)) == [0, 1, 2, 3, 4, 5, 6]
+
+
+def test_dv_change_feed_on_partitioned_shallow_clone(spark, tmp_path):
+    """A DV delete on a PARTITIONED shallow clone: the hit files live
+    under the SOURCE root, so the feed must read them through the
+    snapshot reader's per-root basePath grouping — exactly the newly
+    dead rows come back, tagged 'delete'."""
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    df = spark.range(60).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p")
+    )
+    dl.delta_write(spark, df, src, partition_by=["p"])
+    dl.delta_clone(spark, src, tgt)
+    v = dl.delta_delete(spark, tgt, "k % 7 = 0", use_dv=True)
+    feed = dl.delta_changes(spark, tgt, v - 1, v).collect()
+    got = sorted((r["_change_type"], r["k"], r["p"]) for r in feed)
+    assert got == [("delete", k, k % 3) for k in range(0, 60, 7)]
+    assert _ks(dl.delta_snapshot(spark, tgt)) == [
+        k for k in range(60) if k % 7
+    ]
+
+
+def test_dv_change_feed_scans_do_not_grow_with_hit_files(spark, tmp_path):
+    """A DV delete's feed reads its superseded files in one scan per
+    data root, semi-joined to the broadcast (file, row index) pairs —
+    a delete that hit 3 files plans no more parquet scans than one
+    that hit 1."""
+
+    def scans(name: str, predicate: str, hit: int) -> int:
+        tbl = str(tmp_path / name)
+        for lo in (0, 10, 20):  # one file per commit
+            dl.delta_write(spark, spark.createDataFrame(
+                [(k, float(k)) for k in range(lo, lo + 10)], "k long, v double"
+            ).repartition(1), tbl)
+        v = dl.delta_delete(spark, tbl, predicate, use_dv=True)
+        feed = dl.delta_changes(spark, tbl, v - 1, v)
+        assert sorted(r["k"] for r in feed.collect()) == [
+            k for k in range(30) if k % 10 == 1 and (hit == 3 or k < 10)
+        ]
+        plan = feed._jdf.queryExecution().optimizedPlan().toString()
+        return sum("parquet" in line and "Relation" in line
+                   for line in plan.splitlines())
+
+    one = scans("one", "k = 1", 1)
+    three = scans("three", "k % 10 = 1", 3)
+    assert one >= 1
+    assert three <= one

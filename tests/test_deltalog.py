@@ -2349,3 +2349,68 @@ def test_snapshot_replay_runs_no_spark_job(spark, tmp_path):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         time.sleep(0.05)
     assert len(jobs) == 1, f"replay issued Spark jobs: {sorted(jobs)}"
+
+
+def _plan_changes(spark, tbl, source):
+    """Plan a read of the whole log through `source`: the batch feed,
+    or a stream reader's partitions from its initial offset."""
+    if source == "delta_changes":
+        return dl.delta_changes(spark, tbl, -1, dl.latest_version(tbl))
+    cls = {
+        "delta_log_stream": dl.DeltaLogStreamSource,
+        "delta_cdf_stream": dl.DeltaCdfStreamSource,
+    }[source]
+    src = cls({"path": tbl})
+    reader = src.streamReader(src.schema())
+    return reader.partitions(reader.initialOffset(), reader.latestOffset())
+
+
+@pytest.mark.parametrize(
+    "source", ["delta_changes", "delta_log_stream", "delta_cdf_stream"]
+)
+@pytest.mark.parametrize("change", ["new_schema", "partitioning"])
+def test_feed_and_streams_refuse_layout_change_at_planning(
+    spark, tmp_path, source, change
+):
+    """The batch feed and both stream sources share one guard: an
+    overwrite that changes the schema, or only adds partition_by,
+    raises a DeltaProtocolError naming the commit when the read is
+    planned — not a task failure once executors open the old files.
+    The feed names the commit that changed the layout; a stream,
+    which serves the latest schema, names the first commit whose
+    layout differs from it."""
+    tbl = str(tmp_path / "t")
+    rows = [(k, k % 2) for k in range(6)]
+    dl.delta_write(spark, spark.createDataFrame(rows, "k long, p long"), tbl)
+    if change == "new_schema":
+        new = spark.createDataFrame([(9, 1, "x")], "k long, p long, tag string")
+        dl.delta_write(spark, new, tbl, mode="overwrite")
+    else:
+        dl.delta_write(
+            spark, spark.createDataFrame(rows, "k long, p long"), tbl,
+            mode="overwrite", partition_by=["p"],
+        )
+    at = "v1" if source == "delta_changes" else "v0"
+    with pytest.raises(
+        dl.DeltaProtocolError, match=f"at commit {at} of"
+    ):
+        _plan_changes(spark, tbl, source)
+
+
+def test_log_stream_resumes_from_legacy_offset(spark, tmp_path):
+    """A log-stream checkpoint holds `{"version": v}` offsets, meaning
+    'served through v'. Handed one as its start, the reader serves
+    exactly the commits after it, up to the head."""
+    tbl = str(tmp_path / "t")
+    for lo in (0, 10, 20, 30):
+        dl.delta_write(spark, _df(spark, lo, lo + 10).repartition(1), tbl)
+    src = dl.DeltaLogStreamSource({"path": tbl})
+    reader = src.streamReader(src.schema())
+    parts = reader.partitions({"version": 1}, reader.latestOffset())
+    got = sorted(
+        row["k"]
+        for p in parts
+        for batch in reader.read(p)
+        for row in batch.to_pylist()
+    )
+    assert got == list(range(20, 40))

@@ -68,6 +68,35 @@ class TestBranchTruthTable:
         assert "WHEN b THEN 'RERANK_BYPASSED'" in str(flag)
         assert classify(spark, 2, 0.85, bypassed=None, provider="mem0") == "SUCCESS"
 
+    def test_constant_branch_folds_on_the_driver(self, spark):
+        """A forced branch passed as its Python code is folded before the
+        Column is built: no `'SUCCESS' = 'SUCCESS'` term reaches the plan,
+        and every per-branch column equals the one the CASE over a
+        literal branch computes."""
+        n, top = F.lit(3).cast("long"), F.lit(0.4)
+        fns = [
+            branching.action_col,
+            lambda b: branching.threshold_met_col(b, top, 0.6),
+            lambda b: branching.rerank_applied_col(b, False),
+            lambda b: branching.reason_col(b, n, top, 0.6),
+            branching.suggestion_col,
+        ]
+        folded, cased = [], []
+        for code in (*branching.BRANCH_ACTION, "UNKNOWN"):
+            for fn in fns:
+                col = fn(code)
+                for other in branching.BRANCH_ACTION:
+                    assert f"'{other}'" not in str(col), (code, str(col))
+                folded.append(col)
+                cased.append(fn(F.lit(code)))
+        row = spark.range(1).select(
+            *[c.alias(f"f{i}") for i, c in enumerate(folded)],
+            *[c.alias(f"c{i}") for i, c in enumerate(cased)],
+        ).first()
+        assert [row[f"f{i}"] for i in range(len(folded))] == [
+            row[f"c{i}"] for i in range(len(cased))
+        ]
+
     def test_actions(self, spark):
         for branch, action in branching.BRANCH_ACTION.items():
             row = (

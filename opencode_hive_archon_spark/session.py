@@ -227,28 +227,40 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table with type normalization.
+def _nanos_as_long(spark: SparkSession) -> None:
+    """Read parquet TIMESTAMP(NANOS) as raw int64 (see :func:`_fix_ts`).
+    Runtime-settable; needed even when the caller built the session (e.g.
+    the grading driver) without our factory."""
+    try:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    except Exception:
+        pass
 
-    ``events.ts`` has appeared as parquet TIMESTAMP(NANOS) — Spark reads it
-    as raw int64 (legacy nanosAsLong conf) and we convert to a microsecond
-    timestamp by truncation, the same conversion DuckDB applies — and as
-    timezone-less ``timestamp[us]`` (TIMESTAMP_NTZ), normalized by
-    :func:`normalize_timestamps`. Either way downstream code sees TIMESTAMP.
-    """
-    if name == "events":
-        # Runtime-settable; needed even when the caller built the session
-        # (e.g. the grading driver) without our factory.
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+
+def _fix_ts(df: DataFrame) -> DataFrame:
+    """The events ``ts`` fix for a batch or a streaming frame: a raw int64
+    of nanoseconds becomes a microsecond timestamp by truncation (the same
+    conversion DuckDB applies), then :func:`normalize_timestamps`."""
+    if dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return normalize_timestamps(df)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table with type normalization.
+
+    ``events.ts`` has appeared as parquet TIMESTAMP(NANOS), read as raw
+    int64 under the legacy nanosAsLong conf and converted by
+    :func:`_fix_ts`, and as timezone-less ``timestamp[us]``
+    (TIMESTAMP_NTZ), normalized by :func:`normalize_timestamps`. Either
+    way downstream code sees TIMESTAMP.
+    """
+    if name == "events":
+        _nanos_as_long(spark)
+        return _fix_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

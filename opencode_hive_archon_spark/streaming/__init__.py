@@ -1,9 +1,12 @@
 """Family 4 — Structured Streaming over the ``events`` stream table.
 
-Each query is a real ``readStream -> transform -> writeStream`` pipeline
-driven to completion against the parquet-backed stream (memory sink +
-``processAllAvailable``) and returned as the sink table — Spark's unified
-model guarantees the batch SQL equivalent is the oracle.
+Each query is a real ``readStream -> transform -> writeStream`` pipeline.
+One function, ``jobs._run_to_table``, drives every one of them to
+completion (start, ``processAllAvailable``, stop) into a memory sink or a
+foreachBatch function. A memory-sink result is the sink's own frame: the
+stopped sink keeps its rows on the driver, so no lineage cut or second
+copy is needed. Spark's unified model guarantees the batch SQL
+equivalent is the oracle.
 
 Watermark-sensitive results (which windows have finalized) depend on
 micro-batch boundaries, so append-mode outputs are oracle-checked only

@@ -1,10 +1,14 @@
 """Structured Streaming jobs over ``events`` (SURVEY.md §2B Family 4).
 
-Execution harness: the parquet table is streamed (readStream), the
-transformation is applied, and a memory sink is driven to completion with
-``processAllAvailable()`` — the returned DataFrame reads the sink table.
-At production scale the same code points at a Kafka source and a real sink;
-only the source/sink factory changes (unified batch/stream model).
+Execution harness: one function, ``_run_to_table``, starts, drains
+(``processAllAvailable()``) and stops every streaming query here. The
+sink is a memory sink, whose stopped ``MemoryPlan`` still serves its rows
+from the driver after its view is dropped, so the result is returned
+without a second copy; or a foreachBatch function, whose caller reads
+back what it wrote. Parquet inputs are read as streams by one helper,
+``_parquet_stream``. At production scale the same code points at a Kafka
+source and a real sink; only the source/sink factory changes (unified
+batch/stream model).
 
 Determinism & oracles:
 * Single-batch input => the final watermark is max(ts) - delay, so append
@@ -21,12 +25,12 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from opencode_hive_archon_spark.session import normalize_timestamps
+from opencode_hive_archon_spark.session import _fix_ts, _nanos_as_long, read_table
 from opencode_hive_archon_spark.spec import QuerySpec
 
 WATERMARK_DELAY = "10 minutes"
@@ -128,21 +132,29 @@ def _events_rows(sf_dir: str) -> int:
     return corpus_rows(sf_dir, "events")
 
 
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with the nanos->micros fix."""
+def _parquet_stream(
+    spark: SparkSession, indir: str, one_file_per_trigger: bool = False
+) -> DataFrame:
+    """readStream over a parquet directory: the schema from a batch read,
+    optionally one file per micro-batch (``maxFilesPerTrigger=1``, for the
+    time-ordered slice dirs), the RocksDB provider pinned, and the events
+    ``ts`` fix of ``read_table``."""
     _ensure_rocksdb(spark)
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    _nanos_as_long(spark)
+    reader = spark.readStream.schema(spark.read.parquet(indir).schema)
+    if one_file_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return _fix_ts(reader.parquet(indir))
+
+
+def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream over the events parquet."""
     # File stream sources need a directory: expose the single parquet file
     # through a symlinked temp dir (kept for the session; tiny). Keyed by a
     # stable content-independent digest of the absolute path — NOT Python's
     # process-salted hash() — so every process maps one sf_dir to one dir;
     # a stale link to a different target is replaced, never silently reused.
-    target = os.path.abspath(path)
+    target = os.path.abspath(f"{sf_dir}/events.parquet")
     digest = hashlib.sha1(target.encode()).hexdigest()[:12]
     stream_dir = os.path.join(tempfile.gettempdir(), f"events_stream_{digest}")
     os.makedirs(stream_dir, exist_ok=True)
@@ -151,50 +163,61 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.remove(link)
     if not os.path.exists(link):
         os.symlink(target, link)
-    stream = spark.readStream.schema(schema).parquet(stream_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return normalize_timestamps(stream)
+    return _parquet_stream(spark, stream_dir)
 
 
 def _run_to_table(
     spark: SparkSession,
-    agg: DataFrame,
-    mode: str,
+    stream: DataFrame,
+    mode: str = "append",
     n_rows: int | None = None,
     target: int = STREAM_STATE_TARGET_ROWS,
-) -> DataFrame:
-    """Drive a streaming DF to completion into a memory sink; return it as a
-    static DataFrame (materialized so the sink can be torn down).
+    foreach_batch=None,
+    available_now: bool = True,
+) -> DataFrame | None:
+    """Start a streaming query, drain it with ``processAllAvailable`` and
+    stop it: the one place every streaming job in this module runs.
 
-    ``n_rows`` (the query's PER-MICRO-BATCH row count — for these
+    The sink is a memory sink in output ``mode`` unless ``foreach_batch``
+    (a ``(batch_df, batch_id)`` function) is given, in which case nothing
+    is returned and the caller reads what the function wrote. A memory
+    sink's rows are returned as the sink's own frame: a stopped sink's
+    ``MemoryPlan`` holds its rows on the driver and serves them after its
+    view is dropped, so no second copy (no lineage cut) is needed. The
+    view and the checkpoint directory are removed whether or not the
+    query fails.
+
+    ``n_rows`` (the query's PER-MICRO-BATCH row count — for the
     single-batch availableNow streams, the whole input's footer row
     count) sizes the stateful operators' state-partition count — see
     ``_stream_shuffle_partitions``; ``target`` picks the per-partition
-    row budget (light aggregations vs the 4-store stream-stream join)."""
+    row budget (light aggregations vs the 4-store stream-stream join).
+    ``available_now=False`` keeps the default micro-batch trigger, which
+    a rate-limited source needs to drain across several batches."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
-
-    def drive() -> None:
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    if n_rows is not None:
-        with _stream_partitions(spark, n_rows, target):
-            drive()
+    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+    writer = stream.writeStream.option("checkpointLocation", ckpt)
+    if foreach_batch is None:
+        writer = writer.outputMode(mode).format("memory").queryName(name)
     else:
-        drive()
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+        writer = writer.foreachBatch(foreach_batch)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    try:
+        with (
+            _stream_partitions(spark, n_rows, target)
+            if n_rows is not None else nullcontext()
+        ):
+            q = writer.start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        return spark.table(name) if foreach_batch is None else None
+    finally:
+        if foreach_batch is None:
+            spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,8 +267,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream before the join) still drives append-mode window closure for the
     downstream aggregation, so the batch oracle replicates the same closure
     condition."""
-    from opencode_hive_archon_spark.session import read_table
-
     ev = _stream_events(spark, sf_dir)
     segments = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -534,69 +555,23 @@ def stream_late_data(spark: SparkSession, sf_dir: str, cut=None) -> DataFrame:
     Multi-batch arrival (maxFilesPerTrigger=1) is inherently harness-
     dependent => rows-only; tests assert held-back rows were dropped.
     """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(ev.dtypes).get("ts") == "bigint":
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    ev = normalize_timestamps(ev)
+    ev = read_table(spark, sf_dir, "events")
     if cut is None:
         cut = _ts_cut_from_metadata(sf_dir)
-
-    held_back = F.col("event_id") % 199 == 0
-    slices = [
-        ev.filter((F.col("ts") < F.lit(cut)) & ~held_back),   # batch 0: on time
-        ev.filter(F.col("ts") >= F.lit(cut)),                  # batch 1: advances watermark
-        ev.filter((F.col("ts") < F.lit(cut)) & held_back),     # batch 2: LATE -> dropped
-    ]
+    # batch 0: on time; batch 1: advances the watermark; batch 2: a
+    # held-back slice of batch 0's time range, LATE -> dropped
+    sliced = ev.withColumn(
+        "slice",
+        F.when(F.col("ts") >= F.lit(cut), F.lit(1))
+        .when(F.col("event_id") % 199 == 0, F.lit(2))
+        .otherwise(F.lit(0)),
+    )
     workdir = tempfile.mkdtemp(prefix="late_stream_")
-    indir = os.path.join(workdir, "in")
-    os.makedirs(indir)
     try:
-        # ONE partitioned write instead of three filter+coalesce(1) jobs
-        # (guide §1.2 step 1: the three slice predicates are disjoint and
-        # total, so one pass with a slice column replaces three full scans).
-        # Per-file contents are identical to the per-filter writes: slice
-        # membership is the only thing the stream depends on, and
-        # partitionBy drops the slice column so the data-file schema is
-        # unchanged.
-        sliced = ev.withColumn(
-            "slice",
-            F.when(F.col("ts") >= F.lit(cut), F.lit(1))
-            .when(held_back, F.lit(2))
-            .otherwise(F.lit(0)),
-        )
-        tmp = os.path.join(workdir, "slices")
-        sliced.repartition(F.col("slice")).write.mode("overwrite").partitionBy(
-            "slice"
-        ).parquet(tmp)
-        for i, sl in enumerate(slices):
-            sdir = os.path.join(tmp, f"slice={i}")
-            dst = os.path.join(indir, f"{i:04d}.parquet")
-            if os.path.isdir(sdir):
-                part = next(
-                    f for f in os.listdir(sdir) if f.endswith(".parquet")
-                )
-                shutil.copy(os.path.join(sdir, part), dst)
-            else:  # empty slice: still emit a (schema-only) batch file
-                w = os.path.join(workdir, f"w{i}")
-                sl.coalesce(1).write.mode("overwrite").parquet(w)
-                part = next(
-                    f for f in os.listdir(w) if f.endswith(".parquet")
-                )
-                shutil.copy(os.path.join(w, part), dst)
-            os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-
-        stream = spark.readStream.schema(
-            spark.read.parquet(indir).schema
-        ).option("maxFilesPerTrigger", 1).parquet(indir)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        stream = normalize_timestamps(stream)
+        indir = _write_time_slices(sliced, workdir, None, slice_ids=range(3))
         agg = (
-            stream.withWatermark("ts", WATERMARK_DELAY)
+            _parquet_stream(spark, indir, one_file_per_trigger=True)
+            .withWatermark("ts", WATERMARK_DELAY)
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
@@ -682,42 +657,31 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the identical function body writes to object storage and the
     read-back is the downstream consumer; nothing here is harness-specific
     except the temp directory."""
-    ev = _stream_events(spark, sf_dir)
-    proj = ev.select("event_id", "ts", "user_id", "event_type", "value")
+    proj = _stream_events(spark, sf_dir).select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
     out_dir = tempfile.mkdtemp(prefix="fb_sink_")
-    ckpt = tempfile.mkdtemp(prefix="fb_ckpt_")
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-    q = (
-        proj.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.processAllAvailable()
+        _run_to_table(spark, proj, foreach_batch=write_batch)
+        back = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
+        return (
+            back.groupBy(
+                F.date_trunc("day", F.col("ts")).alias("day"), F.col("event_type")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.countDistinct("user_id").alias("n_users"),
+                F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+            )
+            .orderBy("day", "event_type")
+            .localCheckpoint(eager=True)  # out_dir is deleted below
+        )
     finally:
-        q.stop()
-    back = (
-        spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
-    )
-    agg = (
-        back.groupBy(
-            F.date_trunc("day", F.col("ts")).alias("day"), F.col("event_type")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .orderBy("day", "event_type")
-    )
-    out = agg.localCheckpoint(eager=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 _ORACLE_FOREACHBATCH = """
@@ -809,36 +773,38 @@ def _ladder_ingest_ts():
 
 
 def _write_time_slices(sliced: DataFrame, workdir: str,
-                       replay_slice: int | None = 2) -> str:
-    """Write a frame carrying a 1..4 ``slice`` column as 4 time-ordered
-    parquet slices (ascending mtimes -> 4 chronological micro-batches under
-    maxFilesPerTrigger=1), optionally appending a byte-identical REPLAY of
-    one slice at the end — the at-least-once redelivery an object-store/
-    Kafka source produces. Returns the stream input dir."""
+                       replay_slice: int | None = 2,
+                       slice_ids=range(1, 5)) -> str:
+    """Write a frame carrying a ``slice`` column as one parquet file per
+    id in ``slice_ids`` (ascending mtimes -> chronological micro-batches
+    under maxFilesPerTrigger=1; a slice with no rows still gets a
+    schema-only file, so it is still a batch), optionally appending a
+    byte-identical REPLAY of one slice at the end — the at-least-once
+    redelivery an object-store/Kafka source produces. Returns the stream
+    input dir."""
     indir = os.path.join(workdir, "in")
     os.makedirs(indir, exist_ok=True)
-    # ONE partitioned write instead of four filter+coalesce(1) jobs: the
-    # old shape re-ran the (globally-windowed) slicing plan once per slice
-    # — 4 full passes over the input for 4 output files (guide §1.2 step 1:
-    # don't repeat passes). repartition(slice) puts each slice value in
+    # ONE partitioned write, not one filter job per slice, each of which
+    # would re-run the (globally-windowed) slicing plan (guide §1.2 step
+    # 1: don't repeat passes). repartition(slice) puts each slice value in
     # exactly one task, so every slice dir gets exactly one parquet file,
-    # and partitionBy drops the slice column from the data files — the
-    # same per-file contents as before (micro-batch membership, the only
-    # thing the streams depend on, is unchanged; row order within a file
-    # is not part of any declared result).
+    # and partitionBy drops the slice column from the data files; row
+    # order within a file is not part of any declared result.
     tmp = os.path.join(workdir, "slices")
     sliced.repartition(F.col("slice")).write.mode("overwrite").partitionBy(
         "slice"
     ).parquet(tmp)
-    srcs = []
-    for i in range(1, 5):
+    srcs = {}
+    for i in slice_ids:
         sdir = os.path.join(tmp, f"slice={i}")
+        if not os.path.isdir(sdir):  # empty slice: a schema-only file
+            sdir = os.path.join(workdir, f"empty={i}")
+            sliced.drop("slice").limit(0).coalesce(1).write.parquet(sdir)
         part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
-        dst = os.path.join(indir, f"{i:04d}.parquet")
-        shutil.copy(os.path.join(sdir, part), dst)
-        srcs.append(dst)
+        srcs[i] = os.path.join(indir, f"{i:04d}.parquet")
+        shutil.copy(os.path.join(sdir, part), srcs[i])
     if replay_slice is not None:
-        shutil.copy(srcs[replay_slice - 1], os.path.join(indir, "9999-replay.parquet"))
+        shutil.copy(srcs[replay_slice], os.path.join(indir, "9999-replay.parquet"))
     for i, f in enumerate(sorted(os.listdir(indir))):
         t = 1_700_000_000 + i * 100
         os.utime(os.path.join(indir, f), (t, t))
@@ -868,16 +834,9 @@ def _ladder_stream(spark: SparkSession, indir: str) -> DataFrame:
     replay contributes nothing, which is what makes the downstream merge
     exactly-once over an at-least-once source. Watermark eviction keeps the
     state table bounded (tests/test_streaming_state.py)."""
-    _ensure_rocksdb(spark)
-    schema = spark.read.parquet(indir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     return (
-        stream.select(
+        _parquet_stream(spark, indir, one_file_per_trigger=True).select(
             "doc_id", F.sha2(norm, 256).alias("h"), F.col("ingest_ts")
         )
         .withWatermark("ingest_ts", WATERMARK_DELAY)
@@ -902,10 +861,11 @@ def stream_dedup_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact check, not a rows-only one. Per-batch cost is O(batch + map);
     at production scale the same foreachBatch body is a MERGE INTO against
     a Delta/Iceberg digest table and the doc log is the ingest ledger."""
+    from opencode_hive_archon_spark.operators.similarity import corpus_rows
+
     workdir = tempfile.mkdtemp(prefix="dedup_ladder_")
     map_dir = os.path.join(workdir, "map")
     docs_dir = os.path.join(workdir, "docs")
-    ckpt = os.path.join(workdir, "ckpt")
     state = {"version": -1}
 
     def merge_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -946,29 +906,17 @@ def stream_dedup_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Input-derived state-partition count (see _stream_shuffle_
         # partitions): the in-stream dedup rung holds one RocksDB store
         # per state partition per batch, and the foreachBatch merge's
-        # groupBy inherits the same right-sized shuffle.
-        from opencode_hive_archon_spark.operators.similarity import (
-            corpus_rows,
+        # groupBy inherits the same right-sized shuffle. 4 slices at
+        # maxFilesPerTrigger=1 -> per-batch rows = total/4.
+        _run_to_table(
+            spark, _ladder_stream(spark, indir), foreach_batch=merge_batch,
+            n_rows=corpus_rows(sf_dir, "documents") // 4,
         )
-
-        # 4 slices at maxFilesPerTrigger=1 -> per-batch rows = total/4.
-        with _stream_partitions(spark, corpus_rows(sf_dir, "documents") // 4):
-            q = (
-                _ladder_stream(spark, indir)
-                .writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
         final_map = spark.read.parquet(
             os.path.join(map_dir, f"v{state['version']}")
         )
         doc_log = spark.read.parquet(os.path.join(docs_dir, "b*"))
-        out = (
+        return (
             doc_log.join(final_map, "h")
             .select(
                 "doc_id",
@@ -979,9 +927,8 @@ def stream_dedup_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_copies",
             )
             .orderBy("doc_id")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=True)  # workdir is deleted below
         )
-        return out
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1045,15 +992,9 @@ def _mv_stream(spark: SparkSession, indir: str) -> DataFrame:
     the downstream delta application is exactly-once over an
     at-least-once source (deltas are NOT idempotent, so this rung is what
     makes the foreachBatch merge below safe)."""
-    _ensure_rocksdb(spark)
-    schema = spark.read.parquet(indir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
     return (
-        stream.withWatermark("ingest_ts", WATERMARK_DELAY)
+        _parquet_stream(spark, indir, one_file_per_trigger=True)
+        .withWatermark("ingest_ts", WATERMARK_DELAY)
         .dropDuplicatesWithinWatermark(["key", "op"])
     )
 
@@ -1322,16 +1263,20 @@ def _mv_merge_batch(spark: SparkSession, mv_dir: str, bdf: DataFrame,
     _mv_gc(mv_dir, batch_id)
 
 
-def _mv_seed(spark: SparkSession, sf_dir: str, mv_dir: str) -> None:
-    seed_orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_custkey", "o_totalprice"
-    )
+def _mv_seed(spark: SparkSession, sf_dir: str, mv_dir: str,
+             orders: DataFrame | None = None) -> None:
+    """Write the MV's seed version (every bucket present, so the manifest
+    covers the key space) from ``orders`` — any frame with ``o_custkey``
+    and ``o_totalprice``; by default the orders table of ``sf_dir``."""
+    if orders is None:
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     # One exchange: bucket is a pure function of o_custkey, so hash-
     # partitioning on it satisfies the groupBy's clustering requirement
     # (bucket rides the grouping keys) — no second repartition before the
     # bucket-partitioned write (r19, guide §2.4; groups unchanged).
     seed = (
-        seed_orders.withColumn("bucket", _mv_bucket(F.col("o_custkey")))
+        orders.select("o_custkey", "o_totalprice")
+        .withColumn("bucket", _mv_bucket(F.col("o_custkey")))
         .repartition(F.col("bucket"))
         .groupBy("o_custkey", "bucket")
         .agg(
@@ -1351,6 +1296,23 @@ def _mv_seed(spark: SparkSession, sf_dir: str, mv_dir: str) -> None:
 def _mv_latest_manifest(mv_dir: str) -> dict:
     """The manifest of the highest committed batch (seed if none ran)."""
     return _mv_prev_manifest(mv_dir, 1 << 62)
+
+
+def _mv_result(spark: SparkSession, mv_dir: str) -> DataFrame:
+    """The MV at its latest manifest as the streaming MV queries' result:
+    live customers with their order count and total, lineage cut because
+    the caller deletes ``mv_dir``."""
+    manifest = _mv_latest_manifest(mv_dir)
+    return (
+        _mv_read_buckets(spark, mv_dir, manifest, sorted(manifest))
+        .where(F.col("n_orders") > 0)
+        .select(
+            "o_custkey", "n_orders",
+            F.col("total").cast("double").alias("total_price"),
+        )
+        .orderBy("o_custkey")
+        .localCheckpoint(eager=True)
+    )
 
 
 def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1390,10 +1352,10 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the dedup state is even consulted (ADVICE r11 #2;
     tests/test_streaming_state.py asserts numRowsDroppedByWatermark > 0
     for the replay batch)."""
+    from opencode_hive_archon_spark.operators.similarity import corpus_rows
+
     workdir = tempfile.mkdtemp(prefix="mv_stream_")
     mv_dir = os.path.join(workdir, "mv")
-    ckpt = os.path.join(workdir, "ckpt")
-    _mv_seed(spark, sf_dir, mv_dir)
 
     def merge_batch(bdf: DataFrame, batch_id: int) -> None:
         # No raw-batch checkpoint: _mv_merge_batch consumes bdf exactly
@@ -1402,45 +1364,58 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         _mv_merge_batch(bdf.sparkSession, mv_dir, bdf, batch_id)
 
     try:
+        _mv_seed(spark, sf_dir, mv_dir)
         indir = _mv_sliced_changelog(spark, sf_dir, workdir)
         # Input-derived state partitions for the dedup rung + foreachBatch
-        # merge shuffles (see _stream_shuffle_partitions); the changelog
-        # is a bounded fraction of orders, so orders' footer row count is
-        # the scale proxy.
-        from opencode_hive_archon_spark.operators.similarity import (
-            corpus_rows,
+        # merge shuffles (see _stream_shuffle_partitions): 4 slices at
+        # maxFilesPerTrigger=1 -> per-batch rows = total/4, with orders'
+        # footer row count as the scale proxy (the changelog is a bounded
+        # fraction of orders).
+        _run_to_table(
+            spark, _mv_stream(spark, indir), foreach_batch=merge_batch,
+            n_rows=corpus_rows(sf_dir, "orders") // 4,
         )
-
-        # 4 slices at maxFilesPerTrigger=1 -> per-batch rows = total/4
-        # (the changelog is itself a bounded fraction of orders).
-        with _stream_partitions(spark, corpus_rows(sf_dir, "orders") // 4):
-            q = (
-                _mv_stream(spark, indir)
-                .writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        manifest = _mv_latest_manifest(mv_dir)
-        final = _mv_read_buckets(
-            spark, mv_dir, manifest, sorted(set(manifest))
-        ).drop("bucket")
-        out = (
-            final.where(F.col("n_orders") > 0)
-            .select(
-                "o_custkey", "n_orders",
-                F.col("total").cast("double").alias("total_price"),
-            )
-            .orderBy("o_custkey")
-            .localCheckpoint(eager=True)
-        )
-        return out
+        return _mv_result(spark, mv_dir)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _cdf_stream(spark: SparkSession, table: str, **options) -> DataFrame:
+    """readStream over the delta table's change feed (the
+    ``delta_cdf_stream`` source of sources/deltalog.py)."""
+    from opencode_hive_archon_spark.sources.deltalog import DeltaCdfStreamSource
+
+    spark.dataSource.register(DeltaCdfStreamSource)
+    return (
+        spark.readStream.format("delta_cdf_stream")
+        .options(path=table, **options)
+        .load()
+    )
+
+
+def _cdf_sign():
+    """+1 for a change feed's inserted rows, -1 for its deleted rows."""
+    return F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
+
+
+def _cdf_signed_sums(spark: SparkSession, table: str, group_col: str) -> DataFrame:
+    """The table's whole change feed, drained into a memory sink, summed
+    signed per ``group_col``: ``(n_rows, key_sum, price_cents)`` over the
+    orders columns. Carried rows of a rewrite cancel, so the sums equal
+    the same aggregate over the final snapshot."""
+    sign = _cdf_sign()
+    return (
+        _run_to_table(spark, _cdf_stream(spark, table))
+        .groupBy(group_col)
+        .agg(
+            F.sum(sign).alias("n_rows"),
+            F.sum(sign * F.col("o_orderkey")).alias("key_sum"),
+            F.sum(
+                sign * F.round(F.col("o_totalprice") * F.lit(100)).cast("long")
+            ).alias("price_cents"),
+        )
+        .orderBy(group_col)
+    )
 
 
 CDFMV_SLICE_MOD = 3          # v0 seed: orders with o_orderkey ≡ 0 (mod 3)
@@ -1479,8 +1454,8 @@ def stream_delta_cdf_mv(
     commits touched (churn), and the merge reads/writes ONLY affected MV
     buckets — O(churn + affected buckets), never O(table) or O(MV);
     OPTIMIZE commits (dataChange: false) are skipped at the source."""
+    from opencode_hive_archon_spark.operators.similarity import corpus_rows
     from opencode_hive_archon_spark.sources.deltalog import (
-        DeltaCdfStreamSource,
         delta_delete,
         delta_merge,
         delta_snapshot,
@@ -1490,35 +1465,13 @@ def stream_delta_cdf_mv(
     workdir = tempfile.mkdtemp(prefix="cdfmv_stream_")
     table = os.path.join(workdir, "tbl")
     mv_dir = os.path.join(workdir, "mv")
-    ckpt = os.path.join(workdir, "ckpt")
-    dec = lambda c: c.cast("decimal(18,2)")  # noqa: E731
     try:
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
         s0 = orders.filter(F.col("o_orderkey") % CDFMV_SLICE_MOD == 0)
         delta_write(spark, s0.repartition(4), table)
-        # Seed the MV from the v0 snapshot (all buckets present so the
-        # manifest covers the key space, like _mv_seed).
-        # One exchange: partition by bucket (a function of the grouping
-        # key) before the groupBy — see _mv_seed (r19, guide §2.4).
-        seed = (
-            delta_snapshot(spark, table, version=0)
-            .withColumn("bucket", _mv_bucket(F.col("o_custkey")))
-            .repartition(F.col("bucket"))
-            .groupBy("o_custkey", "bucket")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_orders"),
-                F.sum(dec(F.col("o_totalprice")))
-                .cast("decimal(18,2)").alias("total"),
-            )
-        )
-        seed.write.partitionBy("bucket").mode(
-            "overwrite"
-        ).parquet(os.path.join(mv_dir, "seed"))
-        _mv_write_manifest(
-            mv_dir, "seed", {b: "seed" for b in range(N_MV_BUCKETS)}
-        )
+        _mv_seed(spark, sf_dir, mv_dir, delta_snapshot(spark, table, version=0))
         # v1 APPEND: cloned late-arriving orders.
         appended = s0.filter(
             F.col("o_orderkey") % CDFMV_APPEND_MOD == 0
@@ -1557,71 +1510,32 @@ def stream_delta_cdf_mv(
             # No raw-batch checkpoint: the signed projection feeds
             # _mv_merge_batch's single eager materialization point, so
             # each micro-batch's change files are read exactly ONCE.
-            sign = F.when(
-                F.col("_change_type") == "insert", F.lit(1)
-            ).otherwise(F.lit(-1))
+            sign = _cdf_sign()
             delta = bdf.select(
                 "o_custkey",
                 sign.alias("dn"),
-                dec(sign * F.col("o_totalprice")).alias("dp"),
+                (sign * F.col("o_totalprice")).cast("decimal(18,2)").alias("dp"),
             )
             _mv_merge_batch(bdf.sparkSession, mv_dir, delta, batch_id)
 
-        spark.dataSource.register(DeltaCdfStreamSource)
-        reader = (
-            spark.readStream.format("delta_cdf_stream")
-            .option("path", table)
-            .option("startingVersion", 0)
-        )
+        options = {"startingVersion": 0}
         if max_files_per_trigger is not None:
             # Rate-limited: (version, file) offsets cap each micro-batch
             # at that many change files; the default micro-batch trigger
             # (not availableNow) lets processAllAvailable drain the
             # backlog across MULTIPLE bounded batches.
-            reader = reader.option(
-                "maxFilesPerTrigger", str(max_files_per_trigger)
-            )
-            writer = (
-                reader.load()
-                .writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-            )
-        else:
-            writer = (
-                reader.load()
-                .writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-            )
+            options["maxFilesPerTrigger"] = max_files_per_trigger
         # Right-size every foreachBatch merge shuffle from the TABLE's
         # scale (the per-batch churn is a fraction of it) — the tailed
         # stream itself is stateless, but each batch's groupBy/repartition
         # jobs otherwise run at the session's cluster-sized constant.
-        from opencode_hive_archon_spark.operators.similarity import (
-            corpus_rows,
+        _run_to_table(
+            spark, _cdf_stream(spark, table, **options),
+            foreach_batch=merge_batch,
+            n_rows=corpus_rows(sf_dir, "orders") // CDFMV_SLICE_MOD,
+            available_now=max_files_per_trigger is None,
         )
-
-        with _stream_partitions(
-            spark, corpus_rows(sf_dir, "orders") // CDFMV_SLICE_MOD
-        ):
-            q = writer.start()
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        manifest = _mv_latest_manifest(mv_dir)
-        final = _mv_read_buckets(
-            spark, mv_dir, manifest, sorted(set(manifest))
-        ).drop("bucket")
-        return (
-            final.where(F.col("n_orders") > 0)
-            .select(
-                "o_custkey", "n_orders",
-                F.col("total").cast("double").alias("total_price"),
-            )
-            .orderBy("o_custkey")
-            .localCheckpoint(eager=True)
-        )
+        return _mv_result(spark, mv_dir)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1666,7 +1580,6 @@ def stream_delta_cdf_partitioned(
     commits touched; partition injection is a constant column per Arrow
     batch, no dir-name parsing, no Python row loop."""
     from opencode_hive_archon_spark.sources.deltalog import (
-        DeltaCdfStreamSource,
         delta_delete,
         delta_write,
     )
@@ -1694,41 +1607,7 @@ def stream_delta_cdf_partitioned(
         delta_delete(
             spark, table, f"o_totalprice >= {CDFP_DELETE_FLOOR}"
         )
-        spark.dataSource.register(DeltaCdfStreamSource)
-        sink = f"cdfpart_{uuid.uuid4().hex[:12]}"
-        q = (
-            spark.readStream.format("delta_cdf_stream")
-            .option("path", table)
-            .load()
-            .writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        feed = spark.table(sink)
-        sign = F.when(
-            F.col("_change_type") == "insert", F.lit(1)
-        ).otherwise(F.lit(-1))
-        out = (
-            feed.groupBy("o_orderpriority")
-            .agg(
-                F.sum(sign).alias("n_rows"),
-                F.sum(sign * F.col("o_orderkey")).alias("key_sum"),
-                F.sum(
-                    sign
-                    * F.round(F.col("o_totalprice") * F.lit(100))
-                    .cast("long")
-                ).alias("price_cents"),
-            )
-            .orderBy("o_orderpriority")
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(sink)
-        return out
+        return _cdf_signed_sums(spark, table, "o_orderpriority")
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1776,7 +1655,6 @@ def stream_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies a positional mask — no row-index join, no Python row loop;
     a wide DV delete streams as one masked re-read of its hit files."""
     from opencode_hive_archon_spark.sources.deltalog import (
-        DeltaCdfStreamSource,
         delta_delete,
         delta_write,
     )
@@ -1795,41 +1673,7 @@ def stream_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_delete(
             spark, table, f"o_orderkey % {CDFDV_DEL2_MOD} = 0", use_dv=True
         )
-        spark.dataSource.register(DeltaCdfStreamSource)
-        sink = f"cdfdv_{uuid.uuid4().hex[:12]}"
-        q = (
-            spark.readStream.format("delta_cdf_stream")
-            .option("path", table)
-            .load()
-            .writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        feed = spark.table(sink)
-        sign = F.when(
-            F.col("_change_type") == "insert", F.lit(1)
-        ).otherwise(F.lit(-1))
-        out = (
-            feed.groupBy("o_orderstatus")
-            .agg(
-                F.sum(sign).alias("n_rows"),
-                F.sum(sign * F.col("o_orderkey")).alias("key_sum"),
-                F.sum(
-                    sign
-                    * F.round(F.col("o_totalprice") * F.lit(100))
-                    .cast("long")
-                ).alias("price_cents"),
-            )
-            .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(sink)
-        return out
+        return _cdf_signed_sums(spark, table, "o_orderstatus")
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 

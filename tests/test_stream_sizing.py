@@ -81,10 +81,12 @@ def test_stream_partitions_ctx_restores_conf(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
-def test_write_time_slices_membership_unchanged(spark, sf_dir):
+@pytest.mark.parametrize("empty_slice", [None, 3], ids=["full", "empty_slice"])
+def test_write_time_slices_membership_unchanged(spark, sf_dir, empty_slice):
     """The one-pass partitioned write must produce per-file contents with
     the same slice membership as the old per-filter writes, plus a replay
-    file byte-identical to its source slice."""
+    file byte-identical to its source slice. A slice with no rows
+    (``empty_slice``) still gets its file, schema-only, in mtime order."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -93,6 +95,12 @@ def test_write_time_slices_membership_unchanged(spark, sf_dir):
     sliced = docs.withColumn(
         "slice", F.ntile(4).over(Window.orderBy("doc_id"))
     )
+    if empty_slice is not None:  # its rows move to the next slice
+        sliced = sliced.withColumn(
+            "slice",
+            F.when(F.col("slice") == empty_slice, empty_slice + 1)
+            .otherwise(F.col("slice")),
+        )
     workdir = tempfile.mkdtemp(prefix="slice_pin_")
     try:
         indir = _write_time_slices(sliced, workdir, replay_slice=2)
@@ -112,6 +120,9 @@ def test_write_time_slices_membership_unchanged(spark, sf_dir):
             got_df = spark.read.parquet(os.path.join(indir, f"{i:04d}.parquet"))
             # partitionBy drops the slice column from the data files
             assert "slice" not in got_df.columns
+            # an empty slice's file carries the schema and no rows
+            assert got_df.schema == docs.schema
+            assert bool(expected[i]) == (i != empty_slice)
             got = {r["doc_id"] for r in got_df.select("doc_id").collect()}
             assert got == expected[i], f"slice {i} membership changed"
         # replay file is byte-identical to its source slice

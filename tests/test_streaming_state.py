@@ -575,3 +575,67 @@ def test_cdf_streams_leave_no_sink_view(spark, sf_dir):
     J.stream_delta_cdf_dv(spark, sf_dir).collect()
     after = {t.name for t in spark.catalog.listTables()}
     assert after - before == set()
+
+
+@pytest.mark.parametrize("sink", ["memory", "foreach_batch"])
+def test_failed_stream_leaves_nothing_behind(
+    spark, sf_dir, tmp_path, monkeypatch, sink
+):
+    """A streaming query that fails mid-drain leaves no sink view in the
+    session catalog and no temp dir (checkpoint, foreachBatch output)
+    behind: both are removed on the way out, not only on success."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    if sink == "memory":
+        indir = str(tmp_path / "in")
+        spark.range(20).write.parquet(indir)
+        stream = spark.readStream.schema("id long").parquet(indir)
+
+        def run():
+            J._run_to_table(
+                spark, stream.select(F.assert_true(F.col("id") < 0)), "append"
+            )
+    else:
+        J._stream_events(spark, sf_dir)  # the session-kept events link dir
+
+        def fail(self, *args, **kwargs):
+            raise RuntimeError("sink write failed")
+
+        # foreachBatch functions run in this (the driver's) Python process
+        monkeypatch.setattr(DataFrameWriter, "parquet", fail)
+
+        def run():
+            J.stream_foreachbatch_sink(spark, sf_dir)
+
+    views = {t.name for t in spark.catalog.listTables()}
+    dirs = set(os.listdir(tmp))
+    with pytest.raises(StreamingQueryException):
+        run()
+    assert {t.name for t in spark.catalog.listTables()} == views
+    assert set(os.listdir(tmp)) == dirs
+
+
+def test_memory_sink_result_is_not_copied(spark, sf_dir):
+    """A memory-sink result is the stopped sink's own frame: one
+    stream_tumbling_counts call runs ONE job in the caller's job group
+    (the schema read of the events stream; its micro-batch jobs run under
+    the query's own group), where an eager localCheckpoint of the sink
+    made it two. The result plan reads the sink, not a checkpointed RDD."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"one_copy_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "stream_tumbling_counts")
+    try:
+        out = J.stream_tumbling_counts(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "MemoryPlan" in plan and "LogicalRDD" not in plan
+    assert out.count() > 0

@@ -70,21 +70,6 @@ FLAGS_JSON = _snapshot_json(default_feature_flags())
 STATUS_JSON = _snapshot_json(default_provider_status())
 
 
-def _table_stamp(path: str) -> tuple:
-    """``(name, size, mtime_ns)`` of every file of a parquet table, a single
-    file or a directory of part files, read with ``os`` on the driver. Any
-    rewrite of the table changes it."""
-    if os.path.isdir(path):
-        return tuple(sorted(
-            (e.name, st.st_size, st.st_mtime_ns)
-            for e in os.scandir(path)
-            if e.is_file()
-            for st in (e.stat(),)
-        ))
-    st = os.stat(path)
-    return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
-
-
 def recall_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The session-resident document corpus every recall route scores:
     ``(id, content, source, toks)`` with ``toks = norm_tokens(text)``.
@@ -96,11 +81,13 @@ def recall_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     one is built. Requests then scan cached rows and intersect token
     arrays; no request reads the parquet or shuffles the documents."""
     path = os.path.abspath(f"{sf_dir}/documents.parquet")
-    key = ("recall_corpus", path, _table_stamp(path))
+    key = ("recall_corpus", path, session._table_stamp(path))
     session.drop_keyed(spark, key[:2], keep=key)
 
     def build() -> DataFrame:
-        docs = spark.read.parquet(path).repartition(spark.sparkContext.defaultParallelism)
+        docs = session.read_table(spark, sf_dir, "documents").repartition(
+            spark.sparkContext.defaultParallelism
+        )
         return docs.select(
             F.col("doc_id").alias("id"),
             F.col("text").alias("content"),
@@ -675,7 +662,7 @@ def recall_multi_provider_rerank(
     # events log: props.k references the document a user interaction was
     # about — the engagement ground truth both data-derived criteria read
     ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        session.read_table(spark, sf_dir, "events")
         .select(
             F.get_json_object("props", "$.k").cast("int").alias("k"),
             "event_type",

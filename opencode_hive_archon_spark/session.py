@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -248,8 +249,62 @@ def _fix_ts(df: DataFrame) -> DataFrame:
     return normalize_timestamps(df)
 
 
+def _table_stamp(path: str) -> tuple:
+    """``(name, size, mtime_ns)`` of every file of a parquet table, a single
+    file or a directory of part files, read with ``os`` on the driver. Any
+    rewrite of the table changes it."""
+    if os.path.isdir(path):
+        return tuple(sorted(
+            (e.name, st.st_size, st.st_mtime_ns)
+            for e in os.scandir(path)
+            if e.is_file()
+            for st in (e.stat(),)
+        ))
+    st = os.stat(path)
+    return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+
+
+# The parquet-to-Spark type mapping confs that schema inference reads: a
+# schema inferred under one setting is wrong under another.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# Session-scoped inferred schemas, one entry per table path:
+# path -> (key, schema), the key being the session id, the files' stamps and
+# the type-mapping confs. A key that no longer matches replaces the entry.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _table_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet table at ``path``, inferred
+    once per session and per version of the files. Inference is a Spark job
+    plus a footer read; a reader given the schema skips both. A rewritten
+    file (new stamp) or a changed type-mapping conf is inferred again, and
+    the stale entry for the path is replaced, so a schema is never served
+    stale."""
+    path = os.path.abspath(path)
+    key = (
+        spark.sparkContext.applicationId,
+        _table_stamp(path),
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[path] = (key, schema)
+    return schema
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table with type normalization.
+
+    The reader is given the table's schema from :func:`_table_schema`, so
+    only the first read of a table in a session runs inference.
 
     ``events.ts`` has appeared as parquet TIMESTAMP(NANOS), read as raw
     int64 under the legacy nanosAsLong conf and converted by
@@ -257,10 +312,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (TIMESTAMP_NTZ), normalized by :func:`normalize_timestamps`. Either
     way downstream code sees TIMESTAMP.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         _nanos_as_long(spark)
-        return _fix_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    df = spark.read.schema(_table_schema(spark, path)).parquet(path)
+    return _fix_ts(df) if name == "events" else normalize_timestamps(df)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -30,7 +30,12 @@ from contextlib import contextmanager, nullcontext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from opencode_hive_archon_spark.session import _fix_ts, _nanos_as_long, read_table
+from opencode_hive_archon_spark.session import (
+    _fix_ts,
+    _nanos_as_long,
+    _table_schema,
+    read_table,
+)
 from opencode_hive_archon_spark.spec import QuerySpec
 
 WATERMARK_DELAY = "10 minutes"
@@ -76,8 +81,12 @@ the stream total: a single-batch query pays the store floor once, while an
 N-batch pipeline re-pays it every batch over 1/N of the rows. Measured at
 the 100 k-row single-batch point (quiet host): the derived 4 partitions
 beat 16 by ~0.3-0.8 s per aggregation query and beat the session constant
-32 by ~1-2.5 s; the multi-batch foreachBatch pipelines measured best at
-their derived 4-6. Production deployments size it explicitly via
+32 by ~1-2.5 s. There is no floor: a batch of at most one target's rows
+gets ONE store, since a second store holding a few hundred rows only adds
+its open/commit/checkpoint cost. Measured on the 10 k-row, 2-batch
+``stream_tumbling_counts`` (4 cores): a floor of 4 stores took its
+state-store commit time from 178 ms to 1,590 ms per 3 calls. Production
+deployments size it explicitly via
 ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` (state volume / target per-store
 size); the derived local default keeps the driver's bench comparable
 across core counts because it depends on the DATA, not on
@@ -95,11 +104,15 @@ stream_stream_join over 100 k rows/side): 4 partitions 9.9 s, 8 -> 7.9 s,
 def _stream_shuffle_partitions(
     spark: SparkSession, n_rows: int, target: int = STREAM_STATE_TARGET_ROWS
 ) -> int:
+    """State partitions for a query of ``n_rows`` rows per micro-batch:
+    one per ``target`` rows (ceil), at least 1, at most the cluster's
+    default parallelism. ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS``
+    overrides the count."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
     if env:
         return max(1, int(env))
     cap = max(int(spark.sparkContext.defaultParallelism), 1)
-    return max(4, min(cap, -(-int(n_rows) // target)))
+    return max(1, min(cap, -(-int(n_rows) // target)))
 
 
 @contextmanager
@@ -133,15 +146,22 @@ def _events_rows(sf_dir: str) -> int:
 
 
 def _parquet_stream(
-    spark: SparkSession, indir: str, one_file_per_trigger: bool = False
+    spark: SparkSession,
+    indir: str,
+    one_file_per_trigger: bool = False,
+    schema_path: str | None = None,
 ) -> DataFrame:
     """readStream over a parquet directory: the schema from a batch read,
-    optionally one file per micro-batch (``maxFilesPerTrigger=1``, for the
-    time-ordered slice dirs), the RocksDB provider pinned, and the events
-    ``ts`` fix of ``read_table``."""
+    or the session's cached schema of ``schema_path`` (a testdata table the
+    directory exposes), optionally one file per micro-batch
+    (``maxFilesPerTrigger=1``, for the time-ordered slice dirs), the
+    RocksDB provider pinned, and the events ``ts`` fix of ``read_table``."""
     _ensure_rocksdb(spark)
     _nanos_as_long(spark)
-    reader = spark.readStream.schema(spark.read.parquet(indir).schema)
+    reader = spark.readStream.schema(
+        _table_schema(spark, schema_path) if schema_path
+        else spark.read.parquet(indir).schema
+    )
     if one_file_per_trigger:
         reader = reader.option("maxFilesPerTrigger", 1)
     return _fix_ts(reader.parquet(indir))
@@ -163,7 +183,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.remove(link)
     if not os.path.exists(link):
         os.symlink(target, link)
-    return _parquet_stream(spark, stream_dir)
+    return _parquet_stream(spark, stream_dir, schema_path=target)
 
 
 def _run_to_table(
@@ -814,7 +834,7 @@ def _write_time_slices(sliced: DataFrame, workdir: str,
 def _ladder_sliced_docs(spark: SparkSession, sf_dir: str, workdir: str,
                         replay_slice: int | None = 2) -> str:
     """documents as 4 ingest-time-ordered slices + a replayed slice."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", _ladder_ingest_ts().alias("ingest_ts")
     )
     from pyspark.sql import Window
@@ -947,7 +967,7 @@ def _mv_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         CDC_UPD_MOD,
     )
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     dec = lambda c: c.cast("decimal(18,2)")  # noqa: E731
@@ -1269,7 +1289,7 @@ def _mv_seed(spark: SparkSession, sf_dir: str, mv_dir: str,
     covers the key space) from ``orders`` — any frame with ``o_custkey``
     and ``o_totalprice``; by default the orders table of ``sf_dir``."""
     if orders is None:
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        orders = read_table(spark, sf_dir, "orders")
     # One exchange: bucket is a pure function of o_custkey, so hash-
     # partitioning on it satisfies the groupBy's clustering requirement
     # (bucket rides the grouping keys) — no second repartition before the
@@ -1466,7 +1486,7 @@ def stream_delta_cdf_mv(
     table = os.path.join(workdir, "tbl")
     mv_dir = os.path.join(workdir, "mv")
     try:
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
         s0 = orders.filter(F.col("o_orderkey") % CDFMV_SLICE_MOD == 0)
@@ -1587,7 +1607,7 @@ def stream_delta_cdf_partitioned(
     workdir = tempfile.mkdtemp(prefix="cdfpart_stream_")
     table = os.path.join(workdir, "tbl")
     try:
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
         s0 = orders.filter(F.col("o_orderkey") % CDFP_SLICE_MOD == 3)
@@ -1662,7 +1682,7 @@ def stream_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     workdir = tempfile.mkdtemp(prefix="cdfdv_stream_")
     table = os.path.join(workdir, "tbl")
     try:
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderstatus"
         )
         s0 = orders.filter(F.col("o_orderkey") % CDFDV_SLICE_MOD == 1)

@@ -6,7 +6,7 @@ result-invariant:
 * state-partition sizing (`_stream_shuffle_partitions`): Structured
   Streaming fixes each stateful operator's state-partition count at query
   start from ``spark.sql.shuffle.partitions`` and AQE never coalesces
-  stateful exchanges, so the count is DERIVED from input rows (floor 4,
+  stateful exchanges, so the count is DERIVED from input rows (at least 1,
   cap = cluster parallelism, env override for production sizing). These
   tests pin the derivation arithmetic, the env override, and that the
   context manager restores the session conf even on error.
@@ -27,6 +27,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.readwriter import DataStreamWriter
 
 from opencode_hive_archon_spark.streaming.jobs import (
     STREAM_JOIN_TARGET_ROWS,
@@ -34,31 +35,65 @@ from opencode_hive_archon_spark.streaming.jobs import (
     _stream_partitions,
     _stream_shuffle_partitions,
     _write_time_slices,
+    stream_tumbling_counts,
 )
 
 
 def test_stream_partitions_derive_from_rows(spark, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
     cap = max(int(spark.sparkContext.defaultParallelism), 1)
-    # tiny input: floor of 4, never the session constant
-    assert _stream_shuffle_partitions(spark, 1) == min(4, cap) or (
-        _stream_shuffle_partitions(spark, 1) == 4
-    )
+    # tiny input: one state partition, never the session constant
+    assert _stream_shuffle_partitions(spark, 1) == 1
+    assert _stream_shuffle_partitions(spark, STREAM_STATE_TARGET_ROWS) == 1
     # grows linearly with rows: one partition per TARGET rows (ceil)
-    want = min(cap, 10)
+    assert _stream_shuffle_partitions(
+        spark, STREAM_STATE_TARGET_ROWS + 1
+    ) == min(cap, 2)
     assert (
         _stream_shuffle_partitions(spark, 10 * STREAM_STATE_TARGET_ROWS)
-        == max(4, want)
+        == min(cap, 10)
     )
     # capped at cluster parallelism, no matter the input size
-    assert _stream_shuffle_partitions(spark, 10**12) == max(4, cap)
+    assert _stream_shuffle_partitions(spark, 10**12) == cap
     # the 4-store stream-stream join uses the ~4x finer target: at the
     # 100k-row single-batch point that is 16 partitions (measured knee),
     # still capped by cluster parallelism
     assert _stream_shuffle_partitions(
         spark, 100_000, STREAM_JOIN_TARGET_ROWS
-    ) == max(4, min(cap, 16))
+    ) == min(cap, 16)
     assert STREAM_JOIN_TARGET_ROWS < STREAM_STATE_TARGET_ROWS
+    # below 4 cores the parallelism cap still wins for every input size
+    for cores in (1, 2, 3):
+        monkeypatch.setattr(
+            type(spark.sparkContext), "defaultParallelism",
+            property(lambda self, n=cores: n),
+        )
+        assert _stream_shuffle_partitions(spark, 1) == 1
+        assert _stream_shuffle_partitions(spark, 10**12) == cores
+        assert _stream_shuffle_partitions(
+            spark, 100_000, STREAM_JOIN_TARGET_ROWS
+        ) == cores
+
+
+def test_stream_tumbling_counts_state_partitions(spark, sf_dir, monkeypatch):
+    """At sf0.001 (1,000 events, under one target's worth),
+    stream_tumbling_counts starts its aggregation with ONE state partition;
+    the old floor made it 4. (Its job count in the caller's group is pinned
+    by test_streaming_state::test_memory_sink_result_is_not_copied.)"""
+    queries = []
+    start = DataStreamWriter.start
+
+    def spy(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        queries.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    assert stream_tumbling_counts(spark, sf_dir).count() > 0
+    (q,) = queries
+    ops = [op for p in q.recentProgress for op in p.stateOperators]
+    assert ops and {op.numShufflePartitions for op in ops} == {1}
 
 
 def test_stream_partitions_env_override_wins(spark, monkeypatch):

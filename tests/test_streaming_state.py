@@ -567,9 +567,9 @@ def test_mv_gc_floor_clamp_protects_retry_manifest(spark, sf_dir, monkeypatch):
 
 def test_cdf_streams_leave_no_sink_view(spark, sf_dir):
     """The partitioned and DV change-feed streams drain into a memory
-    sink; once the aggregate is checkpointed the sink's view is dropped,
-    so a call leaves no name (and none of the sink's rows) behind in the
-    session catalog."""
+    sink whose view ``_run_to_table`` drops in its ``finally``, so a call
+    leaves no name (and none of the sink's rows) behind in the session
+    catalog."""
     before = {t.name for t in spark.catalog.listTables()}
     J.stream_delta_cdf_partitioned(spark, sf_dir).collect()
     J.stream_delta_cdf_dv(spark, sf_dir).collect()
@@ -620,13 +620,15 @@ def test_failed_stream_leaves_nothing_behind(
 
 
 def test_memory_sink_result_is_not_copied(spark, sf_dir):
-    """A memory-sink result is the stopped sink's own frame: one
-    stream_tumbling_counts call runs ONE job in the caller's job group
-    (the schema read of the events stream; its micro-batch jobs run under
-    the query's own group), where an eager localCheckpoint of the sink
-    made it two. The result plan reads the sink, not a checkpointed RDD."""
+    """A memory-sink result is the stopped sink's own frame: with the
+    events schema already known to the session, one stream_tumbling_counts
+    call runs NO job in the caller's job group (its micro-batch jobs run
+    under the query's own group), where an eager localCheckpoint of the
+    sink would add one. The result plan reads the sink, not a checkpointed
+    RDD."""
     import uuid
 
+    J._stream_events(spark, sf_dir)  # the events schema, inferred once
     sc = spark.sparkContext
     group = f"one_copy_{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, "stream_tumbling_counts")
@@ -635,7 +637,7 @@ def test_memory_sink_result_is_not_copied(spark, sf_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "MemoryPlan" in plan and "LogicalRDD" not in plan
     assert out.count() > 0

@@ -59,6 +59,8 @@ the subset needed for a correct single-cluster lakehouse table:
 - **Partitioned tables**: ``partitionBy`` writes keep the hive layout,
   ``partitionValues`` ride the add actions, and snapshot reads go through
   ``basePath`` so partition pruning still applies to the returned frame.
+  ``delta_write(mode="overwrite_partitions")`` replaces exactly the
+  partitions the frame has rows for, through the one overwrite path.
 - **One batch reader**: ``_read_state`` turns any list of file actions
   into rows — plain files through ``_read_paths``, DV'd files through
   ``_scan_with_row_index`` — with one scan per data root, so a shallow
@@ -2156,13 +2158,20 @@ def delta_write(
     watermark survives checkpoint truncation (checkpoints carry the
     latest txn per appId, per spec).
 
+    `overwrite_partitions` (dynamic partition overwrite) removes only the
+    live files whose partitionValues equal a staged add's, in the commit
+    that adds df's files, so it replaces exactly the partitions df has
+    rows for (none for an empty df). df must match an existing
+    partitioned table's schema and partitioning, else DeltaProtocolError
+    is raised before anything is staged.
+
     An append to an existing table is `delta_append` (inherit the
     table's partitionColumns when partition_by is omitted, reject a
     mismatch, OCC retry); an overwrite whose schema or partitioning
     differs writes an updated metaData action in the same commit
     (schema evolution), so replay always reads the new files with the
     right schema."""
-    if mode not in ("append", "overwrite"):
+    if mode not in ("append", "overwrite", "overwrite_partitions"):
         # Validate BEFORE the v==0 branch: a first commit must not treat
         # 'ignore' / 'errorifexists' / a typo as a normal write.
         raise ValueError(f"unsupported mode: {mode!r}")
@@ -2172,7 +2181,12 @@ def delta_write(
             "generated columns are declared at table creation; "
             f"{table} already exists at v{v - 1}"
         )
+    dynamic = mode == "overwrite_partitions"
     if v == 0:
+        if dynamic:
+            raise DeltaProtocolError(
+                f"overwrite_partitions needs an existing table: {table}"
+            )
         return _delta_create(
             spark, df, table, mode, partition_by, name, txn, generated
         )
@@ -2185,13 +2199,6 @@ def delta_write(
         return v - 1  # already committed by a prior attempt
     _check_append_only(prior, "overwrite")
     df = _complete_generated(df, prior["meta"])
-    _enforce_constraints(df, prior["meta"])
-    write_meta = prior["meta"]
-    actions = _txn_actions(txn)
-    ts = _now_ms()
-    actions.extend(
-        {"remove": _remove_action(f, ts, True)} for f in prior["files"]
-    )
     # Caller said nothing about partitioning: keep the table's — an
     # overwrite should not silently flatten a partitioned layout.
     # Repartitioning is an explicit partition_by=[...].
@@ -2199,9 +2206,19 @@ def delta_write(
         prior["partition_columns"] if partition_by is None
         else list(partition_by)
     )
-    if not _same_shape(
+    reshaped = not _same_shape(
         prior["meta"]["schemaString"], df.schema.json()
-    ) or partition_by != prior["partition_columns"]:
+    ) or partition_by != prior["partition_columns"]
+    if dynamic and (reshaped or not partition_by):
+        raise DeltaProtocolError(
+            f"overwrite_partitions needs df to match the partitioned "
+            f"table's schema and partition columns {prior['partition_columns']}"
+            f" at {table}"
+        )
+    _enforce_constraints(df, prior["meta"])
+    write_meta = prior["meta"]
+    actions = _txn_actions(txn)
+    if reshaped:
         # Schema evolution (overwriteSchema): the SAME commit that
         # swaps the file set updates the metaData, so replay reads
         # the new files with the new schema (v0's metaData alone
@@ -2226,11 +2243,19 @@ def delta_write(
         # Staging translates logical -> physical under the NEW
         # metaData (fresh physical names for new columns).
         write_meta = meta_update
-    actions.extend(
-        _stage_data_files(df, table, v, partition_by, meta=write_meta)
-    )
+    adds = _stage_data_files(df, table, v, partition_by, meta=write_meta)
+    replaced = prior["files"]
+    if dynamic:
+        # partitionValues on both sides come from the same staging
+        # (physical names under column mapping), so equality is exact.
+        part = lambda f: tuple(sorted(f["partitionValues"].items()))  # noqa: E731
+        staged = {part(a["add"]) for a in adds}
+        replaced = [f for f in replaced if part(f) in staged]
+    ts = _now_ms()
+    actions.extend({"remove": _remove_action(f, ts, True)} for f in replaced)
+    actions.extend(adds)
     return _commit_operation(
-        spark, table, v, "WRITE", {"mode": "OVERWRITE"}, actions
+        spark, table, v, "WRITE", {"mode": mode.upper()}, actions
     )
 
 

@@ -37,6 +37,14 @@ from opencode_hive_archon_spark.session import (
     read_table,
 )
 from opencode_hive_archon_spark.spec import QuerySpec
+from opencode_hive_archon_spark.sources.deltalog import (
+    DeltaCdfStreamSource,
+    delta_delete,
+    delta_merge,
+    delta_snapshot,
+    delta_write,
+)
+from opencode_hive_archon_spark.sources.deltastats import delta_scan
 
 WATERMARK_DELAY = "10 minutes"
 
@@ -1011,7 +1019,8 @@ def _mv_stream(spark: SparkSession, indir: str) -> DataFrame:
     carries identical deltas, so the drop is arrival-order-invariant and
     the downstream delta application is exactly-once over an
     at-least-once source (deltas are NOT idempotent, so this rung is what
-    makes the foreachBatch merge below safe)."""
+    makes the foreachBatch merge safe: the Delta MV's txn only guards a
+    retried batch, not a row delivered twice across batches)."""
     return (
         _parquet_stream(spark, indir, one_file_per_trigger=True)
         .withWatermark("ingest_ts", WATERMARK_DELAY)
@@ -1020,10 +1029,11 @@ def _mv_stream(spark: SparkSession, indir: str) -> DataFrame:
 
 
 N_MV_BUCKETS = 16
-"""Hash-bucket fan-out of the persistent MV. Locally 16; at production
-scale this is sized so one bucket ~ one task's worth of MV rows (e.g.
-4096 buckets for a 10^9-customer MV), making per-batch merge cost
-O(batch churn + rows in AFFECTED buckets), not O(|MV|)."""
+"""Hash-bucket fan-out of the persistent MV, which is a Delta table
+partitioned by ``bucket``. Locally 16; at production scale this is sized
+so one bucket ~ one task's worth of MV rows (e.g. 4096 buckets for a
+10^9-customer MV), making per-batch merge cost O(batch churn + rows in
+AFFECTED buckets), not O(|MV|)."""
 
 
 def _mv_bucket(col):
@@ -1032,197 +1042,17 @@ def _mv_bucket(col):
     return F.pmod(F.xxhash64(col), F.lit(N_MV_BUCKETS)).cast("int")
 
 
-MV_MANIFEST_RETAIN = 3
-"""Committed manifests kept behind the head (the crash-retry horizon):
-a retry of batch b needs manifest_v{b-1}, so anything older than
-head - MV_MANIFEST_RETAIN is dead metadata and GC'd — the parquet
-analogue of Delta log checkpoint + retention (VERDICT r12 #1).
-
-Retry correctness requires >= 2: with RETAIN=1, GC after committing
-batch b would delete manifest_v{b-1}, the exact manifest a crash-retry
-of batch b must merge against (ADVICE r13 #2). Enforced both here (so a
-misconfiguration fails at import, not as silent data loss) and as a
-floor clamp inside _mv_gc."""
-if MV_MANIFEST_RETAIN < 2:  # pragma: no cover - config guard
-    raise ValueError(
-        f"MV_MANIFEST_RETAIN={MV_MANIFEST_RETAIN} breaks crash-retry: a "
-        "retry of batch b merges against manifest_v{b-1}, which RETAIN<2 "
-        "lets GC delete"
-    )
-
-MV_COMPACT_DIR_THRESHOLD = 6
-"""When a batch's tentative manifest would reference more distinct
-version dirs than this, the batch rewrites ALL buckets into its own
-v{batch_id} (an OPTIMIZE/compaction rung). Decided from (prev manifest,
-affected set) only — both batch_id-deterministic — so a crash retry
-makes the identical choice. Bounds live version dirs (and therefore
-files and final-read fan-in) at the threshold regardless of how many
-batches ever ran."""
-
-
-def _mv_manifest_path(mv_dir: str, version: str) -> str:
-    return os.path.join(mv_dir, f"manifest_{version}.json")
-
-
-def _mv_write_manifest(mv_dir: str, version: str, mapping: dict) -> None:
-    """bucket -> version-dir map, written tmp+rename so readers never see
-    a torn manifest (the parquet-dir analogue of a Delta log commit).
-
-    Driver-local POSIX I/O: the atomic-rename guarantee holds because
-    mv_dir is a driver-local path (tempfile.mkdtemp in every caller) —
-    on HDFS/S3 this whole manifest layer is replaced by the Delta/Iceberg
-    commit log already named as the production swap (ADVICE r12 #3) —
-    implemented in-repo since round 14: sources/deltalog.py provides the
-    same atomic-commit + checkpointed-replay contract (put-if-absent
-    versions, _last_checkpoint head pointer, retention GC = VACUUM)."""
-    import json
-
-    path = _mv_manifest_path(mv_dir, version)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({str(k): v for k, v in mapping.items()}, fh)
-    os.replace(tmp, path)
-
-
-def _mv_read_manifest(mv_dir: str, version: str) -> dict:
-    import json
-
-    with open(_mv_manifest_path(mv_dir, version)) as fh:
-        return {int(k): v for k, v in json.load(fh).items()}
-
-
-def _mv_pointer_path(mv_dir: str) -> str:
-    return os.path.join(mv_dir, "_latest")
-
-
-def _mv_write_pointer(mv_dir: str, batch_id: int) -> None:
-    """Head pointer: the highest committed batch id, in one tiny file
-    (tmp+rename, driver-local FS like the manifests). Written AFTER the
-    batch's manifest, so the pointer never names a manifest that doesn't
-    exist. Replaces the O(#batches) listdir scan per batch with an O(1)
-    read (ADVICE r12 #1 / VERDICT r12 #1)."""
-    path = _mv_pointer_path(mv_dir)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        fh.write(str(batch_id))
-    os.replace(tmp, path)
-
-
-def _mv_read_pointer(mv_dir: str) -> int:
-    """Highest committed batch id, -1 if only the seed exists.
-
-    A missing pointer file does NOT mean "no commits": the pointer is
-    written after the batch's manifest (crash between the two writes), or
-    the tiny _latest file can be lost out-of-band while the manifests
-    survive. Silently returning -1 in that state would make
-    _mv_prev_manifest fall back to the seed and re-apply every delta since
-    batch 0 (ADVICE r13 #1) — so on a missing pointer, rebuild it from a
-    one-time manifest scan (the recovery analogue of replaying the Delta
-    log when _last_checkpoint is absent) and self-heal the file."""
-    try:
-        with open(_mv_pointer_path(mv_dir)) as fh:
-            return int(fh.read().strip())
-    except FileNotFoundError:
-        committed = [
-            int(name[len("manifest_v"):-len(".json")])
-            for name in os.listdir(mv_dir)
-            if name.startswith("manifest_v") and name.endswith(".json")
-        ]
-        if not committed:
-            return -1
-        head = max(committed)
-        _mv_write_pointer(mv_dir, head)
-        return head
-
-
-def _mv_prev_manifest(mv_dir: str, batch_id: int) -> dict:
-    """The manifest a (re-)run of ``batch_id`` must merge against: the
-    highest committed manifest BELOW batch_id, falling back to the seed.
-    Keyed by batch_id — never by mutable driver state — so a retry of the
-    same batch_id always reads the same prev even if the failed attempt
-    already wrote its v{batch_id} files AND advanced the head pointer
-    (ADVICE r11 #1). Normal path: the pointer is < batch_id and resolves
-    in one read. Retry path (pointer >= batch_id): probe downward from
-    batch_id-1 — bounded by MV_MANIFEST_RETAIN because GC keeps every
-    manifest a legal retry could need."""
-    head = _mv_read_pointer(mv_dir)
-    if head < batch_id:
-        return _mv_read_manifest(mv_dir, f"v{head}" if head >= 0 else "seed")
-    for bid in range(batch_id - 1, max(-1, batch_id - 2 - MV_MANIFEST_RETAIN), -1):
-        if os.path.exists(_mv_manifest_path(mv_dir, f"v{bid}")):
-            return _mv_read_manifest(mv_dir, f"v{bid}")
-    if os.path.exists(_mv_manifest_path(mv_dir, "seed")):
-        return _mv_read_manifest(mv_dir, "seed")
-    raise RuntimeError(
-        f"no committed manifest below batch {batch_id} in {mv_dir} — "
-        f"retry horizon exceeded MV_MANIFEST_RETAIN={MV_MANIFEST_RETAIN}"
-    )
-
-
-def _mv_gc(mv_dir: str, batch_id: int) -> None:
-    """Retention GC after committing batch_id (VERDICT r12 #1): delete
-    manifests older than the retry horizon (batch_id - MV_MANIFEST_RETAIN,
-    seed included once real commits cover the horizon) and every version
-    dir no RETAINED manifest references. Keeps storage O(live buckets +
-    retry horizon) instead of O(#batches x churn) — the VACUUM half of
-    the Delta-log analogue. Driver-local FS, like the manifest commits;
-    single-writer (foreachBatch is serial per query), so no reader can
-    hold a GC'd version."""
-    # ids <= floor are dead; clamp so even a (guarded-against) RETAIN < 2
-    # can never GC manifest_v{b-1}, which a retry of batch b merges against
-    floor = batch_id - max(MV_MANIFEST_RETAIN, 2)
-    live_dirs: set[str] = set()
-    retained_any = False
-    for bid in range(max(0, floor + 1), batch_id + 1):
-        if os.path.exists(_mv_manifest_path(mv_dir, f"v{bid}")):
-            live_dirs.update(_mv_read_manifest(mv_dir, f"v{bid}").values())
-            retained_any = True
-    seed_retained = floor < -1 or not retained_any
-    if seed_retained and os.path.exists(_mv_manifest_path(mv_dir, "seed")):
-        live_dirs.update(_mv_read_manifest(mv_dir, "seed").values())
-    for name in os.listdir(mv_dir):
-        path = os.path.join(mv_dir, name)
-        if name.startswith("manifest_v") and name.endswith(".json"):
-            if int(name[len("manifest_v"):-len(".json")]) <= floor:
-                os.remove(path)
-        elif name == "manifest_seed.json":
-            if not seed_retained:
-                os.remove(path)
-        elif os.path.isdir(path) and name not in live_dirs:
-            shutil.rmtree(path, ignore_errors=True)
-
-
-def _mv_read_buckets(spark: SparkSession, mv_dir: str, manifest: dict,
-                     buckets: list) -> DataFrame:
-    """Partition-pruned read of just ``buckets`` from wherever the
-    manifest says each bucket's latest data lives."""
-    assert buckets, "_mv_read_buckets requires a non-empty bucket list"  # ADVICE r12 #2
-    by_ver: dict[str, list] = {}
-    for b in buckets:
-        by_ver.setdefault(manifest[b], []).append(b)
-    parts = [
-        spark.read.parquet(os.path.join(mv_dir, ver))
-        .where(F.col("bucket").isin(bks))
-        for ver, bks in sorted(by_ver.items())
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _mv_merge_batch(spark: SparkSession, mv_dir: str, bdf: DataFrame,
                     batch_id: int) -> None:
     """One churn-proportional MERGE of a changelog micro-batch into the
-    bucketed MV: read ONLY the buckets the batch touches (manifest lookup
-    + partition pruning), merge, write ONLY those buckets into
-    v{batch_id}, commit a new manifest. Untouched buckets' files are
-    never rewritten — they stay byte-identical in their old version dirs
+    bucket-partitioned Delta MV: read ONLY the buckets the batch touches
+    (partition pruning), merge, and commit them with a dynamic partition
+    overwrite. Untouched buckets keep their add entries and files
     (pinned by tests/test_streaming_state.py::test_mv_merge_churn_
-    proportional). Deterministic retry: prev comes from
-    _mv_prev_manifest(batch_id), so re-running a batch after a crash
-    between the parquet write and the checkpoint commit recomputes the
-    identical v{batch_id} instead of double-applying the delta."""
+    proportional). The commit carries ``txn=("mv", batch_id)``: a retry
+    of a batch that committed is skipped by the writer, and a retry of
+    one that did not reads the same previous version and recomputes the
+    same buckets, so the delta is applied exactly once."""
     # Materialize the churn-sized aggregate ONCE (also cuts the streaming
     # lineage, so callers need not checkpoint the raw batch): `delta` is
     # referenced twice below (affected-bucket collect + merge union), and
@@ -1238,56 +1068,44 @@ def _mv_merge_batch(spark: SparkSession, mv_dir: str, bdf: DataFrame,
         .withColumn("bucket", _mv_bucket(F.col("o_custkey")))
         .localCheckpoint(eager=True)
     )
-    prev_manifest = _mv_prev_manifest(mv_dir, batch_id)
     # Affected-bucket set: bounded by N_MV_BUCKETS, a metadata-sized
     # collect (at production scale: thousands of ints, still tiny).
     affected = sorted(
         r["bucket"] for r in delta.select("bucket").distinct().collect()
     )
-    manifest = dict(prev_manifest)
-    if affected:
-        for b in affected:
-            manifest[b] = f"v{batch_id}"
-        # Compaction rung: if the post-merge manifest would span too many
-        # version dirs, fold EVERY bucket into v{batch_id} this batch.
-        # The predicate depends only on (prev manifest, affected) — both
-        # deterministic in batch_id — so a crash retry recompacts
-        # identically instead of diverging.
-        compact = len(set(manifest.values())) > MV_COMPACT_DIR_THRESHOLD
-        read_bks = sorted(prev_manifest) if compact else affected
-        prev = _mv_read_buckets(spark, mv_dir, prev_manifest, read_bks)
-        # ONE exchange (r19, guide §2.4): repartition by bucket BEFORE the
-        # groupBy — hash-partitioning on `bucket` (a subset of the grouping
-        # keys) already satisfies the aggregation's clustering requirement,
-        # so the agg runs in the repartition's partitions instead of adding
-        # a second exchange, and every bucket still lands in exactly one
-        # task (one parquet file per bucket dir, not shuffle-partitions x
-        # buckets shards). Groups and sums are unchanged.
-        merged = (
-            prev.select("o_custkey", "n_orders", "total", "bucket")
-            .unionByName(delta)
-            .repartition(F.col("bucket"))
-            .groupBy("o_custkey", "bucket")
-            .agg(
-                F.sum("n_orders").cast("long").alias("n_orders"),
-                F.sum("total").cast("decimal(18,2)").alias("total"),
-            )
+    if not affected:
+        return
+    prev = delta_scan(
+        spark, mv_dir, " OR ".join(f"bucket = {b}" for b in affected)
+    )
+    # ONE exchange (r19): repartition by bucket BEFORE the
+    # groupBy — hash-partitioning on `bucket` (a subset of the grouping
+    # keys) already satisfies the aggregation's clustering requirement,
+    # so the agg runs in the repartition's partitions instead of adding
+    # a second exchange, and every bucket still lands in exactly one
+    # task (one parquet file per bucket, not shuffle-partitions x
+    # buckets shards). Groups and sums are unchanged.
+    merged = (
+        prev.select("o_custkey", "n_orders", "total", "bucket")
+        .unionByName(delta)
+        .repartition(F.col("bucket"))
+        .groupBy("o_custkey", "bucket")
+        .agg(
+            F.sum("n_orders").cast("long").alias("n_orders"),
+            F.sum("total").cast("decimal(18,2)").alias("total"),
         )
-        merged.write.partitionBy(
-            "bucket"
-        ).mode("overwrite").parquet(os.path.join(mv_dir, f"v{batch_id}"))
-        if compact:
-            manifest = {b: f"v{batch_id}" for b in prev_manifest}
-    _mv_write_manifest(mv_dir, f"v{batch_id}", manifest)
-    _mv_write_pointer(mv_dir, batch_id)
-    _mv_gc(mv_dir, batch_id)
+    )
+    delta_write(
+        spark, merged, mv_dir, mode="overwrite_partitions",
+        txn=("mv", batch_id),
+    )
 
 
 def _mv_seed(spark: SparkSession, sf_dir: str, mv_dir: str,
              orders: DataFrame | None = None) -> None:
-    """Write the MV's seed version (every bucket present, so the manifest
-    covers the key space) from ``orders`` — any frame with ``o_custkey``
-    and ``o_totalprice``; by default the orders table of ``sf_dir``."""
+    """Create the MV as version 0 of a Delta table partitioned by
+    ``bucket`` from ``orders`` — any frame with ``o_custkey`` and
+    ``o_totalprice``; by default the orders table of ``sf_dir``."""
     if orders is None:
         orders = read_table(spark, sf_dir, "orders")
     # One exchange: bucket is a pure function of o_custkey, so hash-
@@ -1306,25 +1124,15 @@ def _mv_seed(spark: SparkSession, sf_dir: str, mv_dir: str,
             .alias("total"),
         )
     )
-    seed.write.partitionBy("bucket").mode(
-        "overwrite"
-    ).parquet(os.path.join(mv_dir, "seed"))
-    _mv_write_manifest(mv_dir, "seed",
-                       {b: "seed" for b in range(N_MV_BUCKETS)})
-
-
-def _mv_latest_manifest(mv_dir: str) -> dict:
-    """The manifest of the highest committed batch (seed if none ran)."""
-    return _mv_prev_manifest(mv_dir, 1 << 62)
+    delta_write(spark, seed, mv_dir, partition_by=["bucket"])
 
 
 def _mv_result(spark: SparkSession, mv_dir: str) -> DataFrame:
-    """The MV at its latest manifest as the streaming MV queries' result:
+    """The MV's latest snapshot as the streaming MV queries' result:
     live customers with their order count and total, lineage cut because
     the caller deletes ``mv_dir``."""
-    manifest = _mv_latest_manifest(mv_dir)
     return (
-        _mv_read_buckets(spark, mv_dir, manifest, sorted(manifest))
+        delta_snapshot(spark, mv_dir)
         .where(F.col("n_orders") > 0)
         .select(
             "o_custkey", "n_orders",
@@ -1350,18 +1158,13 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECOMPUTE over the mutated snapshot, the identical SQL
     mv_incremental_refresh is gated on — is an exact check: streaming
     delta-merge ≡ batch delta-merge ≡ recompute. Per-batch cost is
-    O(batch churn + rows in affected buckets): the MV is partitioned by a
-    customer hash-bucket (N_MV_BUCKETS), each batch reads only the
-    buckets its delta touches (manifest lookup + partition pruning) and
-    writes only those buckets into v{batch_id}; a batch_id-keyed manifest
-    maps bucket -> latest version dir. Untouched buckets are never read
-    or rewritten — the parquet analogue of MERGE INTO on a Delta/Iceberg
-    MV, which is the production swap (in-repo realization:
-    sources/deltalog.py::delta_merge, file-granular copy-on-write, plus
-    delta_stream_sink's txn watermark for the retry story). Retry is
-    idempotent because prev
-    resolves from the manifest BELOW batch_id, never from mutable driver
-    state (_mv_merge_batch).
+    O(batch churn + rows in affected buckets): the MV is a Delta table
+    (sources/deltalog.py) partitioned by a customer hash-bucket
+    (N_MV_BUCKETS); each batch reads only the buckets its delta touches
+    (partition pruning) and commits only those buckets with a dynamic
+    partition overwrite. Untouched buckets are never read or rewritten.
+    The commit carries the batch's txn, so a retried batch is applied
+    exactly once (_mv_merge_batch).
 
     Exactly-once over the at-least-once source is two complementary
     rungs, both load-bearing: a redelivered row that is still WITHIN the
@@ -1403,8 +1206,6 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cdf_stream(spark: SparkSession, table: str, **options) -> DataFrame:
     """readStream over the delta table's change feed (the
     ``delta_cdf_stream`` source of sources/deltalog.py)."""
-    from opencode_hive_archon_spark.sources.deltalog import DeltaCdfStreamSource
-
     spark.dataSource.register(DeltaCdfStreamSource)
     return (
         spark.readStream.format("delta_cdf_stream")
@@ -1459,8 +1260,9 @@ def stream_delta_cdf_mv(
     dataChange add/remove file in (startingVersion, head] as tagged
     insert/delete rows. The log IS the changelog: APPEND, DELETE and
     MERGE commits (v1..v3 here) flow through the same foreachBatch
-    delta-merge machinery (_mv_merge_batch: manifest-pruned bucket reads,
-    churn-proportional writes, batch_id-keyed retry determinism).
+    delta-merge into the bucket-partitioned Delta MV (_mv_merge_batch:
+    partition-pruned bucket reads, a dynamic partition overwrite of the
+    affected buckets, the batch's txn as the retry guard).
 
     File-level CDF classes are sufficient — and exactly right — for an
     associative consumer: signed deltas (+1/+price for insert, -1/-price
@@ -1475,12 +1277,6 @@ def stream_delta_cdf_mv(
     buckets — O(churn + affected buckets), never O(table) or O(MV);
     OPTIMIZE commits (dataChange: false) are skipped at the source."""
     from opencode_hive_archon_spark.operators.similarity import corpus_rows
-    from opencode_hive_archon_spark.sources.deltalog import (
-        delta_delete,
-        delta_merge,
-        delta_snapshot,
-        delta_write,
-    )
 
     workdir = tempfile.mkdtemp(prefix="cdfmv_stream_")
     table = os.path.join(workdir, "tbl")
@@ -1599,11 +1395,6 @@ def stream_delta_cdf_partitioned(
     Scale shape: per batch the stream reads only the files the tailed
     commits touched; partition injection is a constant column per Arrow
     batch, no dir-name parsing, no Python row loop."""
-    from opencode_hive_archon_spark.sources.deltalog import (
-        delta_delete,
-        delta_write,
-    )
-
     workdir = tempfile.mkdtemp(prefix="cdfpart_stream_")
     table = os.path.join(workdir, "tbl")
     try:
@@ -1674,11 +1465,6 @@ def stream_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per batch the stream reads the touched files once and
     applies a positional mask — no row-index join, no Python row loop;
     a wide DV delete streams as one masked re-read of its hit files."""
-    from opencode_hive_archon_spark.sources.deltalog import (
-        delta_delete,
-        delta_write,
-    )
-
     workdir = tempfile.mkdtemp(prefix="cdfdv_stream_")
     table = os.path.join(workdir, "tbl")
     try:

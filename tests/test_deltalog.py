@@ -2414,3 +2414,119 @@ def test_log_stream_resumes_from_legacy_offset(spark, tmp_path):
         for row in batch.to_pylist()
     )
     assert got == list(range(20, 40))
+
+
+# --- dynamic partition overwrite (mode="overwrite_partitions") -------------
+
+def _pdf(spark, rows):
+    return spark.createDataFrame(rows, "k long, p long")
+
+
+def _live(spark, tbl):
+    """{path: (add entry, file bytes)} of the live files."""
+    out = {}
+    for f in dl._snapshot_state(spark, tbl)["files"]:
+        with open(dl._abs_path(tbl, f["path"]), "rb") as fh:
+            out[f["path"]] = (f, fh.read())
+    return out
+
+
+def _rows(spark, tbl, version=None):
+    return sorted(
+        (r["k"], r["p"])
+        for r in dl.delta_snapshot(spark, tbl, version=version).collect()
+    )
+
+
+@pytest.fixture
+def ptbl(spark, tmp_path):
+    """A table partitioned by p with partitions 0, 1, 2 at v0."""
+    tbl = str(tmp_path / "t")
+    dl.delta_write(
+        spark, _pdf(spark, [(k, k % 3) for k in range(9)]), tbl,
+        partition_by=["p"],
+    )
+    return tbl
+
+
+def test_overwrite_partitions_replaces_only_present_partitions(spark, ptbl):
+    before = _live(spark, ptbl)
+    v = dl.delta_write(
+        spark, _pdf(spark, [(100, 1), (101, 1), (102, 2)]), ptbl,
+        mode="overwrite_partitions",
+    )
+    assert v == 1
+    assert _rows(spark, ptbl) == [(0, 0), (3, 0), (6, 0),
+                                  (100, 1), (101, 1), (102, 2)]
+    actions = dl._load_commit_actions(ptbl, 1)
+    for kind in ("add", "remove"):
+        assert {
+            a[kind]["partitionValues"]["p"] for a in actions if kind in a
+        } == {"1", "2"}
+    # Partition 0's add entries and file bytes are exactly as before.
+    after = _live(spark, ptbl)
+    kept = {
+        p: e for p, e in before.items()
+        if e[0]["partitionValues"]["p"] == "0"
+    }
+    assert kept and {p: e for p, e in after.items() if p in kept} == kept
+    assert dl._load_commit_actions(ptbl, 1)[0]["commitInfo"][
+        "operationParameters"
+    ] == {"mode": "OVERWRITE_PARTITIONS"}
+    # Time travel to the prior version returns the old rows.
+    assert _rows(spark, ptbl, version=0) == [(k, k % 3) for k in range(9)]
+
+
+def test_overwrite_partitions_rejects_mismatch_before_staging(
+    spark, ptbl, tmp_path
+):
+    """An unpartitioned table, a new schema or a different partition_by
+    raises and commits (and stages) nothing."""
+    flat = str(tmp_path / "flat")
+    dl.delta_write(spark, _pdf(spark, [(1, 1)]), flat)
+    bad = [
+        (flat, _pdf(spark, [(2, 1)]), None),
+        (flat, _pdf(spark, [(2, 1)]), ["p"]),
+        (ptbl, _pdf(spark, [(2, 1)]).withColumn("x", F.lit(1)), None),
+        (ptbl, _pdf(spark, [(2, 1)]).withColumnRenamed("k", "k2"), None),
+        (ptbl, _pdf(spark, [(2, 1)]), ["k"]),
+    ]
+    for tbl, df, part in bad:
+        listing = sorted(os.listdir(tbl))
+        with pytest.raises(dl.DeltaProtocolError, match="overwrite_partitions"):
+            dl.delta_write(
+                spark, df, tbl, mode="overwrite_partitions", partition_by=part
+            )
+        assert dl.latest_version(tbl) == 0
+        assert sorted(os.listdir(tbl)) == listing
+    # A table that does not exist yet is not created.
+    new = str(tmp_path / "new")
+    with pytest.raises(dl.DeltaProtocolError, match="existing table"):
+        dl.delta_write(
+            spark, _pdf(spark, [(1, 1)]), new, mode="overwrite_partitions",
+            partition_by=["p"],
+        )
+    assert not os.path.exists(new)
+
+
+def test_overwrite_partitions_txn_retry_is_skipped(spark, ptbl):
+    write = lambda rows: dl.delta_write(  # noqa: E731
+        spark, _pdf(spark, rows), ptbl, mode="overwrite_partitions",
+        txn=("app", 7),
+    )
+    assert write([(50, 0)]) == 1
+    rows = _rows(spark, ptbl)
+    # A retry of the committed txn returns the prior version, even with
+    # other content, and adds no commit.
+    assert write([(60, 1)]) == 1
+    assert dl.latest_version(ptbl) == 1
+    assert _rows(spark, ptbl) == rows
+
+
+def test_overwrite_partitions_empty_frame_keeps_live_set(spark, ptbl):
+    before = _live(spark, ptbl)
+    dl.delta_write(
+        spark, _pdf(spark, []), ptbl, mode="overwrite_partitions",
+    )
+    assert _live(spark, ptbl) == before
+    assert _rows(spark, ptbl) == [(k, k % 3) for k in range(9)]

@@ -297,85 +297,128 @@ def _mv_synth_batch(spark, custkeys):
     return df.withColumn("dp", F.col("dp").cast("decimal(18,2)"))
 
 
-def _bucket_files(mv_dir):
-    """{relative parquet path: (size, sha) } across every version dir."""
+def _mv_rows(spark, mv_dir):
+    """{o_custkey: (n_orders, total)} of the MV's latest snapshot."""
+    from opencode_hive_archon_spark.sources.deltalog import delta_snapshot
+
+    return {
+        r["o_custkey"]: (r["n_orders"], float(r["total"]))
+        for r in delta_snapshot(spark, mv_dir).collect()
+    }
+
+
+def _mv_adds(spark, mv_dir):
+    """{path: (add entry, sha256 of the file)} of the live files."""
     import hashlib as H
 
+    from opencode_hive_archon_spark.sources import deltalog as dl
+
     out = {}
-    for root, _dirs, files in os.walk(mv_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, mv_dir)] = H.sha256(
-                        fh.read()
-                    ).hexdigest()
+    for f in dl._snapshot_state(spark, mv_dir)["files"]:
+        with open(dl._abs_path(mv_dir, f["path"]), "rb") as fh:
+            out[f["path"]] = (f, H.sha256(fh.read()).hexdigest())
     return out
 
 
 def test_mv_merge_churn_proportional(spark, sf_dir):
-    """VERDICT r11 #3: a batch touching a strict subset of buckets must
-    (a) write ONLY those buckets into its version dir, and (b) leave every
-    previously-written parquet file byte-identical — the merge reads and
-    rewrites affected buckets only, O(churn), not O(|MV|)."""
+    """A batch touching a strict subset of buckets commits
+    a version that removes and adds ONLY those buckets' files, and every
+    other live add entry (and its file's bytes) is unchanged — the merge
+    reads and rewrites affected buckets only, O(churn), not O(|MV|)."""
+    from opencode_hive_archon_spark.sources import deltalog as dl
+
     workdir = tempfile.mkdtemp(prefix="mv_churn_")
     try:
         mv_dir = os.path.join(workdir, "mv")
         J._mv_seed(spark, sf_dir, mv_dir)
-        before = _bucket_files(mv_dir)
+        before = _mv_adds(spark, mv_dir)
 
         batch = _mv_synth_batch(spark, [1, 2])
         J._mv_merge_batch(spark, mv_dir, batch, batch_id=0)
 
         want_buckets = {
-            r["b"] for r in batch.select(
+            str(r["b"]) for r in batch.select(
                 J._mv_bucket(F.col("o_custkey")).alias("b")
             ).distinct().collect()
         }
         assert len(want_buckets) < J.N_MV_BUCKETS, "fixture must be a subset"
-        v0 = os.path.join(mv_dir, "v0")
-        got_buckets = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(v0) if d.startswith("bucket=")
+        assert dl.latest_version(mv_dir) == 1
+        actions = dl._load_commit_actions(mv_dir, 1)
+        for kind in ("add", "remove"):
+            got = {
+                a[kind]["partitionValues"]["bucket"]
+                for a in actions if kind in a
+            }
+            assert got == want_buckets, (
+                f"commit {kind}s touch buckets {got}, delta touched "
+                f"{want_buckets}"
+            )
+        after = _mv_adds(spark, mv_dir)
+        untouched = {
+            p: v for p, v in before.items()
+            if v[0]["partitionValues"]["bucket"] not in want_buckets
         }
-        assert got_buckets == want_buckets, (
-            f"v0 wrote buckets {got_buckets}, delta touched {want_buckets}"
+        assert len(untouched) == len(before) - len(want_buckets)
+        assert {p: v for p, v in after.items() if p in untouched} == untouched, (
+            "an untouched bucket's add entry or file changed"
         )
-        after = _bucket_files(mv_dir)
-        assert {k: v for k, v in after.items() if k in before} == before, (
-            "a pre-existing bucket file was rewritten by the merge"
-        )
-        # manifest points untouched buckets at seed, touched at v0
-        manifest = J._mv_latest_manifest(mv_dir)
-        assert {b for b, v in manifest.items() if v == "v0"} == want_buckets
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
 def test_mv_merge_retry_idempotent(spark, sf_dir):
-    """ADVICE r11 #1: re-running the SAME batch_id (crash between parquet
-    write and checkpoint commit) must not double-apply the delta — prev
-    resolves from the batch_id-keyed manifest, not mutable driver state."""
+    """Committed half of the retry contract: re-running a batch_id
+    whose commit landed must not double-apply the delta — the writer's
+    txn watermark skips it, adding no version and changing no row."""
+    from opencode_hive_archon_spark.sources import deltalog as dl
+
     workdir = tempfile.mkdtemp(prefix="mv_retry_")
     try:
         mv_dir = os.path.join(workdir, "mv")
         J._mv_seed(spark, sf_dir, mv_dir)
         batch = _mv_synth_batch(spark, [1, 2, 3])
         J._mv_merge_batch(spark, mv_dir, batch, batch_id=0)
-        once = {
-            tuple(r) for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).drop("bucket").collect()
-        }
+        version, once = dl.latest_version(mv_dir), _mv_rows(spark, mv_dir)
         J._mv_merge_batch(spark, mv_dir, batch, batch_id=0)  # the retry
-        twice = {
-            tuple(r) for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).drop("bucket").collect()
-        }
-        assert once == twice, "retry of the same batch_id changed the MV"
+        assert dl.latest_version(mv_dir) == version, "retry added a version"
+        assert _mv_rows(spark, mv_dir) == once, (
+            "retry of the same batch_id changed the MV"
+        )
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_mv_merge_retry_after_failed_commit(spark, sf_dir, monkeypatch):
+    """Uncommitted half of the retry contract: a batch whose commit
+    failed (its files staged, no version published) is re-run by the
+    stream; the retry must read the same previous version and give the
+    same MV as one clean run of the batch."""
+    from opencode_hive_archon_spark.sources import deltalog as dl
+
+    workdir = tempfile.mkdtemp(prefix="mv_crash_")
+    try:
+        clean, crashed = (os.path.join(workdir, n) for n in ("clean", "crash"))
+        batch = _mv_synth_batch(spark, [1, 2, 3])
+        J._mv_seed(spark, sf_dir, clean)
+        J._mv_merge_batch(spark, clean, batch, batch_id=0)
+
+        J._mv_seed(spark, sf_dir, crashed)
+        real_commit, calls = dl._commit, []
+
+        def crash_once(table, version, actions):
+            calls.append(version)
+            if len(calls) == 1:
+                raise OSError("crash before the commit landed")
+            return real_commit(table, version, actions)
+
+        monkeypatch.setattr(dl, "_commit", crash_once)
+        with pytest.raises(OSError, match="crash before the commit"):
+            J._mv_merge_batch(spark, crashed, batch, batch_id=0)
+        assert dl.latest_version(crashed) == 0, "the failed commit landed"
+        J._mv_merge_batch(spark, crashed, batch, batch_id=0)  # the retry
+        assert calls == [1, 1]
+        assert dl.latest_version(crashed) == 1
+        assert _mv_rows(spark, crashed) == _mv_rows(spark, clean)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -398,171 +441,89 @@ def test_mv_stream_equals_batch_refresh(spark, sf_dir):
 
 
 def test_mv_metadata_bounded_and_compacted(spark, sf_dir):
-    """VERDICT r12 #1: manifests, version dirs, and parquet files must NOT
-    grow O(#batches). Drive 12 single-customer batches through
-    _mv_merge_batch and assert (a) the head pointer replaces the listdir
-    scan, (b) retention GC keeps at most MV_MANIFEST_RETAIN+1 manifests,
-    (c) the compaction rung fired at least once and live version dirs
-    stay <= MV_COMPACT_DIR_THRESHOLD, (d) values equal seed + all deltas
-    (GC/compaction never lose data)."""
-    workdir = tempfile.mkdtemp(prefix="mv_gc_")
+    """Live files and the log replay must NOT grow
+    O(#batches). Drive 12 single-customer batches through _mv_merge_batch
+    and assert (a) live adds stay <= N_MV_BUCKETS (one file per bucket),
+    (b) the log was checkpointed and a read replays fewer than
+    CHECKPOINT_INTERVAL commit files, (c) values equal seed + all deltas,
+    (d) the table reads the same without ``_last_checkpoint`` (the head
+    hint is rebuilt from the log listing, never trusted blindly)."""
+    from opencode_hive_archon_spark.sources import deltalog as dl
+
+    workdir = tempfile.mkdtemp(prefix="mv_log_")
     try:
         mv_dir = os.path.join(workdir, "mv")
         J._mv_seed(spark, sf_dir, mv_dir)
-        seed_vals = {
-            r["o_custkey"]: (r["n_orders"], float(r["total"]))
-            for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).collect()
-        }
+        seed_vals = _mv_rows(spark, mv_dir)
         custkeys = list(range(1, 13))
-        compact_seen = False
         for bid, ck in enumerate(custkeys):
             J._mv_merge_batch(
                 spark, mv_dir, _mv_synth_batch(spark, [ck]), batch_id=bid
             )
-            m = J._mv_latest_manifest(mv_dir)
-            vers = set(m.values())
-            assert len(vers) <= J.MV_COMPACT_DIR_THRESHOLD + 1, (
-                f"batch {bid}: live manifest spans {len(vers)} dirs"
+            n_live = len(dl._snapshot_state(spark, mv_dir)["files"])
+            assert n_live <= J.N_MV_BUCKETS, (
+                f"batch {bid}: {n_live} live files"
             )
-            if vers == {f"v{bid}"}:
-                compact_seen = True
-        assert compact_seen, "compaction rung never fired in 12 batches"
-        assert J._mv_read_pointer(mv_dir) == len(custkeys) - 1
+        st = dl._snapshot_state(spark, mv_dir)
+        assert st["version"] == len(custkeys)
+        assert st["checkpoint_version"] is not None, "no checkpoint written"
+        assert st["json_replayed"] < dl.CHECKPOINT_INTERVAL
+        assert st["txns"] == {"mv": len(custkeys) - 1}
 
-        manifests = [
-            n for n in os.listdir(mv_dir)
-            if n.startswith("manifest_") and n.endswith(".json")
-        ]
-        assert len(manifests) <= J.MV_MANIFEST_RETAIN + 1, (
-            f"retention GC left {sorted(manifests)}"
-        )
-        vdirs = [
-            n for n in os.listdir(mv_dir)
-            if os.path.isdir(os.path.join(mv_dir, n))
-        ]
-        assert len(vdirs) <= J.MV_COMPACT_DIR_THRESHOLD + J.MV_MANIFEST_RETAIN, (
-            f"GC left version dirs {sorted(vdirs)}"
-        )
-        n_parquet = sum(
-            1 for _root, _d, files in os.walk(mv_dir)
-            for f in files if f.endswith(".parquet")
-        )
-        # file-per-bucket writes: bounded by buckets per live dir, far
-        # below the 12-batch x shuffle-partition blowup this test pins out
-        assert n_parquet <= J.N_MV_BUCKETS * (len(vdirs) + 1), (
-            f"{n_parquet} parquet files across {len(vdirs)} dirs"
-        )
-
-        got = {
-            r["o_custkey"]: (r["n_orders"], float(r["total"]))
-            for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).collect()
-        }
+        got = _mv_rows(spark, mv_dir)
         want = dict(seed_vals)
         for ck in custkeys:
             n, t = want.get(ck, (0, 0.0))
             want[ck] = (n + 1, t + 10.0)
-        assert got == want, "GC/compaction changed MV contents"
+        assert got == want, "the merges lost or re-applied deltas"
+
+        os.remove(os.path.join(mv_dir, dl.LOG_DIR, "_last_checkpoint"))
+        assert _mv_rows(spark, mv_dir) == want
+        assert dl._snapshot_state(spark, mv_dir)["version"] == len(custkeys)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_mv_read_buckets_rejects_empty_list(spark, sf_dir):
-    """ADVICE r12 #2: the helper's contract is a non-empty bucket list —
-    an empty one must fail with the named assert, not a bare IndexError
-    deep in parts[0]."""
+def test_mv_empty_batch_commits_no_version(spark, sf_dir):
+    """A micro-batch with no rows touches no bucket: the merge returns
+    before reading the MV and commits nothing."""
+    from opencode_hive_archon_spark.sources import deltalog as dl
+
     workdir = tempfile.mkdtemp(prefix="mv_empty_")
     try:
         mv_dir = os.path.join(workdir, "mv")
         J._mv_seed(spark, sf_dir, mv_dir)
-        with pytest.raises(AssertionError, match="non-empty bucket list"):
-            J._mv_read_buckets(spark, mv_dir, J._mv_latest_manifest(mv_dir), [])
+        J._mv_merge_batch(spark, mv_dir, _mv_synth_batch(spark, []), batch_id=0)
+        assert dl.latest_version(mv_dir) == 0
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_mv_pointer_rebuilds_from_manifest_scan(spark, sf_dir):
-    """ADVICE r13 #1: losing the tiny _latest file while manifests
-    survive must NOT silently fall back to the seed (which would re-apply
-    every delta since batch 0). The pointer read rebuilds from a one-time
-    manifest scan, self-heals the file, and the next merge applies
-    against the true head."""
-    workdir = tempfile.mkdtemp(prefix="mv_ptr_")
-    try:
-        mv_dir = os.path.join(workdir, "mv")
-        J._mv_seed(spark, sf_dir, mv_dir)
-        for bid in range(3):
-            J._mv_merge_batch(
-                spark, mv_dir, _mv_synth_batch(spark, [bid + 1]), batch_id=bid
-            )
-        before = {
-            r["o_custkey"]: (r["n_orders"], float(r["total"]))
-            for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).collect()
-        }
-        os.remove(J._mv_pointer_path(mv_dir))  # the out-of-band loss
-        assert J._mv_read_pointer(mv_dir) == 2  # rebuilt, not -1
-        assert os.path.exists(J._mv_pointer_path(mv_dir))  # self-healed
-        # prev for batch 3 is v2 (the true head), so one more delta lands
-        # exactly once — a seed fallback would also have dropped batches 0-2
-        J._mv_merge_batch(spark, mv_dir, _mv_synth_batch(spark, [4]), batch_id=3)
-        got = {
-            r["o_custkey"]: (r["n_orders"], float(r["total"]))
-            for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).collect()
-        }
-        want = dict(before)
-        n, t = want.get(4, (0, 0.0))
-        want[4] = (n + 1, t + 10.0)
-        assert got == want, "pointer rebuild lost or re-applied deltas"
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+# Jobs per warm call at sf0.001, counted on 4 cores. They repeated
+# exactly over 3 calls; a change that lowers one lowers it here too.
+MV_JOB_BUDGET = {
+    "stream_mv_maintenance": 23,
+    "stream_delta_cdf_mv": 30,
+    "stream_delta_cdf_mv_ratelimited": 72,
+}
 
 
-def test_mv_gc_floor_clamp_protects_retry_manifest(spark, sf_dir, monkeypatch):
-    """ADVICE r13 #2: even if MV_MANIFEST_RETAIN were lowered to 1
-    (the import guard forbids it, but the GC must be safe in depth too),
-    the floor clamp keeps manifest_v{b-1} alive so a crash-retry of
-    batch b still resolves its prev instead of RuntimeError/seed."""
-    workdir = tempfile.mkdtemp(prefix="mv_clamp_")
-    try:
-        mv_dir = os.path.join(workdir, "mv")
-        J._mv_seed(spark, sf_dir, mv_dir)
-        monkeypatch.setattr(J, "MV_MANIFEST_RETAIN", 1)
-        for bid in range(4):
-            J._mv_merge_batch(
-                spark, mv_dir, _mv_synth_batch(spark, [bid + 1]), batch_id=bid
-            )
-        # GC after batch 3 with RETAIN=1 would unclamped delete v2 — the
-        # manifest a retry of batch 3 merges against
-        assert os.path.exists(J._mv_manifest_path(mv_dir, "v2")), (
-            "floor clamp failed: retry manifest v{b-1} was GC'd"
-        )
-        once = {
-            tuple(r) for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).drop("bucket").collect()
-        }
-        J._mv_merge_batch(spark, mv_dir, _mv_synth_batch(spark, [4]), batch_id=3)
-        twice = {
-            tuple(r) for r in J._mv_read_buckets(
-                spark, mv_dir, J._mv_latest_manifest(mv_dir),
-                list(range(J.N_MV_BUCKETS)),
-            ).drop("bucket").collect()
-        }
-        assert once == twice, "retry under clamped GC changed the MV"
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+def test_mv_streams_job_budget(spark, sf_dir):
+    """No MV stream runs more Spark jobs per warm call than its budget.
+    Jobs are counted by the DAG scheduler's job-id delta over the call:
+    micro-batch jobs run under the query's own job group, so counting the
+    caller's group would miss them."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    got = {}
+    for name in MV_JOB_BUDGET:
+        fn = getattr(J, name)
+        fn(spark, sf_dir)  # warm: schemas and session caches
+        before = dag.numTotalJobs()
+        fn(spark, sf_dir)
+        got[name] = dag.numTotalJobs() - before
+    over = {n: (c, MV_JOB_BUDGET[n]) for n, c in got.items()
+            if c > MV_JOB_BUDGET[n]}
+    assert not over, f"jobs above budget (got, budget): {over}"
 
 
 def test_cdf_streams_leave_no_sink_view(spark, sf_dir):

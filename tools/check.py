@@ -169,15 +169,52 @@ def _oracle_dedup_pipeline(con):
     return pd.DataFrame(rows, columns=["doc_id", "canonical_id", "status"])
 
 
-# Queries whose registry oracle is a recursive CTE DuckDB cannot evaluate
-# past sf0.01: this harness swaps in the fixpoint equivalents above (same
-# pairs SQL, same converged labels). The driver's own sf0.01 gate still
-# exercises the registry's recursive SQL untouched.
+def _oracle_triangle_stats(con):
+    """Set-based oracle for graph_triangle_stats: the edges SQL (shared
+    with the registry oracle) fetched once, then the registry oracle's
+    census in Python — orient each edge from its lower (degree, id) end,
+    count the oriented wedges (v, w) with k(v) < k(w) per source, and
+    the ones closed by an oriented edge v -> w. The registry SQL inlines
+    the pairs CTE more than once; at sf0.1 its cosine join passed 9 GB."""
+    import pandas as pd
+
+    from opencode_hive_archon_spark.operators.graph import ORACLE_GRAPH_EDGES_SQL
+
+    edges = con.execute(ORACLE_GRAPH_EDGES_SQL).fetchall()
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    key = {u: (len(vs), u) for u, vs in adj.items()}
+    out = {u: {v for v in vs if key[u] < key[v]} for u, vs in adj.items()}
+    n_wedges = n_triangles = 0
+    for vs in out.values():
+        n_wedges += len(vs) * (len(vs) - 1) // 2
+        n_triangles += sum(len(vs & out[v]) for v in vs)
+    (n_nodes,) = con.execute("SELECT count(*) FROM embeddings").fetchone()
+    ratio = n_triangles / n_wedges if n_wedges else None
+    return pd.DataFrame(
+        [(n_nodes, len(edges), n_wedges, n_triangles, ratio)],
+        columns=["n_nodes", "n_edges", "n_wedges", "n_triangles",
+                 "closure_ratio"],
+    ).astype({"n_nodes": "int64", "n_edges": "int64", "n_wedges": "int64",
+              "n_triangles": "int64", "closure_ratio": "float64"})
+
+
+# Queries whose registry oracle DuckDB cannot evaluate past sf0.01 (a
+# recursive CTE, or the triangle census's repeated cosine join): this
+# harness swaps in the equivalents above (same edges SQL, same counts).
+# The registry SQL itself is untouched and still gates sf0.01.
 ITER_ORACLES = {
     "dedup_clusters": _oracle_dedup_clusters,
     "recall_graph_khop": _oracle_graph_khop,
     "corpus_dedup_pipeline": _oracle_dedup_pipeline,
+    "graph_triangle_stats": _oracle_triangle_stats,
 }
+
+# DuckDB's own cap: an oracle that outgrows it fails with an
+# out-of-memory error for its query instead of the process being killed.
+DUCKDB_MEMORY_LIMIT = "4GB"
 
 
 def main():
@@ -191,6 +228,7 @@ def main():
 
     spark = get_spark("check")
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
     for t in TABLE_NAMES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
